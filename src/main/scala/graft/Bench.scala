@@ -1,16 +1,10 @@
 package graft
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     // Warm up JIT/codegen/parquet-reader paths so the first timed query
     // isn't charged the one-time JVM startup cost. The WHOLE block is
     // try/catch-guarded: a warm-up failure costs one cold (noisy) first
@@ -80,7 +74,8 @@ object Bench {
       case scala.util.control.NonFatal(e) =>
         // Diagnostic only — the timed loop below still runs; each query
         // has its own failure accounting.
-        System.err.println(s"[bench] warm-up failed (continuing): ${e.getMessage}")
+        LogManager.getLogger("graft.Bench")
+          .warn(s"warm-up failed (continuing): ${e.getMessage}")
     }
     // A query that throws is recorded with time -1 and listed under
     // "failed" so a broken query can never masquerade as a fast one.
@@ -109,8 +104,8 @@ object Bench {
     // The session-scoped heavy-key count cache must drop with the data
     // cache: heavy-key counts computed from pass 1 would otherwise skip
     // the count job in pass 2 and flatter the min-of-two q-track numbers
-    // (r17 verdict finding 4 — JobStats already cleared it; the bench
-    // now matches).
+    // (r17 verdict finding 4; `graft.tools.QueryStats` clears it the
+    // same way).
     graft.util.DistRank.clearKeyCountCache()
     // This VM shows transient host-scheduler contention: the SAME query
     // measured in consecutive cold JVMs swings 10-20x in either

@@ -26,6 +26,22 @@ object SparkEntry {
     Minerals.endMembers(Minerals.Grt, ox, carry = Seq("id"))
   }
 
+  /** The local session every graft entry point runs on — `Bench`,
+    * `Verify` and every `graft.tools` main: `local[$SPARK_GRAFT_CPUS]`
+    * (default 4) with as many shuffle partitions as cores, UTC session
+    * time, UI off, WARN logging. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Relational.queries ++ PetroQueries.queries ++ TextQueries.queries

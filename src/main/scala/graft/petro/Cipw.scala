@@ -486,10 +486,7 @@ object Cipw {
     // several-hundred-op norm over 600k+ rows must not run on one core.
     // (Driver benches showed ~19s single-task walls that vanish with
     // 32-way parallelism; the one narrow-row shuffle is ~0.2s.)
-    // -Dgraft.cipw.fanout=false restores the single-task plan for A/Bs.
-    val fanOut = sys.props.get("graft.cipw.fanout").forall(_.toBoolean)
-    val projected = df.select(carry.map(col) ++ moleExprs: _*)
-    val input = if (fanOut) graft.util.FanOut(projected) else projected
+    val input = graft.util.FanOut(df.select(carry.map(col) ++ moleExprs: _*))
     val inSchema = input.schema
     val outSchema = StructType(
       carry.map(c => inSchema(c)) ++ names.map(n => StructField(n, DoubleType)))

@@ -577,7 +577,7 @@ object Pipeline {
     // corpus four times and the scrub/decontaminate/budget/split legs
     // re-reach it — under a lazy cache those same-wave consumers race
     // to populate and re-run the crawl chain concurrently. Measured
-    // (tools/PipelineBudget E, sf0.1, min-of-two): 18.2-18.8 s lazy ->
+    // (graft.tools.PipelineBudget E, sf0.1, min-of-two): 18.2-18.8 s lazy ->
     // 12.07 s eager, cheaper than spilling the corpus to real parquet
     // (14.3 s) — one count job on a frame every consumer needs anyway;
     // since r14 the populate lives inside barrierFirewall, which also

@@ -154,7 +154,7 @@ object TextQueries {
       val sigs = TextOps.minhashSignature(docs, "doc_id", "text", k = 8)
       // FIREWALLED (r18): the candidate kernel self-joins bux's legs —
       // a plain cache entry missed there and the minhash chain
-      // re-derived per leg (r14 kernel note, measured by JobStats)
+      // re-derived per leg (r14 kernel note; `graft.tools.QueryStats jobs`)
       val bux = TextOps.lshBuckets(sigs, "doc_id", k = 8, rows = 2)
         .barrierFirewall()
       val pairs = TextOps.lshCandidatePairs(bux, "doc_id")
@@ -556,7 +556,7 @@ object TextQueries {
       // anchored by t85/t88/t90 and composed in t94). The r11 shape
       // re-ran the whole crawl chain on the half corpus and paid ~92%
       // of t94's bench price for the one extra assertion; measured
-      // (PipelineBudget): 19.3 s -> ~7 s with the contract intact.
+      // (graft.tools.PipelineBudget): 19.3 s -> ~7 s with the contract intact.
       val docs = t(s, dir, "documents").filter(col("doc_id") % 4 === 0)
       val planted = docs.select(col("doc_id"),
         concat(col("text"),
@@ -1946,8 +1946,8 @@ object TextQueries {
 
     // SemDeDup with the |cell|^2 guard on: cells above 50 members are
     // split by 2 deterministic refinement rounds (smallest-id sub-seed
-    // assignment) before the pairwise drop — the capped path DedupScale
-    // measured against the skewed worst case. Cell ids become paths
+    // assignment) before the pairwise drop — the capped path
+    // `graft.tools.ScaleStep dedup` measures against the skewed worst case. Cell ids become paths
     // ("3/17"), hash-compared as strings.
     "t44_semdedup_capped" -> ((s, dir) => {
       graft.sim.Similarity.semDedup(t(s, dir, "embeddings"), "vec_id",

@@ -754,8 +754,8 @@ object Similarity {
     * assignment pass instead of re-running k-means per branch.
     *
     * `maxCellSize` guards the |cell|^2 worst case (measured 28x wall
-    * at 10x rows when one cell holds ~half the corpus — DedupScale
-    * skew table in BASELINE.md): when > 0, up to `refineRounds`
+    * at 10x rows when one cell holds ~half the corpus — the SemDeDup
+    * cell-skew table in BASELINE.md): when > 0, up to `refineRounds`
     * deterministic refinement passes split every cell above the cap
     * by re-assigning its members to the cell's ceil(n/cap) smallest-id
     * member vectors (rounded-cosine, member-x-seed-hash tie-break so
@@ -765,7 +765,7 @@ object Similarity {
     * with the cap on, the `cell` column is a string. Near-duplicates
     * are mutually close, so they land in the same sub-cell with the
     * same affinity reasoning as the paper's raised-k sweep. The cap is
-    * ON by default (500, the DedupScale-measured safe value: it
+    * ON by default (500, the `ScaleStep dedup`-measured safe value: it
     * flattens the skewed 32x wall blow-up to ~linear) because the
     * uncapped |cell|^2 worst case is a scale-killer an unsuspecting
     * caller should not inherit; pass maxCellSize = 0 to opt out and

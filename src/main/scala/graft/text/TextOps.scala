@@ -1373,7 +1373,7 @@ object TextOps {
     * distributed ONCE per application, executor-to-executor, rather
     * than re-serialized into every task binary of every plan that
     * applies it. Use this form when |vocab| is beyond a few thousand
-    * pieces; UnigramScale measures the shipping gap. */
+    * pieces; `graft.tools.ScaleStep unigram` measures the shipping gap. */
   def unigramBroadcastModel(spark: org.apache.spark.sql.SparkSession,
       vocab: Seq[(String, Long)], maxPieceLen: Int = 8)
       : org.apache.spark.broadcast.Broadcast[UnigramApply.Vocab] =

@@ -165,8 +165,8 @@ case class UnigramEncode(child: Expression, vocab: Seq[(String, Long)],
   * (32k-256k pieces, tens of MB) is distributed once per application
   * — BitTorrent-style, executor-to-executor — rather than re-shipped
   * inside every task binary of every plan that uses it. Identical
-  * output to the plan-embedded form (spec-pinned); UnigramScale
-  * measures the shipping gap at a padded 1M-entry model. */
+  * output to the plan-embedded form (spec-pinned); `graft.tools.ScaleStep
+  * unigram` measures the shipping gap at a padded 1M-entry model. */
 case class UnigramEncodeBroadcast(child: Expression,
     bc: org.apache.spark.broadcast.Broadcast[UnigramApply.Vocab])
     extends UnaryExpression {

@@ -1,15 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Minimal repro: does a derived plan substitute a cached subtree? */
 object CacheMissProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
 
     val base = spark.range(1000).selectExpr("id", "id % 37 as k")
     val pairs = base.as("x").join(base.as("y"), col("x.k") === col("y.k") &&

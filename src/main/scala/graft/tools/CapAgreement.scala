@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 import graft.sim.Similarity
 
@@ -13,16 +12,16 @@ import graft.sim.Similarity
   * (500, 3) is an approximation of the paper rule the same way nProbe
   * < k approximates exact IVF search. This harness puts a number on
   * it: at 1x/3x/10x replicated corpora (balanced and the adversarial
-  * one-hot-cell skew from [[DedupScale]]), it reports
+  * one-hot-cell skew from [[ScaleStep.skewed]]), it reports
   *   - `keep_agree`  |S_cap ∩ S_exact| / |S_exact| — how much of the
   *     exact survivor set the capped run also keeps,
   *   - `drop_jacc`   Jaccard of the two drop sets, and
   *   - the survivor counts themselves (the dedup RATE should match
   *     even where the member choice differs).
   *
-  * Same parameters as the DedupScale rows (4 seeds, 2 k-means
-  * iterations, threshold 0.3), so the numbers line up with the
-  * measured wall/shuffle table in BASELINE.md.
+  * Same corpora and parameters as the `ScaleStep dedup` semdedup rows
+  * (4 seeds, 2 k-means iterations, threshold 0.3), so the numbers line
+  * up with the measured wall/shuffle table in BASELINE.md.
   *
   * Usage: runMain graft.tools.CapAgreement [sfDir] [copies...]
   */
@@ -31,34 +30,10 @@ object CapAgreement {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else Seq(1, 3, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
 
     val emb0 = spark.read.parquet(s"$dir/embeddings.parquet")
       .select("vec_id", "embedding").localCheckpoint()
-
-    // replication rules identical to DedupScale.scaledEmb / skewedEmb
-    def scaledEmb(k: Int): DataFrame =
-      (0 until k).map { c =>
-        if (c == 0) emb0
-        else emb0.select(
-          (col("vec_id") + lit(c.toLong * 1000000L)).as("vec_id"),
-          transform(col("embedding"),
-            (x, i) => when(i === 0, x + lit(c * 0.01f)).otherwise(x))
-            .as("embedding"))
-      }.reduce(_ unionByName _)
-    def skewedEmb(k: Int): DataFrame =
-      scaledEmb(k).select(col("vec_id"),
-        when(col("vec_id") % 2 === 0,
-          transform(col("embedding"), (x, i) =>
-            when(i === 0,
-              (pmod(col("vec_id"), lit(997L)).cast("double") * 1e-6 + 0.9)
-                .cast("float"))
-              .otherwise(lit(0.1f))))
-          .otherwise(col("embedding")).as("embedding"))
 
     def agree(label: String, corpus: DataFrame, seeds: Seq[Long],
         cap: Int, rounds: Int): Unit = {
@@ -83,10 +58,11 @@ object CapAgreement {
     }
 
     copies.foreach { k =>
-      val bal = scaledEmb(k).localCheckpoint()
+      val bal = ScaleStep.replicateEmb(emb0, k).localCheckpoint()
       agree("balanced", bal, Seq(0L, 1L, 2L, 3L), 500, 3)
       agree("balanced", bal, Seq(0L, 1L, 2L, 3L), 50, 2)
-      val skew = skewedEmb(k).localCheckpoint()
+      val skew = ScaleStep.skewed(ScaleStep.replicateEmb(emb0, k))
+        .localCheckpoint()
       agree("skewed", skew, Seq(0L, 1L, 3L, 5L), 500, 3)
       agree("skewed", skew, Seq(0L, 1L, 3L, 5L), 50, 2)
     }

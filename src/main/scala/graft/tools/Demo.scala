@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.petro.{Convert, Minerals, Units}
 
@@ -14,13 +13,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val csv = args.headOption.getOrElse(
       "/root/reference/src/petropandas/data/minerals.csv")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
 
     val raw = spark.read.option("header", "true").option("inferSchema", "true").csv(csv)
     val cleaned = Convert.clean(raw)

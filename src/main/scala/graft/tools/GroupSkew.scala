@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,34 +31,13 @@ object GroupSkew {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq
                 else Seq(200000, 800000, 3200000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
     import spark.implicits._
 
-    object metrics extends SparkListener {
-      @volatile var maxTaskMs = 0L
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskInfo != null && te.taskInfo.duration > maxTaskMs)
-          maxTaskMs = te.taskInfo.duration
-      def reset(): Unit = maxTaskMs = 0L
-    }
-    spark.sparkContext.addSparkListener(metrics)
+    val census = Census(spark)
 
-    def measure(label: String)(f: => Long): Unit = {
-      org.apache.spark.sql.graftbridge.Bridge
-        .drainListenerBus(spark.sparkContext)
-      metrics.reset()
-      val t0 = System.nanoTime()
-      val out = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graftbridge.Bridge
-        .drainListenerBus(spark.sparkContext)
-      println(f"GROUP_SKEW $label%-30s out=$out%13d wall=$sec%8.2f s " +
-        f"max_task=${metrics.maxTaskMs / 1e3}%7.2f s")
-    }
+    def measure(label: String)(f: => Long): Unit =
+      println(f"GROUP_SKEW $label%-30s " + census.measure(label)(f).skewFields)
 
     // one source / half-corpus cluster corpora
     def docs(n: Int): DataFrame = spark.range(n).selectExpr(

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.text.TextOps
@@ -38,29 +37,9 @@ object LshSkew {
     // above this the raw kernel's candidate COUNT is the cliff
     // (C(n/2, 2) rows — 5e9 at n=200k); measuring it adds nothing
     val rawCandMax = 20000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
 
-    object metrics extends SparkListener {
-      @volatile var shuffleWrite = 0L
-      @volatile var shuffleRead = 0L
-      @volatile var maxTaskMs = 0L
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        shuffleWrite += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-        shuffleRead += sc.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead
-      }
-      // the straggler signal: the longest single task anywhere in the
-      // measured job — a skew-safe kernel keeps this flat as one bucket
-      // swallows half the corpus; a per-key window does not
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskInfo != null && te.taskInfo.duration > maxTaskMs)
-          maxTaskMs = te.taskInfo.duration
-      def reset(): Unit = { shuffleWrite = 0L; shuffleRead = 0L; maxTaskMs = 0L }
-    }
-    spark.sparkContext.addSparkListener(metrics)
+    val census = Census(spark)
 
     // even ids: the 40-word template + ' u<id>' (one new trailing
     // shingle); odd ids: unique 40-word docs (the healthy half)
@@ -86,17 +65,15 @@ object LshSkew {
       n
     }
 
+    // max_task is the straggler signal: the longest single task in the
+    // measured job — a skew-safe kernel keeps it flat as one bucket
+    // swallows half the corpus; a per-key window does not
     def measure(label: String)(f: => Long): Unit = {
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
-      metrics.reset()
-      val t0 = System.nanoTime()
-      val out = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
-      println(f"LSH_SKEW $label%-28s rows=$out%9d wall=$sec%8.2f s " +
-        f"max_task=${metrics.maxTaskMs / 1e3}%7.2f s " +
-        f"shuffle_write=${metrics.shuffleWrite / 1e6}%9.1f MB " +
-        f"shuffle_read=${metrics.shuffleRead / 1e6}%9.1f MB")
+      val s = census.measure(label)(f)
+      println(f"LSH_SKEW $label%-28s rows=${s.out}%9d wall=${s.wallS}%8.2f s " +
+        f"max_task=${s.maxTaskS}%7.2f s " +
+        f"shuffle_write=${s.shuffleWriteMB}%9.1f MB " +
+        f"shuffle_read=${s.shuffleReadMB}%9.1f MB")
     }
 
     // warm pass: JIT + codegen for the whole chain

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,20 +27,9 @@ object PruneSkew {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.map(_.toInt).toSeq
                 else Seq(50000, 200000, 800000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
 
-    object metrics extends SparkListener {
-      @volatile var maxTaskMs = 0L
-      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-        if (te.taskInfo != null && te.taskInfo.duration > maxTaskMs)
-          maxTaskMs = te.taskInfo.duration
-      def reset(): Unit = maxTaskMs = 0L
-    }
-    spark.sparkContext.addSparkListener(metrics)
+    val census = Census(spark)
 
     // near-constant 8-dim embeddings: unit-ish direction plus a tiny
     // per-id perturbation so prototypicality scores still vary — every
@@ -57,21 +45,10 @@ object PruneSkew {
       spark.range(n).selectExpr("id as vec_id", "0L as cell",
         "round(cast(id % 9973 as double) / 9973.0d, 4) as proto")
 
-    def measure(label: String)(f: => Long): Unit = {
-      org.apache.spark.sql.graftbridge.Bridge
-        .drainListenerBus(spark.sparkContext)
-      metrics.reset()
-      val t0 = System.nanoTime()
-      val out = f
-      val sec = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.sql.graftbridge.Bridge
-        .drainListenerBus(spark.sparkContext)
-      // "out=", not "rows=": the rank measurements return sum(rank)
-      // (so the rank column is genuinely consumed), prototypePrune a
-      // row count — the label stays honest for both
-      println(f"PRUNE_SKEW $label%-30s out=$out%13d wall=$sec%8.2f s " +
-        f"max_task=${metrics.maxTaskMs / 1e3}%7.2f s")
-    }
+    // "out=", not "rows=": the rank measurements return sum(rank) (so
+    // the rank column is genuinely consumed), prototypePrune a row count
+    def measure(label: String)(f: => Long): Unit =
+      println(f"PRUNE_SKEW $label%-30s " + census.measure(label)(f).skewFields)
 
     // warm pass
     DistRank.perKeyRowNumber(scored(2000), "cell",

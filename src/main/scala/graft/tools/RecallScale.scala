@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.sim.Similarity
@@ -24,11 +24,7 @@ object RecallScale {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nQueries = if (args.length > 1) args(1).toInt else 100
     val k = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").cache()
     val nRows = emb.count()

@@ -1,13 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1-scale stretch-check data: tiles the driver's sf0.1 tables 10x
   * with FK-preserving key offsets (copy k shifts every entity key by
   * k * 10^9, so orders->customer / lineitem->orders/part/supplier joins
   * stay consistent), fixed dimension tables (region/nation) untouched.
-  * Documents follow [[CurateScale]]'s replication rule — copy 0
+  * Documents follow [[ScaleStep.copyOf]]'s replication rule — copy 0
   * verbatim, 90% of copies k>0 get a per-copy suffix word, 10% stay
   * byte-identical — so the dedup tracks keep real work to do instead
   * of degenerating to 10 identical clusters per doc; n_chars is
@@ -31,11 +31,7 @@ object Sf1Gen {
     val copies = if (args.length > 1) args(1).toInt else 10
     val src = "/root/testdata/sf0.1"
     val off = 1000000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession()
 
     def tile(name: String, keyCols: Seq[String],
         perCopy: (DataFrame, Int) => DataFrame = (d, _) => d): Unit = {
@@ -61,13 +57,8 @@ object Sf1Gen {
     tile("orders", Seq("o_orderkey", "o_custkey"))
     tile("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"))
     tile("events", Seq("event_id", "user_id"))
-    tile("documents", Seq(), (d, k) =>
-      (if (k == 0) d
-       else d.withColumn("text",
-         when(col("doc_id") % 10 === 0, col("text"))
-           .otherwise(concat(col("text"), lit(s" copyvariant$k"))))
-          .withColumn("doc_id", col("doc_id") + lit(k * off)))
-        .withColumn("n_chars", length(col("text")).cast("long")))
+    tile("documents", Seq(), (d, k) => ScaleStep.copyOf(d, k, off)
+      .withColumn("n_chars", length(col("text")).cast("long")))
     tile("embeddings", Seq("vec_id"))
     spark.stop()
   }

@@ -37,18 +37,21 @@ object Barriers {
     * racing a scope) unpersist barriers another in-flight operator is
     * still reading — SAFE (the lineage-preserving cache recomputes)
     * but silently slow. The counter makes that misuse LOUD: both
-    * entry points warn on stderr when they observe concurrency, so a
-    * service discovers the contract violation from its logs instead
-    * of from a latency graph. */
+    * entry points log a warning to the `graft.util.Barriers` logger
+    * when they observe concurrency, so a service discovers the
+    * contract violation from its logs instead of from a latency
+    * graph. */
   private val activeScopes = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.util.Barriers")
+
   private def warnConcurrent(site: String): Unit =
-    System.err.println(s"[graft.Barriers] $site observed a concurrent " +
+    log.warn(s"$site observed a concurrent " +
       "scoped block: barriers another in-flight operator still reads may " +
       "be unpersisted (safe, but forces recomputation). Run units of " +
       "work one at a time, or scope per-thread work separately.")
 
-  /** Current ledger size — diagnostics only (tools/CacheAudit). */
+  /** Current ledger size — diagnostics only (`graft.tools.CacheAudit`). */
   def ledgerSize: Int = ledger.size()
 
   /** `df.cache()` + register for a later [[releaseAll]]. */

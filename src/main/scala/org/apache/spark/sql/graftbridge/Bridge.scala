@@ -14,8 +14,8 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Block until the listener bus has delivered all queued events.
-    * `listenerBus` is `private[spark]`; measurement tools (CurateScale)
-    * need a drain barrier so SparkListener counters attribute stage
+    * `listenerBus` is `private[spark]`; the tools' census
+    * (graft.tools.Census) needs a drain barrier so its counters attribute stage
     * metrics to the step that produced them instead of racing across
     * reset/read boundaries. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =

@@ -1,5 +1,8 @@
 package graft
 
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench final-line degrade ladder at simulated registry sizes:
@@ -18,13 +21,31 @@ class BenchLineSpec extends AnyFunSuite {
     }.toMap
   }
 
-  private def parse(line: String): Map[String, Any] = {
-    // minimal JSON sanity: parseable by the same class of parser the
-    // driver uses (strict key/number shapes, balanced braces)
-    assert(line.startsWith("{") && line.endsWith("}"), line.take(80))
-    assert(line.count(_ == '{') == line.count(_ == '}'), "balanced braces")
-    assert(line.contains("\"metric\":\"total\""))
-    Map("len" -> line.length)
+  private val mapper = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** `line` as strict JSON with `metric == "total"` and a numeric total. */
+  private def json(line: String): Option[JsonNode] =
+    Try(mapper.readTree(line)).toOption.filter(n =>
+      n.path("metric").asText == "total" && n.path("value").isNumber)
+
+  /** The bench harness's procedure on a run's stdout: keep the last
+    * ~2000 chars, take the last line that starts with `{` and read it
+    * as [[json]]. None is the harness's `parsed: null`. */
+  private def harnessParse(stdout: String): Option[JsonNode] =
+    stdout.takeRight(2000).linesIterator.filter(_.startsWith("{"))
+      .toSeq.lastOption.flatMap(json)
+
+  // what the run prints around the final line: the diag line before it,
+  // sbt's footer after it
+  private def stdout(line: String): String =
+    "{\"diag\":\"full_names\",\"queries\":{}}\n" + line +
+      "\n[success] Total time: 812 s (13:32), completed Oct 17, 2026\n"
+
+  private def parse(line: String): JsonNode = {
+    val node = harnessParse(stdout(line))
+    assert(node.isDefined, s"the harness would record parsed:null for ${line.take(80)}")
+    node.get
   }
 
   test("140-query registry fits the 2-dp line with the warm map") {
@@ -58,9 +79,11 @@ class BenchLineSpec extends AnyFunSuite {
   test("pathological registry (all slow) still emits a line via 1-dp rung") {
     val r = (0 until 400).map(i => f"t$i%03d_q" -> 2.0).toMap
     val (line, _) = Bench.renderFinal(r, Map.empty, Nil, "sf0.1")
-    parse(line)
     // 400 all-slow queries blow even the grouped rung; the 1-dp line is
-    // the floor and must still be the one emitted (never truncated)
+    // the floor and must still be the one emitted (never truncated).
+    // At ~3.6k chars it is longer than the tail the harness keeps, so
+    // only the line itself is checked here.
+    assert(json(line).isDefined, line.take(80))
     assert(line == Bench.renderFinal(r, Map.empty, Nil, "sf0.1")._1)
   }
 
@@ -85,5 +108,19 @@ class BenchLineSpec extends AnyFunSuite {
     parse(line)
     assert(line.contains("\"failed\":[\"t999_dead\"]"))
     assert(!line.contains("\"t999\":-"), "failed time never emitted as negative")
+  }
+
+  test("a truncated, garbled or head-cut final line is not parsed") {
+    val (line, _) = Bench.renderFinal(registry(140), Map.empty, Nil, "sf0.1")
+    assert(parse(line).path("value").asDouble > 0)
+    assert(harnessParse(stdout(line.dropRight(7))).isEmpty, "truncated line parsed")
+    assert(harnessParse(stdout(line.replaceFirst(":", ";"))).isEmpty,
+      "garbled line parsed")
+    // past the ~2000-char tail the line's head is cut, which the
+    // degrade ladder's budget exists to prevent
+    val (long, _) = Bench.renderFinal(registry(220), Map.empty, Nil, "sf0.1",
+      budget = 10000)
+    assert(long.length > 2000)
+    assert(harnessParse(stdout(long)).isEmpty, "head-cut line parsed")
   }
 }

@@ -7,17 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * an hpxeos site-fraction) multiplies the optimized tree by 10-30x,
   * which shows up as minutes of Catalyst/codegen time at plan build
   * before a single row moves. Current sizes are ~500-2000 nodes
-  * (tools/PlanSize); bounds are ~4x headroom, not exact pins. */
+  * (`graft.tools.PlanDump size`, which counts with the same
+  * [[graft.tools.PlanDump.exprNodes]]); bounds are ~4x headroom, not
+  * exact pins. */
 class PlanSizeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def exprNodes(name: String): Int = {
-    val plan = SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan
-    plan.collect { case p =>
-      p.expressions.map(e => e.collect { case x => x }.size).sum
-    }.sum
-  }
+  private def exprNodes(name: String): Int = graft.tools.PlanDump.exprNodes(
+    SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan)
 
   private val bounds = Map(
     "p05_garnet_endmembers" -> 5000, // staged cascade, measured ~1.2k

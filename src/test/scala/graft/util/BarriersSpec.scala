@@ -118,4 +118,40 @@ class BarriersSpec extends AnyFunSuite {
     assert(Bridge.cacheManagerIsEmpty(spark),
       "a thrown stage must not leak its upstream barriers")
   }
+
+  test("overlapping scoped blocks on two threads log the concurrency warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    spark // Spark configures logging on start; capture after that
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender(
+      "barriers-spec", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(event: LogEvent): Unit =
+        if (event.getLevel == Level.WARN)
+          seen.add(event.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("graft.util.Barriers").asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.setLevel(Level.WARN)
+    logger.addAppender(appender)
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val first = new Thread(() =>
+      Barriers.scoped { entered.countDown(); release.await() })
+    first.start()
+    try {
+      entered.await()
+      Barriers.scoped(())
+    } finally {
+      release.countDown()
+      first.join()
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+    }
+    assert(seen.toArray.exists(_.toString.contains("concurrent scoped block")),
+      s"no concurrency warning reached the graft.util.Barriers logger: $seen")
+  }
 }
