@@ -173,7 +173,10 @@ object Bench {
     *    (~15 chars/slow query: holds hundreds of registry entries as
     *    long as the slow set stays bounded, which is what a bench
     *    regression watch actually reads);
-    * 3. last ditch: the full map at 1 decimal. */
+    * 3. last ditch: the per-track subtotals at 1 decimal and the
+    *    omitted-query count, no per-query map — its length depends on
+    *    the number of tracks only, so it fits any registry size (every
+    *    query's time is still on the full_names diag line). */
   private[graft] def renderFinal(results: Map[String, Double],
       rerunRaw: Map[String, Double], failed: List[String],
       sfShort: String, budget: Int = 1900,
@@ -222,21 +225,20 @@ object Bench {
     val tail = s"""$failedField,"sf":"$sfShort"}"""
     val withWarm = s"""$head,"queries":$qs,"queries_warm":$warm$tail"""
     val noWarm = s"""$head,"queries":$qs$tail"""
-    val trackTotals = results.toSeq.groupBy(_._1.takeWhile(_.isLetter))
+    val tracks = results.toSeq.groupBy(_._1.takeWhile(_.isLetter))
       .toSeq.sortBy(_._1)
+    def trackTotals(fmt: Double => String) = tracks
       .map { case (t, kvs) =>
-        s"\"$t\":${fmt2(kvs.map(_._2).filter(_ >= 0).sum)}" }
+        s"\"$t\":${fmt(kvs.map(_._2).filter(_ >= 0).sum)}" }
       .mkString("{", ",", "}")
     val slow = results.toSeq.filter(_._2 > 0.5)
     val slowQs = slow.sortBy(_._1)
       .map { case (k, v) => s"\"${short(k)}\":${fmt2(v)}" }
       .mkString("{", ",", "}")
-    val grouped = s"""$head,"tracks":$trackTotals,"queries":$slowQs""" +
+    val grouped = s"""$head,"tracks":${trackTotals(fmt2)},"queries":$slowQs""" +
       s""","queries_omitted":${results.size - slow.size}$tail"""
-    val qs1 = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"${short(k)}\":${fmt1(v)}" }
-      .mkString("{", ",", "}")
-    val coarse = s"""$head,"queries":$qs1$tail"""
+    val coarse = s"""$head,"tracks":${trackTotals(fmt1)}""" +
+      s""","queries_omitted":${results.size}$tail"""
     if (withWarm.length <= budget) (withWarm, Nil)
     else if (noWarm.length <= budget) (noWarm, Nil)
     else if (grouped.length <= budget)

@@ -3,6 +3,8 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.Verify")
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = args match {
       case Array(s, o) => (s, o, None)
@@ -15,8 +17,9 @@ object Verify {
     // A failed query must be LOUD: r7 had 5 queries die inside this loop
     // and the correctness report simply lacked their rows — a 151-green
     // report that read as perfect. Failures are collected, written to
-    // _failed.json beside the results, and echoed to stdout so both the
-    // driver log and the output dir carry the regression.
+    // _failed.json beside the results, logged one line per query, and
+    // summed up on stdout so both the driver log and the output dir
+    // carry the regression.
     var failed = List.empty[(String, String)]
     val selected = SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.exists(name.startsWith)) }
@@ -25,7 +28,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         failed ::= (name, Option(e.getMessage).getOrElse(e.getClass.getName))
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        log.error(s"$name failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

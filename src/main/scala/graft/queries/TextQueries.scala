@@ -869,47 +869,39 @@ object TextQueries {
 
     // trained-BPE tokenization: 12 merges trained on the corpus's OWN
     // pretoken frequency table (deterministic count-desc/pair-asc
-    // argmax), then applied per document. The DuckDB oracle re-runs
-    // the SAME training loop — 12 unrolled pair-count/argmax/merge
-    // iterations over the wrapped-symbol strings — and the same
-    // application fold, so a drift in either training determinism or
-    // merge semantics hash-fails, not just the output shape. Training
-    // routes through the driver-loop trainer (bit-identical to the
-    // distributed loop for every accepted input — BpeSpec pins the
-    // equality, including merge exhaustion) because the distributed
-    // 12-iteration loop pays ~200 ms/merge of pure job overhead at
-    // this corpus size: the oracle anchors the SEMANTICS either way,
-    // and the distributed path stays spec-covered.
+    // argmax), then applied per document by the rank-greedy kernel.
+    // The DuckDB oracle re-runs the SAME training loop — 12 unrolled
+    // pair-count/argmax/merge iterations over the wrapped-symbol
+    // strings — and applies each merge once in rank order, which on a
+    // trained table is exactly the greedy result, so a drift in either
+    // training determinism or merge semantics hash-fails, not just the
+    // output shape.
     "t61_bpe_tokenize" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val merges = TextOps.bpeTrainMergesDriver(docs, "text", numMerges = 12)
+      val merges = TextOps.bpeTrainMerges(docs, "text", numMerges = 12)
       TextOps.bpeTokenize(docs, "doc_id", "text", merges)
         .orderBy("doc_id")
     }),
 
-    // trained BPE at a REALISTIC merge depth via the driver-loop
-    // trainer (bit-identical to the distributed loop — BpeSpec — but
-    // ~2 ms/merge instead of ~200: one corpus pass, then the capped
-    // <= maxWords word table trains in memory). The mirror re-runs all
-    // 64 merge iterations in DuckDB.
+    // trained BPE at a deeper merge table (one corpus pass, then the
+    // capped <= maxWords word table trains in memory at ~2 ms/merge).
+    // The mirror re-runs all 64 merge iterations in DuckDB.
     "t97_bpe_merges64" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val merges = TextOps.bpeTrainMergesDriver(docs, "text", numMerges = 64)
+      val merges = TextOps.bpeTrainMerges(docs, "text", numMerges = 64)
       TextOps.bpeTokenize(docs, "doc_id", "text", merges)
         .orderBy("doc_id")
     }),
 
-    // rank-greedy BPE application (the realistic-merge-depth kernel:
-    // one codegen'd Expression + a broadcast rank map instead of
-    // numMerges chained replaces). Same 64-merge driver-trained table
-    // as t97 and the SAME DuckDB mirror — on trained tables the greedy
-    // kernel is bit-identical to the chained fold (BpeSpec), so one
-    // oracle pins both application shapes against each other AND
-    // against the external re-derivation.
+    // rank-greedy BPE application: the same 64-merge table and the
+    // SAME DuckDB mirror as t97, and since bpeTokenize has one kernel
+    // the two queries now run the same engine path. Kept as its own
+    // registry entry so the query count (and the oracle's per-query
+    // history) stays where it was.
     "t109_bpe_greedy" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val merges = TextOps.bpeTrainMergesDriver(docs, "text", numMerges = 64)
-      TextOps.bpeTokenizeGreedy(docs, "doc_id", "text", merges)
+      val merges = TextOps.bpeTrainMerges(docs, "text", numMerges = 64)
+      TextOps.bpeTokenize(docs, "doc_id", "text", merges)
         .orderBy("doc_id")
     }),
 
@@ -1106,12 +1098,12 @@ object TextQueries {
     // tokenizer fertility per source: trained-BPE tokens per
     // alphanumeric word — the cost signal that decides how a source is
     // budgeted (high-fertility sources eat the token budget faster
-    // than their word counts suggest). Composes the driver-loop
-    // trainer with the rank-greedy kernel and a per-source rollup.
+    // than their word counts suggest). Composes the trainer with the
+    // rank-greedy kernel and a per-source rollup.
     "t113_bpe_fertility" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val merges = TextOps.bpeTrainMergesDriver(docs, "text", numMerges = 12)
-      val tok = TextOps.bpeTokenizeGreedy(docs, "doc_id", "text", merges)
+      val merges = TextOps.bpeTrainMerges(docs, "text", numMerges = 12)
+      val tok = TextOps.bpeTokenize(docs, "doc_id", "text", merges)
       val words = docs.select(col("doc_id"), col("source"),
         size(TextOps.tokens(col("text"))).cast("long").as("n_words"))
       tok.join(words, "doc_id")
@@ -2281,13 +2273,17 @@ object TextQueries {
   }
 
   /** DuckDB mirror of the FULL trained-BPE path (t61): w0/d0 build the
-    * word-frequency table and per-document merge strings in TextOps's
-    * wrapped-symbol form (chr(288) = U+0120 space mark, chr(31) =
-    * pretoken boundary), then each unrolled iteration i counts symbol
-    * pairs (p_i), picks the count-desc/pair-asc argmax (b_i) and
-    * applies the literal " l  r " -> " lr " replacement to both the
-    * vocabulary (w_{i+1}) and the documents (d_{i+1}) — byte-for-byte
-    * the expressions bpeTrainMerges/bpeTokenize fold in Spark. */
+    * word-frequency table and per-document merge strings in a
+    * wrapped-symbol form (every symbol space-padded, chr(288) = U+0120
+    * space mark, chr(31) = pretoken boundary; w0's string is the word
+    * key TextOps.bpeTrainMerges caps and tie-breaks on), then each
+    * unrolled iteration i counts symbol pairs (p_i), picks the
+    * count-desc/pair-asc argmax (b_i) and applies the literal
+    * " l  r " -> " lr " replacement to both the vocabulary (w_{i+1})
+    * and the documents (d_{i+1}). This is an independent
+    * re-derivation, not a copy: Spark trains in memory and applies
+    * with the rank-greedy BpeEncode kernel, which on a trained table
+    * equals this one-pass-per-merge rank-order replace. */
   private def bpeOracleSql(numMerges: Int): String = {
     val pat = graft.text.TextOps.BpePattern.replace("'", "''")
     def wrap(x: String) =

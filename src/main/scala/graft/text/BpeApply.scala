@@ -1,47 +1,41 @@
 package graft.text
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Rank-greedy BPE application — the merge-depth-proof twin of
-  * [[TextOps.bpeTokenize]]'s chained-replace fold.
-  *
-  * The chained fold is the right shape at shallow depth (each merge is
-  * one codegen'd literal replace; measured linear 2.0 -> 4.2 s from 16
-  * -> 126 merges on 5k docs, BASELINE.md "BPE merge-count scale") but
-  * WRONG at realistic depth: 30k+ replaces blow the codegen method
-  * budget and pay 30k whole-document scans per row. This kernel is the
-  * documented upgrade — per PRETOKEN, repeatedly merge the
+/** Rank-greedy BPE application, the kernel behind
+  * [[TextOps.bpeTokenize]]: per PRETOKEN, repeatedly merge the
   * lowest-rank adjacent symbol pair present in the table (all
-  * occurrences, leftmost-first) until none remains: the GPT-2
+  * occurrences, leftmost-first) until none remains — the GPT-2
   * `encoder.py` application semantics. (The reference library has no
   * tokenizer — this operator belongs to the training-data extension
-  * surface.) Cost per document is
-  * O(symbols x merges-APPLIED) with O(1) expression nodes and O(table)
-  * broadcast state, independent of table depth.
+  * surface.) Cost per document is O(symbols x merges-APPLIED) with
+  * O(1) expression nodes and O(table) broadcast state, independent of
+  * table depth.
   *
-  * Equivalence contract (BpeSpec pins it): for TRAINED tables — where
-  * every merge's two sides are single symbols or products of
-  * earlier-ranked merges, which is what [[TextOps.bpeTrainMerges]] /
-  * [[TextOps.bpeTrainMergesDriver]] produce by construction — the
-  * greedy result is bit-identical to the chained-replace fold, so the
-  * same DuckDB oracle mirrors both. For arbitrary (non-trained)
-  * tables the two genuinely diverge (a low-rank merge whose sides only
-  * materialize via a higher-rank merge is applied here, skipped by the
-  * fold); the greedy semantics is authoritative — it is what reference
-  * BPE encoders implement.
+  * Equivalence contract (BpeSpec pins it against a naive per-pretoken
+  * fold): for TRAINED tables — where every merge's two sides are
+  * single symbols or products of earlier-ranked merges, which is what
+  * [[TextOps.bpeTrainMerges]] produces by construction — the greedy
+  * result equals applying each merge once in rank order, the shape
+  * the DuckDB oracle (`bpeOracleSql`) mirrors. For arbitrary
+  * (non-trained) tables the two diverge (a low-rank merge whose sides
+  * only materialize via a higher-rank merge is applied here, skipped
+  * by the single rank-order pass); the greedy semantics is
+  * authoritative — it is what reference BPE encoders implement.
   */
 object BpeApply {
 
   private val Pretoken = java.util.regex.Pattern.compile(TextOps.BpePattern)
 
   /** Compiled merge table: (left, right) -> rank, plus the encode
-    * kernel. Built once per plan and shipped to executors as one
-    * reference object (~bytes per merge — a 32k-merge tokenizer is a
-    * sub-MB broadcast, the model-sized-state pattern). */
+    * kernel. Built once per [[TextOps.bpeTokenize]] call and shipped to
+    * executors as one TorrentBroadcast (~bytes per merge — a 32k-merge
+    * tokenizer is a sub-MB broadcast, the model-sized-state pattern). */
   final class MergeTable(merges: Seq[(String, String)]) extends Serializable {
     // Two-level map keyed (left -> right -> rank): unambiguous for ANY
     // symbol content (a single concatenated-string key needs a
@@ -52,8 +46,8 @@ object BpeApply {
       new java.util.HashMap[String, java.util.HashMap[String, Integer]](
         math.max(16, merges.size * 2))
     merges.iterator.zipWithIndex.foreach { case ((l, r), i) =>
-      // first occurrence wins, matching the fold (a duplicated pair's
-      // second replace is a no-op: the pattern no longer occurs)
+      // first occurrence wins (a duplicated pair's later rank can never
+      // be the lowest one present)
       rank.computeIfAbsent(l, _ => new java.util.HashMap[String, Integer](4))
         .putIfAbsent(r, Integer.valueOf(i))
     }
@@ -95,9 +89,7 @@ object BpeApply {
 
     /** Pretokenize with [[TextOps.BpePattern]], map pretoken spaces to
       * the visible-space mark, split to code-point symbols, greedy-
-      * merge, emit all surviving symbols single-space-joined — the
-      * same output contract as the chained fold's
-      * trim(regexp_replace(...)) tail. */
+      * merge, emit all surviving symbols single-space-joined. */
     def encode(text: UTF8String): UTF8String = {
       val s = text.toString
       val m = Pretoken.matcher(s)
@@ -128,13 +120,13 @@ object BpeApply {
   }
 }
 
-/** `BpeEncode(text, merges)`: string -> space-joined BPE symbols via
-  * the rank-greedy kernel; stays inside whole-stage codegen (the table
-  * rides along as a codegen reference object, like Spark's own
-  * StaticInvoke targets). */
-case class BpeEncode(child: Expression, merges: Seq[(String, String)])
-    extends UnaryExpression {
-  @transient private lazy val table = new BpeApply.MergeTable(merges)
+/** `BpeEncode(text, table)`: string -> space-joined BPE symbols via
+  * the rank-greedy kernel; stays inside whole-stage codegen. The
+  * expression serializes only the broadcast handle, so a
+  * production-depth table (30-50k merges) distributes once per
+  * application instead of riding every task binary. */
+case class BpeEncode(child: Expression,
+    table: Broadcast[BpeApply.MergeTable]) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
@@ -142,41 +134,13 @@ case class BpeEncode(child: Expression, merges: Seq[(String, String)])
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
-    table.encode(input.asInstanceOf[UTF8String])
+    table.value.encode(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("bpeTable", table,
-      classOf[BpeApply.MergeTable].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.encode($c);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BpeEncode =
-    copy(child = newChild)
-}
-
-/** [[BpeEncode]] with the merge table shipped as a TorrentBroadcast —
-  * the expression serializes only the broadcast handle, so a
-  * production-depth table (30-50k merges) distributes once per
-  * application instead of riding every plan's task binaries
-  * (`UnigramEncodeBroadcast`'s pattern; identical output,
-  * spec-pinned). */
-case class BpeEncodeBroadcast(child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[BpeApply.MergeTable])
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"BpeEncodeBroadcast requires a string input, got " +
-        child.dataType.catalogString)
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    bc.value.encode(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bpeTableBc", bc,
-      "org.apache.spark.broadcast.Broadcast")
+      classOf[Broadcast[_]].getName)
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = ((${classOf[BpeApply.MergeTable].getName}) $ref.value()).encode($c);")
   }
-  override protected def withNewChildInternal(
-      newChild: Expression): BpeEncodeBroadcast =
+  override protected def withNewChildInternal(newChild: Expression): BpeEncode =
     copy(child = newChild)
 }

@@ -1059,120 +1059,46 @@ object TextOps {
     * separator the merge representation is built on. */
   val BpeSpaceMark = "Ġ"
 
-  /** Pretoken-boundary sentinel for [[bpeTokenize]]'s whole-document
-    * merge string: merges can never bridge two pretokens because the
-    * " l  r " double-space pair pattern is broken by "  ". */
-  private val BpeBoundary = "\u001f"
-
-  /** Wrapped-symbol representation: every symbol is surrounded by one
-    * space on each side, so a symbol list [a, b] renders " a  b "
-    * (double space BETWEEN symbols, single at the ends). Applying the
-    * merge (l, r) is then the literal replacement of " l  r " with
-    * " lr " — leftmost non-overlapping, exactly BPE's left-to-right
-    * greedy merge scan — and the double-interior/single-edge shape
-    * makes a pattern match impossible anywhere but at a true symbol
-    * boundary. The same construction is mirrored verbatim in the
-    * DuckDB oracle. */
+  /** Wrapped-symbol form of a pretoken: spaces mapped to
+    * [[BpeSpaceMark]], every character surrounded by one space on each
+    * side, so [a, b] renders " a  b ". [[bpeTrainMerges]] keys its word
+    * table by this string, so the `maxWords` cap breaks count ties in
+    * the wrapped string's order — the order the DuckDB oracle's
+    * verbatim mirror of this construction reproduces. */
   private def bpeWrap(tok: Column): Column =
     concat(lit(" "),
       array_join(split(replace(tok, lit(" "), lit(BpeSpaceMark)), ""), "  "),
       lit(" "))
-
-  private def bpeMergePat(l: String, r: String): (String, String) =
-    (s" $l  $r ", s" $l$r ")
 
   /** Train a deterministic BPE merge table from a corpus (Sennrich
     * 2016; the GPT-2 training shape): pretokenize with [[BpePattern]],
     * aggregate the word-frequency table (ONE corpus-sized pass — all
     * later work is vocabulary-sized, the property that makes BPE
     * training tractable at 100 TB), cap it to the `maxWords` most
-    * frequent words (count-desc, word-asc tie-break — deterministic),
-    * then run `numMerges` merge iterations: count symbol pairs
-    * weighted by word frequency, pick the most frequent pair
-    * (count-desc, pair-asc tie-break), and merge it in every word.
-    * Each iteration is a vocabulary-sized hash aggregation plus a
-    * 1-row TakeOrdered collect — the driver holds only the merge
-    * table itself (numMerges rows), the k-row-model contract of
-    * [[graft.sim.Similarity.kmeansCentroids]]. Throws if the corpus
-    * runs out of distinct pairs before `numMerges` merges — a merge
-    * table shorter than requested would silently drift from the
-    * engine-external mirror; pass `stopAtExhaustion = true` for real
-    * training runs where "merge until the vocabulary is fully fused"
-    * is the intent (the returned table is then authoritative for its
-    * own length, and no fixed-count mirror should be attached). */
+    * frequent words (count-desc, wrapped-word-asc tie-break —
+    * deterministic), collect that bounded table (the same
+    * bounded-driver-state contract as [[nearDupClusters]]'s edge fast
+    * path) and run `numMerges` merge iterations in memory: count
+    * symbol pairs weighted by word frequency, pick the most frequent
+    * pair (count-desc, pair-asc tie-break, symbols compared as UTF-8
+    * bytes — Spark's string order, which the oracle's ORDER BY
+    * reproduces), and fuse it leftmost-non-overlapping in every word.
+    * A merge costs 2-60 ms in memory against ~0.2 s of fixed job
+    * overhead as a Spark round trip (BASELINE.md "BPE merge-count
+    * scale"), which is what makes 30-50k-merge tokenizers tractable.
+    * Throws if the corpus runs out of distinct pairs before
+    * `numMerges` merges — a merge table shorter than requested would
+    * silently drift from the engine-external mirror; pass
+    * `stopAtExhaustion = true` for real training runs where "merge
+    * until the vocabulary is fully fused" is the intent (the returned
+    * table is then authoritative for its own length, and no
+    * fixed-count mirror should be attached). */
   def bpeTrainMerges(df: DataFrame, textCol: String, numMerges: Int,
-      maxWords: Int = 65536,
-      stopAtExhaustion: Boolean = false,
-      checkpointEvery: Int = 8): Seq[(String, String)] = {
-    require(numMerges > 0, s"numMerges must be positive, got $numMerges")
-    require(maxWords > 0, s"maxWords must be positive, got $maxWords")
-    require(checkpointEvery > 0,
-      s"checkpointEvery must be positive, got $checkpointEvery")
-    var words = fanOut(
-      df.select(explode(regexp_extract_all(col(textCol), lit(BpePattern),
-          lit(0))).as("__tok"))
-        .groupBy("__tok").agg(count(lit(1)).as("__wc"))
-        .select(bpeWrap(col("__tok")).as("__s"), col("__wc"))
-        .orderBy(desc("__wc"), asc("__s")).limit(maxWords))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(String, String)]
-    var i = 0
-    while (i < numMerges) {
-      val syms = split(trim(col("__s")), "  ")
-      val top = words
-        .select(col("__wc"), syms.as("__y"))
-        .select(col("__wc"), explode(arrays_zip(
-          slice(col("__y"), lit(1), size(col("__y")) - 1),
-          slice(col("__y"), lit(2), size(col("__y")) - 1))).as("__p"))
-        .groupBy(col("__p.0").as("l"), col("__p.1").as("r"))
-        .agg(sum("__wc").as("cnt"))
-        .orderBy(desc("cnt"), asc("l"), asc("r")).limit(1)
-        .collect()
-      if (top.isEmpty && stopAtExhaustion) return merges.result()
-      require(top.nonEmpty,
-        s"corpus exhausted after $i merges; requested $numMerges")
-      val l = top(0).getString(0); val r = top(0).getString(1)
-      merges += ((l, r))
-      val (pat, rep) = bpeMergePat(l, r)
-      // Periodic checkpoint, not per-merge: the next round's pair count
-      // tolerates a <= checkpointEvery-deep chain of narrow literal
-      // replaces on top of the last barrier (each is one codegen'd scan
-      // of the vocabulary-sized frame), while a per-merge materialization
-      // pays a full job per merge — at realistic merge counts the fixed
-      // per-job overhead IS the training cost (BASELINE.md "BPE
-      // merge-count scale"). Without ANY barrier each round re-runs the
-      // whole merge lineage (semDedup's refinement discipline), so the
-      // cadence is bounded, not removed.
-      words = words.withColumn("__s", replace(col("__s"), lit(pat), lit(rep)))
-      if ((i + 1) % checkpointEvery == 0) words = words.localCheckpoint()
-      i += 1
-    }
-    merges.result()
-  }
-
-  /** [[bpeTrainMerges]] with the merge loop run DRIVER-SIDE — the
-    * realistic-merge-count path. The corpus-sized work is identical
-    * (ONE pretokenize + word-count pass, capped to the `maxWords` most
-    * frequent words); the capped table is then collected (bounded at
-    * maxWords rows by construction — the same bounded-driver-state
-    * contract as [[nearDupClusters]]'s edge fast path) and the
-    * count/argmax/merge iterations run in memory, removing the ~0.2 s
-    * per-merge fixed Spark-job overhead that dominates the distributed
-    * loop (BASELINE.md "BPE merge-count scale": the distributed loop
-    * costs wall ∝ merges regardless of corpus size; this path makes
-    * 30-50k-merge tokenizers tractable). Bit-identical semantics to
-    * the distributed loop — pair counts are exact longs, the argmax
-    * tie-break compares symbols as UTF-8 bytes (Spark's string
-    * ordering), merges apply leftmost-non-overlapping — so the two
-    * paths return the SAME table and share the same external mirror;
-    * the spec asserts equality. */
-  def bpeTrainMergesDriver(df: DataFrame, textCol: String, numMerges: Int,
       maxWords: Int = 65536,
       stopAtExhaustion: Boolean = false): Seq[(String, String)] = {
     require(numMerges > 0, s"numMerges must be positive, got $numMerges")
     require(maxWords > 0, s"maxWords must be positive, got $maxWords")
-    // same single corpus pass + deterministic cap as the distributed
-    // loop; collect (wrapped word, count) — <= maxWords rows
+    // collect (wrapped word, count) — <= maxWords rows
     val collected = fanOut(
       df.select(explode(regexp_extract_all(col(textCol), lit(BpePattern),
           lit(0))).as("__tok"))
@@ -1214,7 +1140,7 @@ object TextOps {
       }
       val (l, r) = best._1
       merges += ((l, r))
-      // leftmost non-overlapping fuse — the " l  r " -> " lr " replace
+      // leftmost non-overlapping fuse
       words = words.map { case (syms, wc) =>
         if (syms.length < 2) (syms, wc)
         else {
@@ -1233,74 +1159,25 @@ object TextOps {
     merges.result()
   }
 
-  /** Apply a trained merge table ([[bpeTrainMerges]]) to a corpus: per
-    * document, pretokenize, render each pretoken in the wrapped-symbol
-    * form, join pretokens with the [[BpeBoundary]] sentinel (merges
-    * never bridge pretokens), fold the merge replacements in rank
-    * order, and emit (idCol, n_tokens, tokens) with the final symbols
-    * single-space-joined. A pure narrow projection — numMerges chained
-    * codegen'd literal replaces, no shuffle, partitioning inherited —
-    * so the per-row cost is numMerges linear scans, not a per-symbol
-    * loop. `tokens` feeds [[packSequences]] / [[truncateTokens]] /
-    * [[chunkDocuments]] directly: their whitespace splitting recovers
-    * exactly these symbols, upgrading every token-budget operator from
-    * the [[bpeTokenStats]] approximation to trained-BPE counts. */
+  /** Apply a merge table ([[bpeTrainMerges]]) to a corpus through the
+    * rank-greedy [[BpeEncode]] kernel: per pretoken, repeatedly merge
+    * the lowest-rank adjacent symbol pair in the table (GPT-2
+    * `encoder.py` semantics), and emit (idCol, n_tokens, tokens) with
+    * the final symbols single-space-joined. One O(1)-node codegen'd
+    * projection — no shuffle, partitioning inherited — whose per-row
+    * cost is ∝ symbols actually merged, not table depth; the table
+    * ships once as a TorrentBroadcast this call creates. On trained
+    * tables the result equals applying each merge once in rank order
+    * (the DuckDB oracle's shape). `tokens` feeds [[packSequences]] /
+    * [[truncateTokens]] / [[chunkDocuments]] directly: their
+    * whitespace splitting recovers exactly these symbols, upgrading
+    * every token-budget operator from the [[bpeTokenStats]]
+    * approximation to trained-BPE counts. */
   def bpeTokenize(df: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
-    val doc0 = array_join(
-      transform(regexp_extract_all(col(textCol), lit(BpePattern), lit(0)),
-        t => bpeWrap(t)),
-      BpeBoundary)
-    val merged = merges.foldLeft(doc0) { case (c, (l, r)) =>
-      val (pat, rep) = bpeMergePat(l, r)
-      replace(c, lit(pat), lit(rep))
-    }
-    val toks = trim(regexp_replace(merged, s"[$BpeBoundary ]+", " "))
-    df.select(col(idCol),
-      when(toks === "", lit(0L))
-        .otherwise(size(split(toks, " ")).cast("long")).as("n_tokens"),
-      toks.as("tokens"))
-  }
-
-  /** [[bpeTokenize]] through the rank-greedy [[BpeEncode]] kernel —
-    * same output contract ((idCol, n_tokens, tokens)), bit-identical
-    * on trained merge tables (BpeSpec pins the equality), but built
-    * for REALISTIC merge depth: one O(1)-node codegen'd expression and
-    * an O(table) broadcast rank map instead of numMerges chained
-    * whole-document replaces, so a 32k-merge tokenizer costs per-row
-    * work ∝ symbols actually merged, not table size. Use this for
-    * production-depth tables; the fold twin remains the
-    * oracle-mirrorable anchor at shallow depth. */
-  def bpeTokenizeGreedy(df: DataFrame, idCol: String, textCol: String,
-      merges: Seq[(String, String)]): DataFrame = {
-    val toks = org.apache.spark.sql.graftbridge.Bridge.column(
-      BpeEncode(org.apache.spark.sql.graftbridge.Bridge.expression(
-        col(textCol)), merges))
-    df.select(col(idCol),
-      when(toks === "", lit(0L))
-        .otherwise(size(split(toks, " ")).cast("long")).as("n_tokens"),
-      toks.as("tokens"))
-  }
-
-  /** One broadcast handle for a compiled BPE merge table — build once,
-    * pass to every [[bpeTokenizeGreedyBroadcast]] plan. */
-  def bpeBroadcastTable(spark: org.apache.spark.sql.SparkSession,
-      merges: Seq[(String, String)])
-      : org.apache.spark.broadcast.Broadcast[BpeApply.MergeTable] =
-    spark.sparkContext.broadcast(new BpeApply.MergeTable(merges))
-
-  /** [[bpeTokenizeGreedy]] with the merge table shipped as a
-    * TorrentBroadcast ([[unigramTokenizeWithBroadcast]]'s pattern):
-    * same output, but a 30-50k-merge production table distributes once
-    * per application instead of re-serializing into every plan that
-    * applies it. */
-  def bpeTokenizeGreedyBroadcast(df: DataFrame, idCol: String,
-      textCol: String,
-      bc: org.apache.spark.broadcast.Broadcast[BpeApply.MergeTable])
-      : DataFrame = {
-    val toks = org.apache.spark.sql.graftbridge.Bridge.column(
-      BpeEncodeBroadcast(org.apache.spark.sql.graftbridge.Bridge
-        .expression(col(textCol)), bc))
+    val table = df.sparkSession.sparkContext.broadcast(
+      new BpeApply.MergeTable(merges))
+    val toks = Bridge.column(BpeEncode(Bridge.expression(col(textCol)), table))
     df.select(col(idCol),
       when(toks === "", lit(0L))
         .otherwise(size(split(toks, " ")).cast("long")).as("n_tokens"),
@@ -1351,42 +1228,19 @@ object TextOps {
 
   /** Unigram-LM Viterbi tokenization with an explicit vocabulary —
     * the apply path: one codegen'd [[UnigramEncode]] projection per
-    * row (O(chars x maxPieceLen), vocab broadcast as model state, no
-    * join, no shuffle). Returns (idCol, pieces space-joined,
-    * n_pieces, score_micro) — score_micro is the exact micro-unit
+    * row (O(chars x maxPieceLen), no join, no shuffle); the vocab
+    * ships once as a TorrentBroadcast this call creates, so a
+    * production-size model (32k-256k pieces) costs what a small one
+    * does. Returns (idCol, pieces space-joined, n_pieces,
+    * score_micro) — score_micro is the exact micro-unit
     * log-likelihood of the optimal segmentation, the sequence-level
     * signal perplexity-style selection reads. */
   def unigramTokenizeWith(df: DataFrame, idCol: String, textCol: String,
       vocab: Seq[(String, Long)], maxPieceLen: Int = 8): DataFrame = {
-    val enc = org.apache.spark.sql.graftbridge.Bridge.column(
-      UnigramEncode(org.apache.spark.sql.graftbridge.Bridge.expression(
-        col(textCol)), vocab, maxPieceLen))
-    df.select(col(idCol), enc.as("__u"))
-      .select(col(idCol), col("__u.pieces").as("pieces"),
-        col("__u.n_pieces").cast("long").as("n_pieces"),
-        col("__u.score_micro").as("score_micro"))
-  }
-
-  /** [[unigramTokenizeWith]] shipping the model as a TorrentBroadcast
-    * instead of a plan-embedded reference object — same output
-    * (spec-pinned), but a production-size model (32k-256k pieces) is
-    * distributed ONCE per application, executor-to-executor, rather
-    * than re-serialized into every task binary of every plan that
-    * applies it. Use this form when |vocab| is beyond a few thousand
-    * pieces; `graft.tools.ScaleStep unigram` measures the shipping gap. */
-  def unigramBroadcastModel(spark: org.apache.spark.sql.SparkSession,
-      vocab: Seq[(String, Long)], maxPieceLen: Int = 8)
-      : org.apache.spark.broadcast.Broadcast[UnigramApply.Vocab] =
-    spark.sparkContext.broadcast(
+    val model = df.sparkSession.sparkContext.broadcast(
       new UnigramApply.Vocab(vocab, maxPieceLen))
-
-  def unigramTokenizeWithBroadcast(df: DataFrame, idCol: String,
-      textCol: String,
-      bc: org.apache.spark.broadcast.Broadcast[UnigramApply.Vocab])
-      : DataFrame = {
-    val enc = org.apache.spark.sql.graftbridge.Bridge.column(
-      UnigramEncodeBroadcast(org.apache.spark.sql.graftbridge.Bridge
-        .expression(col(textCol)), bc))
+    val enc = Bridge.column(
+      UnigramEncode(Bridge.expression(col(textCol)), model))
     df.select(col(idCol), enc.as("__u"))
       .select(col(idCol), col("__u.pieces").as("pieces"),
         col("__u.n_pieces").cast("long").as("n_pieces"),
@@ -1396,7 +1250,7 @@ object TextOps {
   /** Train-then-apply unigram tokenization over one corpus:
     * [[unigramTrainScores]] collected as the model (bounded at
     * |alphabet| + vocabSize rows — the k-row model contract the BPE
-    * driver trainer and the classifiers share), then
+    * trainer and the classifiers share), then
     * [[unigramTokenizeWith]]. */
   def unigramTokenize(df: DataFrame, idCol: String, textCol: String,
       vocabSize: Int = 64, maxPieceLen: Int = 8): DataFrame =
@@ -1428,16 +1282,16 @@ object TextOps {
           .cast("long").as("score_micro"))
   }
 
-  /** [[unigramTokenize]] with `emRounds` Viterbi-EM refinement rounds
-    * between seeding and the final decode. Each round collects the
-    * ≤ |vocab|-row model (the k-row contract) and re-decodes — the
-    * corpus is scanned emRounds + 2 times total, every pass narrow. */
   /** Materialize a (piece, score_micro) frame as the driver-side model
     * — the one projection the unigram entry points share. */
   private def collectUnigramModel(scores: DataFrame): Seq[(String, Long)] =
     scores.select("piece", "score_micro").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
 
+  /** [[unigramTokenize]] with `emRounds` Viterbi-EM refinement rounds
+    * between seeding and the final decode. Each round collects the
+    * ≤ |vocab|-row model (the k-row contract) and re-decodes — the
+    * corpus is scanned emRounds + 2 times total, every pass narrow. */
   def unigramTokenizeEm(df: DataFrame, idCol: String, textCol: String,
       vocabSize: Int = 64, maxPieceLen: Int = 8,
       emRounds: Int = 1): DataFrame = {

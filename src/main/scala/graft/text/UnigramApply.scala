@@ -1,5 +1,6 @@
 package graft.text
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -36,7 +37,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Cost per document is O(chars x maxPieceLen) with O(1) expression
   * nodes and O(vocab) broadcast state — a narrow codegen'd projection,
-  * no join, no shuffle: the 100-TB apply path.
+  * no join, no shuffle: the 100-TB apply path. The model ships once
+  * as a TorrentBroadcast, so its size adds no per-task cost (BASELINE.md
+  * "Unigram tokenizer scale": a 1M-entry model applies in the time of
+  * an 88-piece one).
   */
 object UnigramApply {
 
@@ -46,9 +50,10 @@ object UnigramApply {
   val UnkScoreMicro: Long = -25000000L
 
   /** Compiled vocabulary: piece -> micro-unit log score, plus the
-    * Viterbi kernel. Built once per plan and shipped to executors as
-    * one reference object (sub-MB at a 32k vocab — the model-sized-
-    * state pattern [[BpeApply.MergeTable]] set). */
+    * Viterbi kernel. Built once per [[TextOps.unigramTokenizeWith]]
+    * call and shipped to executors as one TorrentBroadcast (sub-MB at
+    * a 32k vocab — the model-sized-state pattern [[BpeApply.MergeTable]]
+    * set). */
   final class Vocab(pieces: Seq[(String, Long)], maxPieceLen: Int)
       extends Serializable {
     require(maxPieceLen >= 1, s"maxPieceLen must be >= 1, got $maxPieceLen")
@@ -133,12 +138,10 @@ object UnigramApply {
 
 /** `UnigramEncode(text, vocab)`: string -> struct(pieces string,
   * score_micro long, n_pieces int) via the Viterbi kernel; stays
-  * inside whole-stage codegen (the vocab rides along as a codegen
-  * reference object, [[BpeEncode]]'s pattern). */
-case class UnigramEncode(child: Expression, vocab: Seq[(String, Long)],
-    maxPieceLen: Int) extends UnaryExpression {
-  @transient private lazy val table =
-    new UnigramApply.Vocab(vocab, maxPieceLen)
+  * inside whole-stage codegen, and the expression serializes only the
+  * broadcast handle ([[BpeEncode]]'s pattern). */
+case class UnigramEncode(child: Expression,
+    vocab: Broadcast[UnigramApply.Vocab]) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
@@ -149,46 +152,13 @@ case class UnigramEncode(child: Expression, vocab: Seq[(String, Long)],
     StructField("n_pieces", IntegerType, nullable = false)))
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(input: Any): Any =
-    table.encode(input.asInstanceOf[UTF8String])
+    vocab.value.encode(input.asInstanceOf[UTF8String])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("unigramVocab", table,
-      classOf[UnigramApply.Vocab].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.encode($c);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): UnigramEncode =
-    copy(child = newChild)
-}
-
-/** [[UnigramEncode]] with the model shipped as a TorrentBroadcast
-  * instead of a plan-embedded reference object: the expression
-  * serializes only the broadcast HANDLE, so a production-size model
-  * (32k-256k pieces, tens of MB) is distributed once per application
-  * — BitTorrent-style, executor-to-executor — rather than re-shipped
-  * inside every task binary of every plan that uses it. Identical
-  * output to the plan-embedded form (spec-pinned); `graft.tools.ScaleStep
-  * unigram` measures the shipping gap at a padded 1M-entry model. */
-case class UnigramEncodeBroadcast(child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[UnigramApply.Vocab])
-    extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"UnigramEncodeBroadcast requires a string input, got " +
-        child.dataType.catalogString)
-  override def dataType: DataType = StructType(Seq(
-    StructField("pieces", StringType, nullable = false),
-    StructField("score_micro", LongType, nullable = false),
-    StructField("n_pieces", IntegerType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(input: Any): Any =
-    bc.value.encode(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("unigramVocabBc", bc,
-      "org.apache.spark.broadcast.Broadcast")
+    val ref = ctx.addReferenceObj("unigramVocab", vocab,
+      classOf[Broadcast[_]].getName)
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = ((${classOf[UnigramApply.Vocab].getName}) $ref.value()).encode($c);")
   }
-  override protected def withNewChildInternal(
-      newChild: Expression): UnigramEncodeBroadcast =
+  override protected def withNewChildInternal(newChild: Expression): UnigramEncode =
     copy(child = newChild)
 }

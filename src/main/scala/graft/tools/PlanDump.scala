@@ -22,6 +22,8 @@ import graft.SparkEntry
   * Usage: runMain graft.tools.PlanDump formatted|files|size <sfDir> ...
   */
 object PlanDump {
+  private val log = org.apache.logging.log4j.LogManager.getLogger("graft.tools.PlanDump")
+
   private def planNodes(plan: LogicalPlan): Int = plan.collect { case p => p }.size
 
   /** Expression nodes summed over every operator of `plan`. */
@@ -59,7 +61,7 @@ object PlanDump {
               plan(name).explainString(FormattedMode))
             true
           } catch { case e: Throwable =>
-            System.err.println(s"[plandump] $name failed: ${e.getMessage}")
+            log.error(s"$name failed: ${e.getMessage}")
             false
           }
         }

@@ -126,7 +126,7 @@ object ScaleStep {
       case "bpe" => bpe(spark, docs("doc_id", "text").localCheckpoint(),
         census, stepsOr(16, 64, 256))
       case "unigram" =>
-        unigram(spark, docs("doc_id", "text").localCheckpoint(), census)
+        unigram(docs("doc_id", "text").localCheckpoint(), census)
       case _ => sys.error("usage: ScaleStep " +
         "curate|pipeline|dedup|r11|export|bpe|unigram [sfDir] [copies...]")
     }
@@ -349,89 +349,57 @@ object ScaleStep {
     }
   }
 
-  /** Trained-BPE cost. Training is driver-looped — two Spark jobs per
-    * merge against an always-checkpointed <= maxWords-row frame — so
-    * the question is fixed per-job overhead, not data growth; the
-    * driver-loop trainer is the same semantics without it. Applying
-    * folds one literal `replace` per merge into a single expression,
-    * whose codegen falls back past method-size limits at high merge
-    * counts; the rank-greedy kernel's cost is ∝ merges applied per row,
-    * and its token totals must agree with the fold exactly. */
+  /** Trained-BPE cost. Training is one corpus pass, then an in-memory
+    * merge loop over the <= maxWords word table, so its cost is per
+    * merge, not per document; applying is the rank-greedy kernel,
+    * whose cost is ∝ merges applied per row, not table depth. */
   private def bpe(spark: SparkSession, docs: DataFrame, census: Census,
       counts: Seq[Int]): Unit = {
-    val nDocs = docs.count()
     def tokens(df: DataFrame) = df.agg(sum("n_tokens")).head().getLong(0)
-    def agree(same: Boolean) = if (same) "agree" else "DISAGREE"
-    TextOps.bpeTokenize(docs, "doc_id", "text",
-      TextOps.bpeTrainMerges(docs, "text", 4)).count()
-    counts.foreach { m =>
+    // train `m` merges (to exhaustion) on `corpus`, then apply them
+    def step(corpus: DataFrame, m: Int) = {
       var merges = Seq.empty[(String, String)]
       val train = census.measure("train") {
-        merges = TextOps.bpeTrainMerges(docs, "text", m, stopAtExhaustion = true)
+        merges = TextOps.bpeTrainMerges(corpus, "text", m,
+          stopAtExhaustion = true)
         merges.size
       }
-      val got = merges.size
       val apply = census.measure("apply")(
-        tokens(TextOps.bpeTokenize(docs, "doc_id", "text", merges)))
-      var mergesD = Seq.empty[(String, String)]
-      val driver = census.measure("driver") {
-        mergesD = TextOps.bpeTrainMergesDriver(docs, "text", m,
-          stopAtExhaustion = true)
-        mergesD.size
-      }
-      val greedy = census.measure("greedy")(
-        tokens(TextOps.bpeTokenizeGreedy(docs, "doc_id", "text", merges)))
+        tokens(TextOps.bpeTokenize(corpus, "doc_id", "text", merges)))
+      val got = merges.size
+      (got, f"train=${train.wallS}%7.2f s (${train.wallS / got * 1000}%6.1f ms/merge) " +
+        f"apply=${apply.wallS}%7.2f s tokens=${apply.out}%10d " +
+        f"train_jobs=${train.jobs}")
+    }
+    val nDocs = docs.count()
+    step(docs, 4)
+    counts.foreach { m =>
+      val (got, cols) = step(docs, m)
       val note = if (got < m) s" EXHAUSTED at $got" else ""
-      println(f"BPE_SCALE merges=$got%5d docs=$nDocs%6d " +
-        f"train=${train.wallS}%8.2f s (${train.wallS / got * 1000}%7.1f ms/merge) " +
-        f"driver=${driver.wallS}%7.2f s (${driver.wallS / got * 1000}%7.1f ms/merge, " +
-        f"${agree(mergesD == merges)}) apply=${apply.wallS}%7.2f s " +
-        f"greedy=${greedy.wallS}%7.2f s (${agree(greedy.out == apply.out)}) " +
-        f"tokens=${apply.out}%9d train_jobs=${train.jobs}$note")
+      println(f"BPE_SCALE merges=$got%5d docs=$nDocs%6d $cols$note")
     }
     // Realistic depth (1k-4k+ merges) needs a richer vocabulary than
     // the sf corpus, whose pretoken alphabet exhausts at ~126 merges:
-    // hex words sustain thousands. The fold is measured at the shallow
-    // depth only — one whole-document replace per merge is exactly the
-    // documented wrong shape past ~1k merges, and at 512 chained
-    // replaces Spark 4.1's Column-to-Expression conversion already
-    // overflows the default thread stack.
+    // hex words sustain thousands.
     val rich = spark.range(20000).select(col("id").as("doc_id"),
       concat_ws(" ", (0 until 6).map(j =>
         md5(concat(col("id").cast("string"), lit(s":$j")))): _*).as("text"))
       .localCheckpoint()
-    TextOps.bpeTokenizeGreedy(rich, "doc_id", "text",
-      TextOps.bpeTrainMergesDriver(rich, "text", 8)).count()
+    step(rich, 8)
     Seq(128, 512, 2048, 4096).foreach { m =>
-      var merges = Seq.empty[(String, String)]
-      val train = census.measure("driver_train") {
-        merges = TextOps.bpeTrainMergesDriver(rich, "text", m,
-          stopAtExhaustion = true)
-        merges.size
-      }
-      val got = merges.size
-      val greedy = census.measure("greedy")(
-        tokens(TextOps.bpeTokenizeGreedy(rich, "doc_id", "text", merges)))
-      val fold = if (m > 128) "fold=skipped(depth)" else {
-        val f = census.measure("fold")(
-          tokens(TextOps.bpeTokenize(rich, "doc_id", "text", merges)))
-        f"fold=${f.wallS}%7.2f s (${agree(f.out == greedy.out)})"
-      }
-      println(f"BPE_DEEP merges=$got%5d docs=20000 driver_train=${train.wallS}%7.2f s " +
-        f"(${train.wallS / got * 1000}%6.1f ms/merge) " +
-        f"greedy=${greedy.wallS}%7.2f s $fold tokens=${greedy.out}%10d")
+      val (got, cols) = step(rich, m)
+      println(f"BPE_DEEP merges=$got%5d docs=20000 $cols")
     }
   }
 
   /** The unigram tokenizer's two apply-cost claims: (a) independent of
     * vocabulary size — the Viterbi kernel does O(chars x maxPieceLen)
-    * hash probes per row however many pieces the table holds, shown by
-    * padding the model with never-matching pieces (underscores cannot
-    * occur in [a-z0-9] tokens); (a') the broadcast model ships once, so
-    * a re-plan costs what a small model does; (b) ~linear in
-    * maxPieceLen, the knob a deployment tunes. */
-  private def unigram(spark: SparkSession, docs: DataFrame,
-      census: Census): Unit = {
+    * hash probes per row however many pieces the table holds, and the
+    * model ships once per call as a broadcast, shown by padding the
+    * model with never-matching pieces (underscores cannot occur in
+    * [a-z0-9] tokens); (b) ~linear in maxPieceLen, the knob a
+    * deployment tunes. */
+  private def unigram(docs: DataFrame, census: Census): Unit = {
     val nDocs = docs.count()
     var model = Seq.empty[(String, Long)]
     val train = census.measure("train") {
@@ -454,18 +422,6 @@ object ScaleStep {
     Seq(0, 10000, 100000, 1000000).foreach { extra =>
       val v = padded(extra)
       println(f"apply: |vocab|=${v.size}%7d maxPieceLen=8 -> ${applySec(v, 8)}%.2f s")
-    }
-    Seq(0, 1000000).foreach { extra =>
-      val v = padded(extra)
-      val bc = TextOps.unigramBroadcastModel(spark, v, 8)
-      def one() = census.measure("apply-bcast") {
-        TextOps.unigramTokenizeWithBroadcast(docs, "doc_id", "text", bc)
-          .agg(sum("n_pieces")).head().getLong(0)
-      }.wallS
-      val first = one()
-      println(f"apply-bcast: |vocab|=${v.size}%7d -> " +
-        f"first $first%.2f s, re-plan ${one()}%.2f s")
-      bc.destroy()
     }
     Seq(2, 4, 8, 16, 32).foreach { l =>
       println(f"apply: |vocab|=${model.size}%7d maxPieceLen=$l%2d -> " +

@@ -16,6 +16,15 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Java-serialized size of `o`: what shipping it inside a task costs. */
+  def serializedBytes(o: AnyRef): Int = {
+    val out = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(out)
+    oos.writeObject(o)
+    oos.close()
+    out.size()
+  }
 }
 
 /** Counts whole-stage-codegen compile failures logged by Spark's

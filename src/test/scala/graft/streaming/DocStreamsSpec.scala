@@ -677,13 +677,13 @@ class DocStreamsSpec extends AnyFunSuite {
     val corpus = (0L until 40L).map(i =>
       (i, s"the cat c$i sat on mat m${i % 7} it's low lower ${i * 31}"))
     val docs = corpus.toDF("doc_id", "text")
-    val merges = TextOps.bpeTrainMergesDriver(docs, "text", numMerges = 24)
-    val want = TextOps.bpeTokenizeGreedy(docs, "doc_id", "text", merges)
+    val merges = TextOps.bpeTrainMerges(docs, "text", numMerges = 24)
+    val want = TextOps.bpeTokenize(docs, "doc_id", "text", merges)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
 
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    val q = TextOps.bpeTokenizeGreedy(
+    val q = TextOps.bpeTokenize(
         in.toDF.toDF("doc_id", "text"), "doc_id", "text", merges)
       .writeStream.outputMode("append").format("memory")
       .queryName("bpe_greedy_stream").start()
@@ -700,7 +700,9 @@ class DocStreamsSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     // UnigramEncode is a narrow stateless projection like BpeEncode:
-    // train batch-side, apply the SAME operator to a streaming frame
+    // train batch-side, apply the SAME operator to a streaming frame;
+    // the model rides a broadcast created once per call, not per
+    // micro-batch plan
     val corpus = (0L until 40L).map(i =>
       (i, s"the cat c$i sat on mat m${i % 7} it's low lower ${i * 31}"))
     val docs = corpus.toDF("doc_id", "text")
@@ -726,44 +728,5 @@ class DocStreamsSpec extends AnyFunSuite {
         r.getLong(3))).toSet
     assert(got == want,
       s"stream/batch mismatch: only-stream=${got -- want} only-batch=${want -- got}")
-  }
-
-  test("broadcast-model unigram tokenization is stream-legal and " +
-      "matches batch exactly") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    // the production-depth route: the model rides a TorrentBroadcast
-    // (distributed once per application, not per micro-batch plan) and
-    // the expression stays a narrow stateless projection — so the
-    // SAME broadcast handle serves batch and streaming frames with
-    // bit-identical output
-    val corpus = (0L until 40L).map(i =>
-      (i, s"the cat c$i sat on mat m${i % 7} it's low lower ${i * 31}"))
-    val docs = corpus.toDF("doc_id", "text")
-    val model = TextOps.unigramTrainScores(docs, "doc_id", "text",
-        vocabSize = 32, maxPieceLen = 6)
-      .select("piece", "score_micro").collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val bc = TextOps.unigramBroadcastModel(spark, model, 6)
-    val want = TextOps.unigramTokenizeWithBroadcast(docs, "doc_id",
-        "text", bc)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).toSet
-
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(Long, String)]
-    val q = TextOps.unigramTokenizeWithBroadcast(
-        in.toDF.toDF("doc_id", "text"), "doc_id", "text", bc)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("unigram_bcast_stream").start()
-    in.addData(corpus)
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("unigram_bcast_stream")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).toSet
-    assert(got == want,
-      s"stream/batch mismatch: only-stream=${got -- want} only-batch=${want -- got}")
-    bc.destroy()
   }
 }

@@ -7,8 +7,9 @@ import graft.TestSpark
 
 /** Trained-BPE parity against an INDEPENDENT naive implementation:
   * the reference here is the textbook per-word merge loop (Sennrich
-  * 2016) over in-memory maps, with none of TextOps's wrapped-string
-  * representation — so a bug in the replace-based merge encoding
+  * 2016) over in-memory maps, and application is a per-pretoken
+  * chained fold of the merges in rank order — none of TextOps's
+  * representation or BpeEncode's rank-greedy scan, so a bug in either
   * cannot hide by being mirrored in the check. */
 class BpeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -33,8 +34,10 @@ class BpeSpec extends AnyFunSuite {
   private def refPretokens(text: String): Seq[String] =
     TextOps.BpePattern.r.findAllIn(text).toSeq
 
+  /** One symbol per code point, so a surrogate pair is one symbol. */
   private def refSymbols(tok: String): Vector[String] =
-    tok.replace(" ", TextOps.BpeSpaceMark).map(_.toString).toVector
+    tok.replace(" ", TextOps.BpeSpaceMark).codePoints().toArray
+      .map(cp => new String(Character.toChars(cp))).toVector
 
   private def refMergeOnce(syms: Vector[String],
       m: (String, String)): Vector[String] = {
@@ -48,14 +51,17 @@ class BpeSpec extends AnyFunSuite {
     out.result()
   }
 
-  private def refTrain(texts: Seq[String], n: Int): Seq[(String, String)] = {
+  /** `n` merges, or fewer when `stopAtExhaustion` and no pair is left. */
+  private def refTrain(texts: Seq[String], n: Int,
+      stopAtExhaustion: Boolean = false): Seq[(String, String)] = {
     val wc = mutable.LinkedHashMap[String, Long]()
     texts.foreach(t => refPretokens(t).foreach(w =>
       wc(w) = wc.getOrElse(w, 0L) + 1))
     var vocab: Map[Vector[String], Long] =
       wc.map { case (w, c) => refSymbols(w) -> c }.toMap
     val merges = Seq.newBuilder[(String, String)]
-    for (_ <- 0 until n) {
+    var m = 0
+    while (m < n) {
       val pairs = mutable.Map[(String, String), Long]()
       vocab.foreach { case (syms, c) =>
         syms.sliding(2).foreach {
@@ -63,19 +69,36 @@ class BpeSpec extends AnyFunSuite {
           case _ =>
         }
       }
+      if (pairs.isEmpty && stopAtExhaustion) return merges.result()
       val best = pairs.toSeq.sortBy { case ((l, r), c) => (-c, l, r) }.head._1
       merges += best
       vocab = vocab.toSeq.map { case (syms, c) => (refMergeOnce(syms, best), c) }
         .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum }
+      m += 1
     }
     merges.result()
   }
 
-  private def refTokenize(text: String,
-      merges: Seq[(String, String)]): Seq[String] =
+  /** Per pretoken, each merge applied once in rank order. `memo` lets a
+    * caller reuse pretoken results across documents under one table. */
+  private def refTokenize(text: String, merges: Seq[(String, String)],
+      memo: mutable.Map[String, Vector[String]] = mutable.Map()): Seq[String] =
     refPretokens(text).flatMap { tok =>
-      merges.foldLeft(refSymbols(tok))(refMergeOnce)
+      memo.getOrElseUpdate(tok, merges.foldLeft(refSymbols(tok))(refMergeOnce))
     }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+
+  private def refRows(docs: Seq[(Long, String)],
+      merges: Seq[(String, String)]) = {
+    val memo = mutable.Map[String, Vector[String]]()
+    docs.sortBy(_._1).map { case (id, text) =>
+      val toks = refTokenize(text, merges, memo)
+      (id, toks.length.toLong, toks.mkString(" "))
+    }
+  }
 
   // -- specs ----------------------------------------------------------------
 
@@ -153,37 +176,27 @@ class BpeSpec extends AnyFunSuite {
     // the opt-in exhaustion mode returns the shorter authoritative table
     assert(TextOps.bpeTrainMerges(tiny, "text", numMerges = 3,
       stopAtExhaustion = true) == one)
-    assert(TextOps.bpeTrainMergesDriver(tiny, "text", numMerges = 3,
-      stopAtExhaustion = true) == one)
   }
 
-  test("driver-loop training is bit-identical to the distributed loop") {
-    val dist = TextOps.bpeTrainMerges(df, "text", numMerges = 16)
-    val drv = TextOps.bpeTrainMergesDriver(df, "text", numMerges = 16)
-    assert(drv == dist)
-    // and at full exhaustion depth, where ties and degenerate words pile up
-    val distAll = TextOps.bpeTrainMerges(df, "text", numMerges = 10000,
+  test("trainer matches the naive reference at full exhaustion") {
+    // full exhaustion depth, where ties and degenerate words pile up
+    val got = TextOps.bpeTrainMerges(df, "text", numMerges = 10000,
       stopAtExhaustion = true)
-    val drvAll = TextOps.bpeTrainMergesDriver(df, "text", numMerges = 10000,
-      stopAtExhaustion = true)
-    assert(drvAll == distAll)
-    assert(distAll.size < 10000, "fixture corpus must exhaust")
+    assert(got.size < 10000, "fixture corpus must exhaust")
+    assert(got == refTrain(corpus.map(_._2), 10000, stopAtExhaustion = true))
   }
 
-  // -- rank-greedy kernel equivalence ---------------------------------------
+  // -- rank-greedy kernel against the naive chained fold --------------------
 
   test("greedy kernel is bit-identical to the chained fold on trained tables") {
-    // 12, 64, and full-exhaustion depth: the equivalence contract the
+    // 4, 12, and full-exhaustion depth: the equivalence contract the
     // BpeEncode Expression documents (trained tables only — every
     // merge's sides predate it, so the fold can never miss one)
     for (n <- Seq(4, 12, 64)) {
-      val merges = TextOps.bpeTrainMergesDriver(df, "text", numMerges = n,
+      val merges = TextOps.bpeTrainMerges(df, "text", numMerges = n,
         stopAtExhaustion = true)
-      val a = TextOps.bpeTokenize(df, "doc_id", "text", merges)
-        .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      val b = TextOps.bpeTokenizeGreedy(df, "doc_id", "text", merges)
-        .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-      assert(a.toSeq == b.toSeq, s"greedy != fold at $n merges")
+      assert(rows(TextOps.bpeTokenize(df, "doc_id", "text", merges)) ==
+        refRows(corpus, merges), s"greedy != fold at $n merges")
     }
   }
 
@@ -191,64 +204,74 @@ class BpeSpec extends AnyFunSuite {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
-    val merges = TextOps.bpeTrainMergesDriver(docs, "text", numMerges = 500,
+    val merges = TextOps.bpeTrainMerges(docs, "text", numMerges = 500,
       stopAtExhaustion = true)
     assert(merges.nonEmpty)
-    val a = TextOps.bpeTokenize(docs, "doc_id", "text", merges)
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    val b = TextOps.bpeTokenizeGreedy(docs, "doc_id", "text", merges)
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    assert(a.toSeq == b.toSeq)
+    val texts = docs.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(rows(TextOps.bpeTokenize(docs, "doc_id", "text", merges)) ==
+      refRows(texts, merges))
   }
 
-  test("broadcast-table greedy apply is bit-identical to the plan-embedded form") {
-    val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val merges = TextOps.bpeTrainMergesDriver(docs, "text", numMerges = 64,
-      stopAtExhaustion = true)
-    val a = TextOps.bpeTokenizeGreedy(docs, "doc_id", "text", merges)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    val bc = TextOps.bpeBroadcastTable(spark, merges)
-    val b = TextOps.bpeTokenizeGreedyBroadcast(docs, "doc_id", "text", bc)
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
-    assert(a.toSeq == b.toSeq)
-    bc.destroy()
+  test("a 1024-merge table on hex words matches the chained fold") {
+    // hex words sustain realistic depth (the sf corpus exhausts at ~126
+    // merges); the table's depth must not reach the expression tree
+    import spark.implicits._
+    val hex = (0L until 300L).map { i =>
+      val h = (0 until 6).map { j =>
+        java.security.MessageDigest.getInstance("MD5")
+          .digest(s"$i:$j".getBytes("UTF-8")).map(b => f"$b%02x").mkString
+      }
+      (i, h.mkString(" "))
+    }
+    val docs = hex.toDF("doc_id", "text")
+    val merges = TextOps.bpeTrainMerges(docs, "text", numMerges = 1024)
+    assert(merges.size == 1024)
+    assert(rows(TextOps.bpeTokenize(docs, "doc_id", "text", merges)) ==
+      refRows(hex, merges))
+  }
+
+  test("the merge table rides a broadcast, not the plan") {
+    // every task deserializes the expression, so a deep table must not
+    // grow it
+    def exprBytes(merges: Seq[(String, String)]): Int = {
+      val enc = TextOps.bpeTokenize(df, "doc_id", "text", merges)
+        .queryExecution.analyzed.flatMap(_.expressions)
+        .flatMap(_.collect { case e: BpeEncode => e }).head
+      TestSpark.serializedBytes(enc)
+    }
+    val merges = TextOps.bpeTrainMerges(df, "text", numMerges = 16)
+    val deep = merges ++ (0 until 100000).map(i => (s"x$i", "y"))
+    assert(exprBytes(deep) < 2 * exprBytes(merges))
   }
 
   test("on NON-trained tables greedy applies the authoritative semantics") {
     import spark.implicits._
     val one = Seq(0L -> "abc").toDF("doc_id", "text")
-    // rank0's sides only exist AFTER rank1 runs: the fold misses it
-    // (single pass in rank order), the greedy kernel applies it — the
+    // rank0's sides only exist AFTER rank1 runs: the chained fold misses
+    // it (single pass in rank order), the greedy kernel applies it — the
     // GPT-2 reference behavior. This is exactly why the equivalence
     // contract is scoped to trained tables.
     val table = Seq(("ab", "c"), ("a", "b"))
-    val fold = TextOps.bpeTokenize(one, "doc_id", "text", table)
+    val greedy = TextOps.bpeTokenize(one, "doc_id", "text", table)
       .select("tokens").as[String].head()
-    val greedy = TextOps.bpeTokenizeGreedy(one, "doc_id", "text", table)
-      .select("tokens").as[String].head()
-    assert(fold == "ab c")
+    assert(refTokenize("abc", table).mkString(" ") == "ab c")
     assert(greedy == "abc")
   }
 
   test("greedy kernel handles nulls, empties and surrogate pairs") {
     import spark.implicits._
-    val rows = Seq((0L, "the cat"), (1L, ""), (2L, "   "),
+    val input = Seq((0L, "the cat"), (1L, ""), (2L, "   "),
       (3L, "emoji \ud83d\ude00 pair"), (4L, null))
-      .toDF("doc_id", "text")
-    val merges = TextOps.bpeTrainMergesDriver(df, "text", numMerges = 8)
-    val out = TextOps.bpeTokenizeGreedy(rows, "doc_id", "text", merges)
+    val merges = TextOps.bpeTrainMerges(df, "text", numMerges = 8)
+    val out = TextOps.bpeTokenize(input.toDF("doc_id", "text"), "doc_id",
+        "text", merges)
       .orderBy("doc_id").collect()
     assert(out.length == 5)
     assert(out(1).getLong(1) == 0L && out(1).getString(2) == "")
     assert(out(4).isNullAt(1) && out(4).isNullAt(2))
-    // the fold twin agrees on every non-null row
-    val fold = TextOps.bpeTokenize(rows.filter(col("text").isNotNull),
-      "doc_id", "text", merges).orderBy("doc_id").collect()
-    assert(fold.map(r => (r.getLong(0), r.getString(2))).toSeq ==
-      out.filter(!_.isNullAt(2)).map(r => (r.getLong(0), r.getString(2))).toSeq)
+    // the chained fold agrees on every non-null row
+    assert(out.filter(!_.isNullAt(2))
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq ==
+      refRows(input.filter(_._2 != null), merges))
   }
 }

@@ -129,23 +129,42 @@ class UnigramSpec extends AnyFunSuite {
     assert(zero == seedScore)
   }
 
-  test("broadcast-model apply is bit-identical to the plan-embedded form") {
+  test("the vocab rides a broadcast, not the plan") {
+    // every task deserializes the expression, so a production-size
+    // model must not grow it
+    val df = Seq((1L, "abc")).toDF("doc_id", "text")
+    def exprBytes(vocab: Seq[(String, Long)]): Int = {
+      val enc = TextOps.unigramTokenizeWith(df, "doc_id", "text", vocab)
+        .queryExecution.analyzed.flatMap(_.expressions)
+        .flatMap(_.collect { case e: UnigramEncode => e }).head
+      TestSpark.serializedBytes(enc)
+    }
+    val vocab = Seq("ab" -> -1L * M, "c" -> -2L * M)
+    val big = vocab ++ (0 until 100000).map(i => (s"_pad_$i", -20L * M))
+    assert(exprBytes(big) < 2 * exprBytes(vocab))
+  }
+
+  test("shipped-model apply matches the in-process kernel, doc by doc") {
+    // the model reaches the executors as a broadcast; decoding the same
+    // texts with the kernel in this JVM must give the same rows
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val model = TextOps.unigramTrainScores(docs, "doc_id", "text",
         vocabSize = 64, maxPieceLen = 8)
       .select("piece", "score_micro").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
-    val plain = TextOps.unigramTokenizeWith(docs, "doc_id", "text", model, 8)
-    val bc = TextOps.unigramBroadcastModel(spark, model, 8)
-    val bcast = TextOps.unigramTokenizeWithBroadcast(docs, "doc_id", "text", bc)
-      .withColumnRenamed("pieces", "p2")
-      .withColumnRenamed("n_pieces", "n2")
-      .withColumnRenamed("score_micro", "s2")
-    val mismatch = plain.join(bcast, "doc_id")
-      .filter(col("pieces") =!= col("p2") || col("n_pieces") =!= col("n2") ||
-        col("score_micro") =!= col("s2")).count()
-    assert(mismatch == 0)
-    bc.destroy()
+    val got = TextOps.unigramTokenizeWith(docs, "doc_id", "text", model, 8)
+      .orderBy("doc_id").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+    val kernel = new UnigramApply.Vocab(model, 8)
+    val want = docs.select("doc_id", "text").orderBy("doc_id").collect()
+      .map { r =>
+        val e = kernel.encode(
+          org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(1)))
+        (r.getLong(0), e.getUTF8String(0).toString, e.getInt(2).toLong,
+          e.getLong(1))
+      }
+    assert(got.nonEmpty)
+    assert(got.toSeq == want.toSeq)
   }
 
   test("train-then-apply over real docs: deterministic, pieces reassemble words") {
