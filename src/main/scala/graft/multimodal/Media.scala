@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.util.Barriers.{BarrierOps, FirewallOps}
+import graft.util.Barriers.FirewallOps
 
 /** Multimodal columns: image/audio/video payloads as opaque binary with
   * typed metadata, processed per-partition.
@@ -1482,7 +1482,7 @@ object Media {
   @inline private def gray(rgb: Int): Double =
     0.299 * ((rgb >> 16) & 0xff) + 0.587 * ((rgb >> 8) & 0xff) + 0.114 * (rgb & 0xff)
 
-  /** Per-thread destination cache for [[resample]], keyed by (w, h).
+  /** Per-thread destination cache for [[withResampled]], keyed by (w, h).
     * Creating a BufferedImage surface takes the GLOBAL
     * `sun.java2d.Disposer` lock (`BufImgSurfaceData.initRaster` ->
     * `Disposer.addRecord`) — at 32 concurrent tasks the image kernels
@@ -1493,22 +1493,35 @@ object Media {
     * zero-filled before every reuse, which is exactly a fresh
     * TYPE_INT_RGB image's state (opaque black), so the rendered
     * pixels — including alpha-source blends — are bit-identical to
-    * the old allocate-per-call path. */
+    * the old allocate-per-call path.
+    *
+    * Bounded: an access-order LRU of at most [[ResampleDstMax]]
+    * destinations per thread, so a caller resizing to many distinct
+    * sizes holds a few buffers per executor thread, not one per size
+    * ever seen. The hot hash/embed paths use one or two sizes. */
+  private val ResampleDstMax = 4
   private val resampleDst =
-    new ThreadLocal[java.util.HashMap[java.lang.Long, java.awt.image.BufferedImage]] {
-      override def initialValue():
-          java.util.HashMap[java.lang.Long, java.awt.image.BufferedImage] =
-        new java.util.HashMap()
+    new ThreadLocal[java.util.LinkedHashMap[java.lang.Long, java.awt.image.BufferedImage]] {
+      override def initialValue()
+          : java.util.LinkedHashMap[java.lang.Long, java.awt.image.BufferedImage] =
+        new java.util.LinkedHashMap[java.lang.Long, java.awt.image.BufferedImage](
+            8, 0.75f, true) {
+          override def removeEldestEntry(e: java.util.Map.Entry[
+              java.lang.Long, java.awt.image.BufferedImage]): Boolean =
+            size() > ResampleDstMax
+        }
     }
 
+  /** Destinations the calling thread currently holds (eviction spec). */
+  private[multimodal] def resampleDstSize: Int = resampleDst.get().size
+
   /** Headless resample to w x h via Graphics2D (BufferedImage targets
-    * never need a display). The returned image is the calling thread's
-    * REUSED per-size destination ([[resampleDst]]): it is valid only
-    * until the thread's next `resample` call with the same (w, h) —
-    * every caller consumes the pixels (hash/patch/PNG-encode) before
-    * its row function returns, which is the contract. */
-  private def resample(img: java.awt.image.BufferedImage, w: Int, h: Int)
-      : java.awt.image.BufferedImage = {
+    * never need a display), handed to `use`. The image is the calling
+    * thread's REUSED per-size destination ([[resampleDst]]), valid only
+    * inside `use`: consume the pixels (hash/patch/PNG-encode) there and
+    * return a value that does not alias it. */
+  private[multimodal] def withResampled[A](img: java.awt.image.BufferedImage, w: Int,
+      h: Int)(use: java.awt.image.BufferedImage => A): A = {
     val key = java.lang.Long.valueOf((w.toLong << 32) | (h.toLong & 0xffffffffL))
     val cache = resampleDst.get()
     var out = cache.get(key)
@@ -1525,7 +1538,7 @@ object Media {
       java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
     g.drawImage(img, 0, 0, w, h, null)
     g.dispose()
-    out
+    use(out)
   }
 
   /** Feature-extraction stage: fixed-size embedding per payload, REAL
@@ -1559,9 +1572,10 @@ object Media {
         val id = r.getLong(0)
         val payload = r.getAs[Array[Byte]](1)
         val fromImage = decodeImage(payload).map { img =>
-          val p = resample(img, side, side)
-          Array.tabulate(dim) { i =>
-            (gray(p.getRGB(i % side, (i / side) % side)) / 255.0).toFloat
+          withResampled(img, side, side) { p =>
+            Array.tabulate(dim) { i =>
+              (gray(p.getRGB(i % side, (i / side) % side)) / 255.0).toFloat
+            }
           }
         }
         def fromAudio = pcmSamples(payload).filter(_.nonEmpty).map { s =>
@@ -1851,7 +1865,8 @@ object Media {
         val id = r.getLong(0)
         val png = decodeImage(r.getAs[Array[Byte]](1)).map { img =>
           val bos = new java.io.ByteArrayOutputStream()
-          javax.imageio.ImageIO.write(resample(img, width, height), "png", bos)
+          withResampled(img, width, height)(
+            javax.imageio.ImageIO.write(_, "png", bos))
           bos.toByteArray
         }
         Row(id, png.orNull, width, height)
@@ -1874,8 +1889,8 @@ object Media {
       rows.map { r =>
         val id = r.getLong(0)
         val h = decodeImage(r.getAs[Array[Byte]](1)).map { img =>
-          val p = resample(img, 8, 8)
-          val g = Array.tabulate(64)(i => gray(p.getRGB(i % 8, i / 8)))
+          val g = withResampled(img, 8, 8)(p =>
+            Array.tabulate(64)(i => gray(p.getRGB(i % 8, i / 8))))
           val mean = g.sum / 64.0
           g.zipWithIndex.foldLeft(0L) {
             case (acc, (v, i)) => if (v > mean) acc | (1L << i) else acc
@@ -1918,8 +1933,8 @@ object Media {
       rows.map { r =>
         val id = r.getLong(0)
         val h = decodeImage(r.getAs[Array[Byte]](1)).map { img =>
-          val p = resample(img, 8, 8)
-          val g = Array.tabulate(64)(i => math.round(gray(p.getRGB(i % 8, i / 8))))
+          val g = withResampled(img, 8, 8)(p =>
+            Array.tabulate(64)(i => math.round(gray(p.getRGB(i % 8, i / 8)))))
           val dct = Array.ofDim[Long](64)
           var u = 0
           while (u < 8) {

@@ -70,11 +70,8 @@ object LinkRank {
       s"dampingPct must be in [0, 100], got $dampingPct")
     require(convergeDeltaMicro.forall(_ >= 0),
       s"convergeDeltaMicro must be >= 0, got $convergeDeltaMicro")
-    // barrierFirewall, not a plain cache: every iteration joins `e`
-    // against `out` (an aggregate OVER e) — exactly the self-join
-    // shape whose analyzer dedup rewrite silently misses a lazy cache
-    // entry (the r14 kernel lesson); the firewall re-roots both at
-    // their materialized leaves so the edge scan runs ONCE, not once
+    // barriers: every iteration joins `e` against `out` (an aggregate
+    // OVER e), so materializing both runs the edge scan ONCE, not once
     // per iteration side
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).barrierFirewall()
@@ -149,8 +146,8 @@ object LinkRank {
     * each triangle forms exactly ONE wedge) equi-join the oriented
     * edge set once to close; per-vertex counts are a map-side
     * combinable union+count. Every join is an equi-join; the
-    * normalized edge and orientation frames are barrier-firewalled
-    * (three self-join-shaped consumers — the r14 kernel lesson). */
+    * normalized edge and orientation frames are barriers (three
+    * consumers each). */
   def triangleCounts(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
     val und = edges.select(

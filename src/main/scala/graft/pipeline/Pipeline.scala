@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.text.TextOps
-import graft.util.Barriers.{BarrierOps, FirewallOps}
+import graft.util.Barriers.FirewallOps
 
 /** The composed crawl-to-training-shards pipeline — the end-to-end
   * product a training-data team actually runs, assembled from the
@@ -23,23 +23,21 @@ import graft.util.Barriers.{BarrierOps, FirewallOps}
   * discipline here is explicit and ID-SCALE ONLY — the corpus text is
   * never materialized by this operator:
   *
-  *   - the curated id set is cached once (ids only); every
+  *   - the curated id set is materialized once (ids only); every
   *     downstream stage re-reaches the corpus text through a narrow
   *     semi join against it rather than re-running the LSH cascade;
   *   - the budget survivor set (bounded at ~budgetTokens/source by
-  *     construction) is cached because both the packer and
+  *     construction) is materialized because both the packer and
   *     the splitter consume it;
   *
-  * Barriers are `cache()` (MEMORY_AND_DISK, lazy), not
+  * Barriers are [[graft.util.Barriers.firewall]] leaves, not
   * `localCheckpoint()`: a checkpoint truncates the plan to a stats-less
   * LogicalRDD, which blinds every downstream join strategy decision
   * (the r12 A/B: the composed sf0.1 pipeline ran ~35% faster on cached
-  * barriers purely from recovered broadcast/plan quality and merged
-  * job scheduling), while a cached frame keeps lineage — so executor
-  * loss or memory-pressure eviction recomputes instead of failing, and
-  * size estimates keep flowing. The blocks live in the CacheManager
-  * until the session drops them; every barrier (here and in every
-  * caching operator) is registered in [[graft.util.Barriers]], so a
+  * barriers purely from recovered broadcast/plan quality), while a
+  * firewall keeps its materialized stats and its lineage — so executor
+  * loss or memory-pressure eviction recomputes instead of failing.
+  * Every barrier is registered in [[graft.util.Barriers]], so a
   * long-lived service running many pipelines per session calls
   * `Barriers.releaseAll()` between runs — or wraps each run in
   * `Barriers.scoped { ... }` — to return the CacheManager to its
@@ -113,7 +111,7 @@ object Pipeline {
     val budgeted = TextOps.tokenBudgetSample(clean, idCol, textCol,
         sourceCol, budgetTokens)
       .select(col(sourceCol), col(idCol), col("n_tokens"))
-      .barrierCache()
+      .barrierFirewall()
     // skew-proof prefix sum, not a per-source window (the r15
     // packSequences discipline) — budget survivors are id-scale, but
     // a mega-source would still serialize its window task
@@ -561,28 +559,16 @@ object Pipeline {
     // (curateCorpus references its input four times; decontaminate,
     // budget and split re-reach it again) re-runs the whole WARC
     // record walk + 17-stage regex cascade per reference: measured
-    // 22.5 s -> ~7 s for the sf0.1 bench query. The barrier is the
-    // extracted TEXT (what the real pipeline persists), never the
-    // raw WARC bytes.
+    // 22.5 s -> ~7 s for the sf0.1 bench query, and populating it once
+    // up front is cheaper than spilling it to real parquet (12.07 vs
+    // 14.3 s). The barrier is the extracted TEXT (what the real
+    // pipeline persists), never the raw WARC bytes — one of the two
+    // measured exceptions to the narrow-barrier rule
+    // ([[graft.util.Barriers.firewall]]).
     val corpus = graft.sources.Warc.toCorpus(warc, warcIdCol, payloadCol)
       .select(col(warcIdCol).as(idCol), col("text").as(textCol))
       .join(sources.select(col(idCol), col(sourceCol)), Seq(idCol))
       .barrierFirewall()
-    // EAGER populate — the one deliberate exception to the lazy-barrier
-    // default (r12's adjudication kept barriers lazy because eager
-    // count jobs taxed EVERY operator invocation registry-wide). This
-    // single frame guards the most expensive lineage in the library
-    // (WARC record walk + HTML extract + 17-stage regex normalize),
-    // and its first consumer wave is wide: curateCorpus references the
-    // corpus four times and the scrub/decontaminate/budget/split legs
-    // re-reach it — under a lazy cache those same-wave consumers race
-    // to populate and re-run the crawl chain concurrently. Measured
-    // (graft.tools.PipelineBudget E, sf0.1, min-of-two): 18.2-18.8 s lazy ->
-    // 12.07 s eager, cheaper than spilling the corpus to real parquet
-    // (14.3 s) — one count job on a frame every consumer needs anyway;
-    // since r14 the populate lives inside barrierFirewall, which also
-    // re-roots the frame so the curated-ids semi-join back onto the
-    // corpus (a self-join) cannot miss the cache.
     corpusToShards(corpus, bench, idCol, textCol, sourceCol, minJaccard,
       minTokens, maxTokens, maxTopWordFrac, keepLangs, decontamShingle,
       budgetTokens, packBudget, testFrac, scrubPii)

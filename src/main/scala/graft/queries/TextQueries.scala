@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.text.TextOps
-import graft.util.Barriers.{BarrierOps, FirewallOps}
+import graft.util.Barriers.FirewallOps
 
 /** LLM-data-pipeline operators over `documents` and `embeddings`:
   * exact/near dedup, text statistics, language ID, similarity search.
@@ -89,11 +89,9 @@ object TextQueries {
     "t12_jaccard_verify" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val sigs = TextOps.minhashSignature(docs, "doc_id", "text", k = 8)
-      // FIREWALLED (r18, was a plain barrierCache): the candidate
-      // kernel joins bux's rows leg against bux's own stats leg — the
-      // self-join shape whose analyzer dedup rewrite misses a plain
-      // cache entry (r14 kernel note), so the minhash chain re-derived
-      // per kernel leg. (The t119 note above applies here too: sharing
+      // barrier: the candidate kernel reads bux twice (rows leg, stats
+      // leg), so the minhash chain would re-derive per kernel leg.
+      // (The t119 note above applies here too: sharing
       // one distinct-shingle frame across the two legs was A/B'd r18
       // and measured slower; the two-pass shape stands.)
       val bux = TextOps.lshBuckets(sigs, "doc_id", k = 8, rows = 2)
@@ -152,9 +150,8 @@ object TextQueries {
     "t14_near_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val sigs = TextOps.minhashSignature(docs, "doc_id", "text", k = 8)
-      // FIREWALLED (r18): the candidate kernel self-joins bux's legs —
-      // a plain cache entry missed there and the minhash chain
-      // re-derived per leg (r14 kernel note; `graft.tools.QueryStats jobs`)
+      // barrier: the candidate kernel reads bux twice, so the minhash
+      // chain would re-derive per leg (`graft.tools.QueryStats jobs`)
       val bux = TextOps.lshBuckets(sigs, "doc_id", k = 8, rows = 2)
         .barrierFirewall()
       val pairs = TextOps.lshCandidatePairs(bux, "doc_id")
@@ -171,7 +168,7 @@ object TextQueries {
     "t150_near_dedup_distributed" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val sigs = TextOps.minhashSignature(docs, "doc_id", "text", k = 8)
-      // FIREWALLED (r18): same kernel self-join shape as t14
+      // barrier: same two-leg kernel read as t14
       val bux = TextOps.lshBuckets(sigs, "doc_id", k = 8, rows = 2)
         .barrierFirewall()
       val pairs = TextOps.lshCandidatePairs(bux, "doc_id")
@@ -661,9 +658,8 @@ object TextQueries {
     // t103's KMV — k bucket-minima per source, match fraction over
     // shared buckets estimates the shingle-set Jaccard
     "t105_source_overlap_registers" -> ((s, dir) => {
-      // FIREWALLED (r18): minhashRegisterOverlap's a/b legs join EACH
-      // OTHER — the self-join shape a plain cache entry misses (r14
-      // kernel note); the registers are |sources| x k rows, id-scale
+      // barrier: minhashRegisterOverlap's a/b legs both read the
+      // registers; they are |sources| x k rows, id-scale
       val regs = TextOps.minhashRegisters(
         t(s, dir, "documents").select(col("source"),
           explode(TextOps.shinglesOf(col("text"), 3)).as("sh")),
@@ -713,10 +709,8 @@ object TextQueries {
     "t100_near_dedup_best" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val sigs = TextOps.minhashSignature(docs, "doc_id", "text", k = 8)
-      // FIREWALLED (r18): the candidate kernel self-joins bux's legs —
-      // the shape a plain cache entry misses (r14 kernel note; the
-      // re-derivation happens in the kernel populate at plan-build
-      // time, measured on t14's identical chain: taskTime 47 -> 26 s)
+      // barrier: the candidate kernel reads bux twice (measured on
+      // t14's identical chain: taskTime 47 -> 26 s)
       val bux = TextOps.lshBuckets(sigs, "doc_id", k = 8, rows = 2)
         .barrierFirewall()
       val pairs = TextOps.lshCandidatePairs(bux, "doc_id")
@@ -764,12 +758,10 @@ object TextQueries {
     // the k smallest hashes of each pair's sketch union — the
     // "mirrored dump" detector with corpus-size-independent state
     "t103_kmv_overlap" -> ((s, dir) => {
-      // FIREWALLED, not plain-cached (r18): kmvSourceOverlap's a/b
-      // legs join EACH OTHER over frames derived from the sketch — the
-      // self-join shape whose analyzer dedup rewrite misses a plain
-      // cache entry (r14 kernel note; the before-plan re-derived the
-      // corpus-scale sketch lineage per leg, 7 parquet scans in one
-      // plan). The sketch is |sources| x k rows — id-scale.
+      // barrier: kmvSourceOverlap's a/b legs join each other over
+      // frames derived from the sketch; unmaterialized, the plan
+      // re-derived the corpus-scale sketch lineage per leg (7 parquet
+      // scans in one plan). The sketch is |sources| x k rows — id-scale.
       val sk = TextOps.kmvSketch(t(s, dir, "documents"), "source", "text",
         k = 256).barrierFirewall()
       TextOps.kmvSourceOverlap(sk, "source", k = 256)
@@ -1123,10 +1115,10 @@ object TextQueries {
       val docs = t(s, dir, "documents")
       val tok = graft.util.FanOut(docs).select(col("source"),
         explode(TextOps.tokens(col("text"))).as("t"))
-      // cached: the stats aggregate and the rank window both read the
+      // barrier: the stats aggregate and the rank window both read the
       // vocabulary-sized counts — one corpus scan, not two
       val counts = tok.groupBy("source", "t").agg(count(lit(1)).as("c"))
-        .barrierCache()
+        .barrierFirewall()
       val ranked = counts.withColumn("rk",
         row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy("source").orderBy(desc("c"), col("t"))))
@@ -1851,11 +1843,10 @@ object TextQueries {
       val cents = emb.filter(col("vec_id") < 4)
       val qs = emb.filter(col("vec_id") >= 4 && col("vec_id") < 7)
       val indexed = graft.sim.Similarity.ivfAssign(emb, cents, "vec_id", "embedding")
-      // FIREWALLED (r18, was a plain barrierCache): the encoder, the
-      // ADC search and the rerank legs join frames derived from the
-      // residuals against each other — the self-join shape a plain
-      // cache entry misses (the before-plan still carried 11-14 raw
-      // embedding scans), re-running ivfAssign + residuals per leg
+      // barrier: the encoder, the ADC search and the rerank legs join
+      // frames derived from the residuals against each other;
+      // unmaterialized, the plan carried 11-14 raw embedding scans,
+      // re-running ivfAssign + residuals per leg
       val res = graft.sim.Similarity.ivfResiduals(indexed, cents,
         "vec_id", "embedding").barrierFirewall()
       val cb = graft.sim.Similarity.pqCodebook(
@@ -1877,11 +1868,10 @@ object TextQueries {
       val cents = emb.filter(col("vec_id") < 4)
       val qs = emb.filter(col("vec_id") >= 4 && col("vec_id") < 7)
       val indexed = graft.sim.Similarity.ivfAssign(emb, cents, "vec_id", "embedding")
-      // FIREWALLED (r18, was a plain barrierCache): the encoder, the
-      // ADC search and the rerank legs join frames derived from the
-      // residuals against each other — the self-join shape a plain
-      // cache entry misses (the before-plan still carried 11-14 raw
-      // embedding scans), re-running ivfAssign + residuals per leg
+      // barrier: the encoder, the ADC search and the rerank legs join
+      // frames derived from the residuals against each other;
+      // unmaterialized, the plan carried 11-14 raw embedding scans,
+      // re-running ivfAssign + residuals per leg
       val res = graft.sim.Similarity.ivfResiduals(indexed, cents,
         "vec_id", "embedding").barrierFirewall()
       val cb = graft.sim.Similarity.pqCodebook(

@@ -5,7 +5,7 @@ import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.util.Barriers.BarrierOps
+import graft.util.Barriers.FirewallOps
 
 /** In-engine text classification: a hashed-bigram logistic regression
   * — the fastText-style quality/domain classifier a curation pipeline
@@ -85,7 +85,7 @@ object Classifier {
     require(dim > 0 && iterations > 0 && lr > 0,
       s"need dim/iterations/lr > 0, got $dim/$iterations/$lr")
     val lab = labeled.select(col(idCol), col(labelCol).cast("double").as("y"))
-      .barrierCache()
+      .barrierFirewall()
     // ONE aggregate job for the size + distinct-id checks (was two).
     // distinct().count() counted a null id as one distinct value;
     // count_distinct ignores nulls, so add the null bucket back.
@@ -102,7 +102,7 @@ object Classifier {
     require(nd == nl,
       s"labeled frame must carry distinct $idCol values: $nl rows but " +
         s"$nd distinct ids — dedup (or re-key) the labeled set first")
-    val feats = features(labeled, idCol, textCol, dim).barrierCache()
+    val feats = features(labeled, idCol, textCol, dim).barrierFirewall()
     trainLoop(feats, lab, idCol, nl, dim, iterations, lr)
   }
 
@@ -244,7 +244,7 @@ object Classifier {
     import spark.implicits._
     val labAll = labeled
       .select(col(idCol), col(labelCol).cast("string").as("__cls"))
-      .barrierCache()
+      .barrierFirewall()
     // ONE aggregate job for the size + distinct-id contract checks
     // (was two separate count jobs); the null-id bucket is added back
     // below because count_distinct ignores nulls where distinct() did not.
@@ -263,7 +263,7 @@ object Classifier {
       .collect().sorted.toSeq
     require(classes.size >= 2,
       s"need >= 2 distinct labels, got ${classes.size}")
-    val feats = features(labeled, idCol, textCol, dim).barrierCache()
+    val feats = features(labeled, idCol, textCol, dim).barrierFirewall()
     // Scale-adaptive shared fast path (same bound and bit-identical
     // models as [[trainLoop]]'s local branch): below maxLocalRows the
     // feature table and the labels are collected ONCE and all k

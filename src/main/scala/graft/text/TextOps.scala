@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
-import graft.util.Barriers.{BarrierOps, FirewallOps}
+import graft.util.Barriers.FirewallOps
 
 /** Text-analysis and dedup operators for large-scale document pipelines.
   *
@@ -196,23 +196,11 @@ object TextOps {
     val starPairs = en
       .filter(col("__bn") > hotBucketCap && col(idCol) =!= col("__bmin"))
       .select(col("__bmin").as("a_id"), col(idCol).as("b_id"))
-    // EAGER populate + LINEAGE FIREWALL (measured in BASELINE.md's r14
-    // kernel note). Two failure modes this closes:
-    // (1) the pair frame's first consumer wave is always wide (the
-    //     Jaccard verify alone reads it three times) and this plan
-    //     scans `bux` twice, so a lazily-populated barrier makes the
-    //     readers RACE to recompute the upstream minhash chain;
-    // (2) worse, the verify SELF-JOINS the corpus against ids derived
-    //     from these pairs, and the analyzer's self-join
-    //     deduplication rewrites the pair subtree so it no longer
-    //     `sameResult`-matches the CacheManager entry — the "cached"
-    //     barrier silently re-derives per consumer (measured: 13 raw
-    //     re-derivations of the minhash chain in ONE verify plan).
-    // The firewall populates the cache once and re-roots the returned
-    // frame at the materialized RDD — a LEAF no analyzer rewrite can
-    // miss — while the Barriers ledger still owns the storage
-    // (post-release reads recompute through the preserved lineage,
-    // the documented safe-but-slow contract).
+    // Barrier (BASELINE.md's r14 kernel note): the pair frame's first
+    // consumer wave is always wide (the Jaccard verify alone reads it
+    // three times, and self-joins the corpus against ids derived from
+    // these pairs) and this plan scans `bux` twice, so every reader
+    // would otherwise recompute the upstream minhash chain.
     //
     // `materialize = false` (r18) is for callers that consume the pair
     // frame LINEARLY — exactly once, inside a chain that never joins
@@ -220,8 +208,7 @@ object TextOps {
     // cheaper frame further downstream themselves
     // ([[graft.multimodal.Media.bandedHammingPairs]] firewalls the
     // Hamming-VERIFIED pairs instead, fusing the kernel populate and
-    // the verify pass into one execution). The self-join trap above
-    // does not apply to a frame read once.
+    // the verify pass into one execution).
     val out = smallPairs.union(starPairs).distinct()
     if (materialize) out.barrierFirewall() else out
   }
@@ -254,12 +241,9 @@ object TextOps {
   def dedupAgainstCorpus(newDocs: DataFrame, indexBuckets: DataFrame,
       idCol: String, textCol: String, k: Int = 8, rows: Int = 2,
       shingleWords: Int = 3): DataFrame = {
-    // Both frames are FIREWALLED, not just cached: `fresh` is bux
-    // anti-joined against clash-derived-FROM-bux, and `survivors` is
-    // newDocs (bux's own leaf) anti-joined against clash — exactly the
-    // self-join shapes whose analyzer dedup rewrite misses a plain
-    // cache entry (CacheAudit r14: this operator re-derived the
-    // minhash chain 3x per run under barrierCache).
+    // Both frames are barriers: `fresh` is bux anti-joined against
+    // clash-derived-FROM-bux, and `survivors` is newDocs (bux's own
+    // leaf) anti-joined against clash, so each is read twice.
     val bux = lshBuckets(
       minhashSignature(newDocs, idCol, textCol, k, shingleWords),
       idCol, k, rows).barrierFirewall()
@@ -311,15 +295,10 @@ object TextOps {
     // smaller than the corpus, and tokenize+shingle+distinct over
     // non-candidates is pure waste (it was the most expensive kernel of
     // the verification stage). The shingle frame is referenced three
-    // times below (sizes, a-side, b-side) — and the a/b sides JOIN EACH
-    // OTHER, the self-join shape whose analyzer dedup rewrite misses a
-    // plain cache entry (BASELINE.md r14 kernel note), so it is
-    // FIREWALLED: the pre-r14 "recomputes pipeline in parallel and beat
-    // a materialization barrier" A/B was measured under that broken
-    // substitution and no longer holds (re-measured r14 at sf0.1: t119
-    // 3.59 -> 1.82 s; t12, which reads the chain once, pays +0.16 s of
-    // populate — the accepted single-read tax). Candidate-bounded
-    // token scale.
+    // times below (sizes, a-side, b-side), so it is a barrier (measured
+    // r14 at sf0.1: t119 3.59 -> 1.82 s; t12, which reads the chain
+    // once, pays +0.16 s of populate — the accepted single-read tax).
+    // Candidate-bounded token scale.
     val ids = pairs.select(col("a_id").as(idCol))
       .union(pairs.select(col("b_id").as(idCol))).distinct()
     val docs = df.join(ids, Seq(idCol), "left_semi")
@@ -518,9 +497,7 @@ object TextOps {
     // (localCheckpoint / LocalRelation), so the recompute is one
     // source scan + a broadcast join per consumer — measured CHEAPER
     // than firewalling the payload-scale frame (GroupSkew: the eager
-    // populate added a full materialization pass), and the r14
-    // cache-miss trap needs a lazy cache entry to miss, which a leaf
-    // plan never is.
+    // populate added a full materialization pass).
     //
     // Winner selection is max-then-min-id, both map-side-combinable
     // aggregates, and EXACT in the score's own type (no double cast):
@@ -561,11 +538,9 @@ object TextOps {
     * corpus, no self-join. */
   def ngramNovelty(df: DataFrame, idCol: String, textCol: String,
       shingleWords: Int = 3): DataFrame = {
-    // FIREWALLED: the per-doc join consumes sh JOINED AGAINST the
-    // first-occurrence aggregate derived from sh itself — the
-    // self-join shape a plain cache entry misses (BASELINE.md r14
-    // kernel note); without the firewall the corpus is scanned and
-    // shingle-aggregated twice
+    // barrier: the per-doc join consumes sh joined against the
+    // first-occurrence aggregate derived from sh itself; without it
+    // the corpus is scanned and shingle-aggregated twice
     val sh = explodedShingles(df, idCol, textCol, shingleWords).distinct()
       .barrierFirewall()
     val first = sh.groupBy(col("sh"))
@@ -730,12 +705,9 @@ object TextOps {
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
     // One signature row per document (tiny), but referenced four times
-    // below (band self-join x2, verify joins x2) — and those references
-    // JOIN EACH OTHER (the kernel's stats/rows legs, the sa/sb verify
-    // sides), the self-join shape whose analyzer dedup rewrite misses a
-    // plain cache entry (r14 kernel note). FIREWALLED (r18): measured
-    // under barrierCache, the full simhash64 tokenize+aggregate chain
-    // re-derived per reference (t21 taskTime 47 s for one ~13 s chain).
+    // below (band self-join x2, verify joins x2); unmaterialized, the
+    // full simhash64 tokenize+aggregate chain re-derived per reference
+    // (t21 taskTime 47 s for one ~13 s chain).
     val sigs = simhash64(df, idCol, textCol).select(col(idCol), col("simhash"))
       .barrierFirewall()
     // (band, 16-bit value) flattened to one injective bucket key so the
@@ -792,31 +764,17 @@ object TextOps {
     // 9.1s warm — because cand/verified re-derive the whole LSH lineage
     // per consumer. The barriers are load-bearing even at 5k docs; do
     // not make them size-conditional.)
-    // Barrier mechanics, r14 revision: the SELF-JOIN-consumed frames
-    // (exactLosers, allSh, bux, the kernel's pairs) are FIREWALLED —
-    // cache + eager populate + InMemoryRelation-leaf re-root
-    // ([[graft.util.Barriers.firewall]]) — because the analyzer's
-    // self-join deduplication rewrites those consumers' subtrees so a
-    // plain lazy cache entry never matched: each consumer silently
-    // re-derived the whole chain (BASELINE.md r14 kernel note; the
-    // pre-r14 lazy-vs-eager A/Bs recorded here compared two REGIMES
-    // THAT BOTH MISSED and are superseded — re-measured r14, the
-    // firewalled chain cut every curation-composing bench query, t94
-    // 19.9 -> 13.9 s, net -24% across the 237-query registry in a
-    // same-window A/B). Unlike the r12 localCheckpoint era this keeps
-    // stats (the relation knows its materialized size, so id-scale
-    // barriers still broadcast) and keeps recompute-on-release safety.
-    // Frames consumed through substitutable plans keep plain lazy
-    // cache(); iterative loops (CC labels, BPE training) still
+    // Every barrier here is a [[graft.util.Barriers.firewall]] (r14:
+    // t94 19.9 -> 13.9 s, net -24% across the 237-query registry in a
+    // same-window A/B); iterative loops (CC labels, BPE training) still
     // localCheckpoint — there lineage TRUNCATION is the point.
     val groups = df.groupBy(md5(col(textCol)).as("__h"))
       .agg(min(col(idCol)).as("__canon"), count(lit(1)).as("__n"))
       .filter(col("__n") > 1)
-    // FIREWALLED (id-scale): `exact` anti-joins df against losers
-    // derived FROM df — the self-join shape a plain cache entry
-    // misses (BASELINE.md r14 kernel note) — and `exact` itself is
-    // re-read by the shingle, survivor and quality legs, each of
-    // which would otherwise re-run the exact-dup double aggregation.
+    // id-scale barrier: `exact` anti-joins df against losers derived
+    // FROM df, and `exact` itself is re-read by the shingle, survivor
+    // and quality legs, each of which would otherwise re-run the
+    // exact-dup double aggregation.
     val exactLosers = df.select(col(idCol), md5(col(textCol)).as("__h"))
       .join(groups, "__h")
       .filter(col(idCol) =!= col("__canon"))
@@ -833,16 +791,14 @@ object TextOps {
     // handful of partitions — but the minhash stage multiplies work per
     // row (k/2 md5s + k base-16 parses), so fan it back out to the full
     // core count before the aggregation.
-    // FIREWALLED (token-scale — the one deliberate exception to the
-    // id-scale-only guideline, A/B'd at sf0.1): the Jaccard-verify leg
-    // semi-joins allSh against candIds derived from allSh's own
-    // minhash chain, so a plain cache entry missed there and the
-    // corpus re-tokenized per read (CacheAudit r14).
+    // token-scale barrier — the deliberate exception to the
+    // id-scale-only rule, A/B'd at sf0.1: the minhash and Jaccard-verify
+    // legs both read allSh, which would otherwise re-tokenize the
+    // corpus per read.
     val allSh = explodedShingles(exact, idCol, textCol, 3).distinct()
       .barrierFirewall()
     val sigs = minhashFromShingles(fanOut(allSh), idCol, k = 8)
-    // firewalled: the capped kernel joins bux's rows leg against
-    // bux's own stats leg — self-join again
+    // the capped kernel reads bux twice (rows leg, stats leg)
     val bux = lshBuckets(sigs, idCol, k = 8, rows = 2).barrierFirewall()
     // the kernel output arrives FIREWALLED (materialized RDD leaf) —
     // a second cache here would store the id-pair rows twice
@@ -853,7 +809,7 @@ object TextOps {
         allSh.join(candIds, Seq(idCol), "left_semi"), idCol, cand)
       .filter(col("jaccard") >= minJaccard)
       .select("a_id", "b_id")
-      .barrierCache() // referenced by clusters across CC iterations
+      .barrierFirewall() // referenced by clusters across CC iterations
     val deduped = dropNearDuplicates(exact, idCol, verified)
     // The gate is a NARROW single-pass filter (r17): every quantity it
     // reads — token count, top-word fraction, language prediction — is
@@ -2535,12 +2491,10 @@ object TextOps {
   def lmScore(reference: DataFrame, target: DataFrame, idCol: String,
       textCol: String, alpha: Double = 0.1): DataFrame = {
     require(alpha > 0, s"alpha must be positive, got $alpha")
-    // FIREWALLED (r18, was a plain barrierCache): both n-gram count
-    // tables read the reference shingles AND the scoring plan joins
-    // them against each other — the self-join shape whose analyzer
-    // dedup rewrite misses a plain cache entry (t40's before-plan
-    // carried 7 raw parquet scans), re-tokenizing the reference per
-    // count table.
+    // barrier: both n-gram count tables read the reference shingles
+    // and the scoring plan joins them against each other; unmaterialized,
+    // t40's plan carried 7 raw parquet scans, re-tokenizing the
+    // reference per count table.
     val refSh = explodedShingles(reference, idCol, textCol, 2)
       .barrierFirewall()
     val biCounts = refSh.groupBy(col("sh")).agg(count(lit(1)).as("__cb"))
@@ -2987,12 +2941,10 @@ object TextOps {
     require(k > 0, s"k must be positive, got $k")
     require(maxDfRatio > 0 && maxDfRatio <= 1.0,
       s"maxDfRatio must be in (0, 1], got $maxDfRatio")
-    // FIREWALLED (r18, was a plain barrierCache): dl, dfreq AND the
-    // contrib join all read the term frequencies and JOIN EACH OTHER
-    // in the scoring plan — the self-join shape whose analyzer dedup
-    // rewrite misses a plain cache entry (r14 kernel note; t49's
-    // before-plan carried 9 raw parquet scans), re-tokenizing the
-    // corpus per leg.
+    // barrier: dl, dfreq AND the contrib join all read the term
+    // frequencies and join each other in the scoring plan; unmaterialized,
+    // t49's plan carried 9 raw parquet scans, re-tokenizing the corpus
+    // per leg.
     val tf = fanOut(docs)
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
       .groupBy(col(idCol), col("term"))
@@ -3106,11 +3058,10 @@ object TextOps {
     val scores = lmScore(reference, target, idCol, textCol, alpha)
       .select(col(idCol), col("n_bigrams"),
         round(col("lm_bits") * lit(1e6), 0).cast("long").as("__micro"))
-    // FIREWALLED (r18, was a plain barrierCache): the final plan joins
-    // the percentile cuts BACK against the scored frame they derive
-    // from — the self-join shape a plain cache entry misses (t68's
-    // before-plan carried 14 raw parquet scans), re-running the whole
-    // lmScore chain per leg.
+    // barrier: the final plan joins the percentile cuts BACK against
+    // the scored frame they derive from; unmaterialized, t68's plan
+    // carried 14 raw parquet scans, re-running the whole lmScore chain
+    // per leg.
     val withSrc = scores.join(
       target.select(col(idCol), col(sourceCol)), Seq(idCol))
       .barrierFirewall()
@@ -3477,7 +3428,11 @@ object TextOps {
     * scanned and re-tokenized the corpus four times). */
   def tokenDriftFrom(registers: DataFrame, sourceCol: String,
       buckets: Int = 64): DataFrame = {
-    val srcB = registers.localCheckpoint(eager = false)
+    // a barrier, not a lazy localCheckpoint: the four consumers below
+    // run as concurrent adaptive stages, and concurrent jobs over a
+    // not-yet-checkpointed RDD deadlock in Spark's checkpoint locking
+    // (DocStreamsSpec hung in RDD.markCheckpointed vs getCacheLocs)
+    val srcB = registers.barrierFirewall()
     val srcN = srcB.groupBy(sourceCol).agg(sum("c").as("n"))
     val allB = srcB.groupBy("b").agg(sum("c").as("cAll"))
     val allN = allB.agg(sum("cAll").as("nAll"))

@@ -3,18 +3,16 @@ package graft.tools
 import graft.SparkEntry
 import graft.util.Barriers
 
-/** Registry-wide audit for the SELF-JOIN CACHE-MISS class the r14
-  * kernel fix exposed (BASELINE.md r14 note): an operator registers a
-  * barrier (cache) but a consumer's plan, rewritten by the analyzer's
-  * self-join deduplication, no longer `sameResult`-matches the
-  * CacheManager entry — the barrier silently re-derives its lineage
-  * per consumer. Signal per query: barriers registered while building
-  * + executing the plan vs InMemoryTableScan occurrences in the
-  * executed plan. `barriers > 0 && imts == 0` means EVERY registered
-  * barrier misses in the final plan; `imts < barriers` flags partial
-  * misses worth a look (some are benign: a barrier consumed entirely
-  * inside an earlier job, e.g. a collect-bounded CC loop, never shows
-  * in the FINAL plan).
+/** Registry-wide barrier audit: does every barrier a query registers
+  * show up in its final plan, or was its lineage re-derived around it?
+  * Signal per query: barriers registered while building + executing
+  * the plan vs `graft_firewall` leaves (the tag
+  * [[org.apache.spark.sql.graftbridge.Bridge.cachedLeaf]] puts on every
+  * barrier) in the executed plan. `barriers > 0 && firewalls == 0`
+  * means no registered barrier reaches the final plan;
+  * `firewalls < barriers` flags partial misses worth a look (some are
+  * benign: a barrier consumed entirely inside an earlier job, e.g. a
+  * collect-bounded CC loop, never shows in the FINAL plan).
   *
   * Usage: runMain graft.tools.CacheAudit [sfDir] [prefix,...]
   */
@@ -33,23 +31,18 @@ object CacheAudit {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val plan = df.queryExecution.executedPlan.toString
         val barriers = Barriers.ledgerSize - before
-        val imts = "InMemoryTableScan".r.findAllIn(plan).length
         // firewalled barriers are TAGGED (Bridge.cachedLeaf names the
         // RDD), so they are counted apart from unrelated LogicalRDD
         // leaves (localCheckpoint frames, e.g. LinkRank's per-iteration
         // rank checkpoints) — the r14 advice: untagged RDD scans could
-        // push hits >= barriers and mask a real all-miss.
+        // push the count >= barriers and mask a real all-miss.
         val fw = "Scan ExistingRDD graft_firewall".r.findAllIn(plan).length
         val rdds = "Scan ExistingRDD".r.findAllIn(plan).length - fw
         val sh = "explode\\(shingles".r.findAllIn(plan).length
-        // a FIREWALLED barrier shows as its tagged leaf, a plain cached
-        // barrier as an InMemoryTableScan — both are HITS; the miss
-        // signature is a barrier whose final plan carries NEITHER (its
-        // lineage was silently re-derived). Barriers consumed entirely
-        // inside an earlier job (collect-bounded loops) also vanish
-        // from the final plan, so hits > 0 with fewer hits than
-        // barriers is only a "look here", not a verdict.
-        val hits = imts + fw
+        // Barriers consumed entirely inside an earlier job
+        // (collect-bounded loops) vanish from the final plan, so
+        // fewer firewalls than barriers is only a "look here", not a
+        // verdict.
         // driver-materialized results (nearDupClusters' bounded
         // union-find fast path, k-row collects) legitimately consume
         // every barrier in EARLIER jobs — but ONLY when no distributed
@@ -72,13 +65,13 @@ object CacheAudit {
           !plan.contains("Join") && !plan.contains("Aggregate") &&
           !plan.contains("Window")
         val verdict =
-          if (barriers > 0 && hits == 0 && localResult) "LOCAL_RESULT"
-          else if (barriers > 0 && hits == 0 && checkpointResult)
+          if (barriers > 0 && fw == 0 && localResult) "LOCAL_RESULT"
+          else if (barriers > 0 && fw == 0 && checkpointResult)
             "CHECKPOINT_RESULT"
-          else if (barriers > 0 && hits == 0) "MISS_ALL"
-          else if (barriers > 0 && hits < barriers) "CHECK_PARTIAL"
+          else if (barriers > 0 && fw == 0) "MISS_ALL"
+          else if (barriers > 0 && fw < barriers) "CHECK_PARTIAL"
           else "ok"
-        println(f"CACHE_AUDIT $name%-34s barriers=$barriers%2d imts=$imts%2d " +
+        println(f"CACHE_AUDIT $name%-34s barriers=$barriers%2d " +
           f"firewalls=$fw%2d other_rddscans=$rdds%2d " +
           f"shingle_derives=$sh%2d $verdict")
       } catch { case e: Throwable =>

@@ -4,18 +4,18 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.Dataset
 
-/** Session-lifetime ledger for the cache() BARRIER frames library
-  * operators materialize internally (curateCorpus's shingle/candidate
-  * frames, Pipeline's stage boundaries, the classifier's feature
-  * frames, ...). The barriers are load-bearing for a single invocation
-  * — each is read several times within its own operator — but Spark's
+/** Session-lifetime ledger for the BARRIER frames library operators
+  * materialize internally (curateCorpus's shingle/candidate frames,
+  * Pipeline's stage boundaries, the classifier's feature frames, ...).
+  * The barriers are load-bearing for a single invocation — each is
+  * read several times within its own operator — but Spark's
   * CacheManager keeps the MEMORY_AND_DISK blocks until somebody
   * unpersists them, so a LONG-LIVED SERVICE invoking operators
   * repeatedly in one session accumulates storage without bound.
   *
-  * Every internal barrier is created through [[cache]], which registers
-  * a weak reference here; a service calls [[releaseAll]] between units
-  * of work to return the CacheManager to its pre-invocation state
+  * Every internal barrier is created through [[firewall]], which
+  * registers the frame here; a service calls [[releaseAll]] between
+  * units of work to return the CacheManager to its pre-invocation state
   * without nuking caches the APPLICATION itself created (the blunt
   * alternative, `spark.catalog.clearCache()`, drops those too).
   *
@@ -54,13 +54,6 @@ object Barriers {
   /** Current ledger size — diagnostics only (`graft.tools.CacheAudit`). */
   def ledgerSize: Int = ledger.size()
 
-  /** `df.cache()` + register for a later [[releaseAll]]. */
-  def cache[T](df: Dataset[T]): Dataset[T] = {
-    val cached = df.cache()
-    ledger.add(cached)
-    cached
-  }
-
   /** Unpersist every barrier registered since the last call and clear
     * the ledger. `blocking = false`: block removal proceeds
     * asynchronously, the CacheManager entry removal is synchronous.
@@ -77,40 +70,32 @@ object Barriers {
     n
   }
 
-  /** barrierCache + EAGER populate + re-root at the materialized RDD —
-    * the LINEAGE FIREWALL for barrier frames consumed in SELF-JOIN
-    * shapes (a consumer joins the frame, or ids derived from it, back
-    * against a plan sharing one of its leaves). The analyzer's
-    * self-join deduplication rewrites such subtrees so they no longer
-    * `sameResult`-match the CacheManager entry, and the "cached"
-    * barrier silently re-derives its whole lineage per consumer
-    * (measured: 13 raw minhash re-derivations in ONE Jaccard-verify
-    * plan; BASELINE.md r14 kernel note). Re-rooting the returned frame
-    * at `out.rdd` makes the barrier a LEAF no rewrite can miss:
-    * downstream reads scan the populated cache through the RDD, the
-    * ledger still owns the storage for [[releaseAll]], and a
-    * post-release read recomputes through the preserved lineage — the
-    * same safe-but-slow contract as every barrier.
+  /** The one way a library operator materializes a barrier: cache,
+    * register in the ledger, populate EAGERLY (one job at call time)
+    * and re-root the returned frame at a leaf over the populated
+    * cache. Consumers that join the frame, or ids derived from it, back
+    * against a plan sharing one of its leaves are rewritten by the
+    * analyzer's self-join deduplication; a leaf has nothing left to
+    * rewrite, so every consumer reads the materialized rows (InternalRows
+    * through `qe.toRdd`). The ledger still owns the storage for
+    * [[releaseAll]], and a post-release read recomputes through the
+    * preserved lineage — safe, but slow.
     *
-    * Cost: one count job at call time (id-scale frames only — never
-    * firewall a payload-width frame) plus a Row round-trip per read.
-    * Use for multi-read, self-join-consumed barriers; plain
-    * [[cache]]/[[BarrierOps.barrierCache]] remains right for frames
-    * read through cache-substitutable plans. */
+    * The rule: barrier only NARROW frames (ids, id pairs, labels,
+    * small per-id features), never a payload-width one. The two
+    * measured exceptions are curateCorpus's token-scale `allSh` and the
+    * crawl corpus, both A/B'd at sf0.1. */
   def firewall(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val out = cache(df)
-    out.count()
-    // InMemoryRelation leaf, NOT createDataFrame(out.rdd, schema): the
-    // relation carries its real materialized stats, so id-scale
-    // barriers still BROADCAST in consumer joins (a stats-less
-    // LogicalRDD re-root forced sort-merge joins — the r12 lesson).
+    val out = df.cache()
+    ledger.add(out)
+    // populate in ONE job: count() plans a partial/final aggregate that
+    // adaptive execution runs as two; the empty projection reads no
+    // column of the cached batches
+    out.select().foreach((_: org.apache.spark.sql.Row) => ())
+    // InMemoryRelation stats, NOT createDataFrame(out.rdd, schema): the
+    // leaf carries the real materialized size, so id-scale barriers
+    // still BROADCAST in consumer joins.
     org.apache.spark.sql.graftbridge.Bridge.cachedLeaf(out)
-  }
-
-  /** Drop-in suffix form for the operators' barrier sites:
-    * `frame.barrierCache()` == `Barriers.cache(frame)`. */
-  implicit class BarrierOps[T](private val df: Dataset[T]) extends AnyVal {
-    def barrierCache(): Dataset[T] = Barriers.cache(df)
   }
 
   /** Suffix form of [[firewall]] for DataFrame barrier sites. */

@@ -298,26 +298,19 @@ object DistRank {
     * NONDETERMINISTIC upstream (`rand()` sampling, `uuid()`,
     * `monotonically_increasing_id()`) would silently disagree between
     * those executions, yielding wrong ranks/sessions/carries. This
-    * guard walks the analyzed plan and fails fast with guidance; set
-    * `spark.graft.distrank.checkpointNondeterministic=true` to instead
-    * pin the input with an eager `localCheckpoint()` (one extra
-    * materialization, after which the lineage IS deterministic). */
+    * guard walks the analyzed plan and fails fast with guidance: the
+    * caller pins the input with an eager `localCheckpoint()` (one
+    * extra materialization, after which the lineage IS deterministic). */
   private def ensureDeterministicLineage(df: DataFrame): DataFrame = {
     val nd = df.queryExecution.analyzed.exists(p =>
       p.expressions.exists(_.exists(e => !e.deterministic)))
     if (!nd) df
-    else if (df.sparkSession.conf
-        .get("spark.graft.distrank.checkpointNondeterministic", "false")
-        .toBoolean)
-      df.localCheckpoint()
     else throw new IllegalArgumentException(
       "DistRank: the input plan contains a nondeterministic expression " +
         "(rand()/uuid()/monotonically_increasing_id()/...). These scans " +
         "execute the lineage MORE THAN ONCE (pass-1 offsets, the hybrid " +
         "split, then the output), so a nondeterministic input silently " +
-        "produces wrong scan values. localCheckpoint() the input first, " +
-        "or set spark.graft.distrank.checkpointNondeterministic=true to " +
-        "have the scan do it.")
+        "produces wrong scan values. localCheckpoint() the input first.")
   }
 
   /** Key types the run detector / driver table may use: universal
@@ -504,8 +497,7 @@ object DistRank {
     * specs), so even a stale entry — same plan, underlying files
     * rewritten mid-session, already outside the scans' deterministic-
     * lineage contract — can only mis-route keys, never corrupt a
-    * result. Disable with `spark.graft.skew.reuseKeyCounts=false`;
-    * [[clearKeyCountCache]] drops all entries. */
+    * result. [[clearKeyCountCache]] drops all entries. */
   private val keyCountCache = new java.util.concurrent.ConcurrentHashMap[
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
     Array[Any]]()
@@ -523,12 +515,9 @@ object DistRank {
   private[graft] def heavyKeyValues(df: DataFrame, keyCol: String,
       threshold: Long): Array[Any] = {
     val spark = df.sparkSession
-    val cacheKey =
-      if (!spark.conf.get("spark.graft.skew.reuseKeyCounts", "true").toBoolean)
-        None
-      else Some((df.select(col(keyCol)).queryExecution
-        .optimizedPlan.canonicalized, threshold))
-    cacheKey.flatMap(k => Option(keyCountCache.get(k))).getOrElse {
+    val cacheKey = (df.select(col(keyCol)).queryExecution
+      .optimizedPlan.canonicalized, threshold)
+    Option(keyCountCache.get(cacheKey)).getOrElse {
       val maxHeavy = spark.conf
         .get("spark.graft.skew.maxHeavyKeys", MaxHeavyKeys.toString).toInt
       val heavyRows = df.groupBy(keyCol)
@@ -544,10 +533,8 @@ object DistRank {
           "enough to matter, or raise spark.graft.skew.maxHeavyKeys if " +
           "the driver can really hold this set.")
       val vals: Array[Any] = heavyRows.map(_.get(0))
-      cacheKey.foreach { k =>
-        if (keyCountCache.size >= 64) keyCountCache.clear()
-        keyCountCache.put(k, vals)
-      }
+      if (keyCountCache.size >= 64) keyCountCache.clear()
+      keyCountCache.put(cacheKey, vals)
       vals
     }
   }

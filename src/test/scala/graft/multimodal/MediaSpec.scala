@@ -461,6 +461,21 @@ class MediaSpec extends AnyFunSuite {
     assert(e(1).getSeq[Float](1) == e(3).getSeq[Float](1))
   }
 
+  test("resample destinations are bounded per thread (LRU of 4)") {
+    val img = Media.decodeImage(Media.buildImage(64, 64, "png")).get
+    val sizes = (1 to 10).map(i => (4 + i, 3 + i))
+    def probe(w: Int, h: Int): (Int, Int, Int) =
+      Media.withResampled(img, w, h)(p =>
+        (p.getWidth, p.getHeight, p.getRGB(w / 2, h / 2)))
+    val first = sizes.map { case (w, h) => probe(w, h) }
+    assert(Media.resampleDstSize <= 4,
+      s"10 sizes on one thread left ${Media.resampleDstSize} destinations")
+    assert(first.map(t => (t._1, t._2)) == sizes)
+    // evicted and still-held sizes both re-render the same pixels
+    assert(sizes.map { case (w, h) => probe(w, h) } == first)
+    assert(Media.resampleDstSize <= 4)
+  }
+
   test("imageNearDups pairs perturbed copies, not distinct images or junk") {
     import spark.implicits._
     val base = Media.decodeImage(Media.buildImage(64, 64, "png")).get

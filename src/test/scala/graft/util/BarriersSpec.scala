@@ -95,7 +95,7 @@ class BarriersSpec extends AnyFunSuite {
     // cache the UN-renamed plan first — sameResult ignores output
     // names, so the firewall's lookup below legally resolves to THIS
     // relation; the bridge must still expose the caller's names
-    val twin = Barriers.cache(base)
+    val twin = base.cache()
     twin.count()
     val fw = Barriers.firewall(base.select(col("media_id"),
       col("vfp").as("__sig")))

@@ -258,8 +258,8 @@ class DistRankSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.skew.maxHeavyKeys")
   }
 
-  test("a nondeterministic upstream (rand) fails fast; the checkpoint " +
-      "conf opts into an eager pin instead") {
+  test("a nondeterministic upstream (rand) fails fast; a caller-side " +
+      "localCheckpoint pins it") {
     val df = spark.range(100)
       .selectExpr("id % 4 as k", "id as v")
       .withColumn("noise", rand(42))
@@ -273,15 +273,12 @@ class DistRankSpec extends AnyFunSuite {
         heavyRowThreshold = Some(10L))
     }
     assert(e2.getMessage.contains("nondeterministic"))
-    spark.conf.set("spark.graft.distrank.checkpointNondeterministic", "true")
-    try {
-      val ranked = DistRank.perKeyRowNumber(df, "k", Seq(col("v")), "r")
-      val got = ranked.collect().map(r => (r.getLong(1), r.getLong(3)))
-      assert(got.length == 100)
-      // v is deterministic, so ranks must exactly match v's per-key order
-      assert(got.sortBy(_._1).map(_._2).take(4).toSeq == Seq(1L, 1L, 1L, 1L))
-    } finally
-      spark.conf.unset("spark.graft.distrank.checkpointNondeterministic")
+    val ranked = DistRank.perKeyRowNumber(df.localCheckpoint(), "k",
+      Seq(col("v")), "r")
+    val got = ranked.collect().map(r => (r.getLong(1), r.getLong(3)))
+    assert(got.length == 100)
+    // v is deterministic, so ranks must exactly match v's per-key order
+    assert(got.sortBy(_._1).map(_._2).take(4).toSeq == Seq(1L, 1L, 1L, 1L))
   }
 
   test("heavy-key counts are cached per (key plan, threshold) and never " +
@@ -303,16 +300,29 @@ class DistRankSpec extends AnyFunSuite {
     // a different input never sees df1's cached set
     val h2 = DistRank.heavyKeyValues(df2, "k", 10L)
     assert(h2.toSeq == Seq(2L))
-    // conf off: recount (fresh instance), same values
-    spark.conf.set("spark.graft.skew.reuseKeyCounts", "false")
-    try {
-      val h1c = DistRank.heavyKeyValues(df1, "k", 10L)
-      assert(h1c.toSeq == Seq(1L) && !(h1c eq h1))
-    } finally spark.conf.unset("spark.graft.skew.reuseKeyCounts")
     // clearing drops entries: a recount returns a fresh instance
     DistRank.clearKeyCountCache()
     val h1d = DistRank.heavyKeyValues(df1, "k", 10L)
     assert(h1d.toSeq == Seq(1L) && !(h1d eq h1))
+  }
+
+  test("the key-count cache holds at most 64 entries and still returns " +
+      "the right keys") {
+    DistRank.clearKeyCountCache()
+    val base = spark.range(40).selectExpr(
+      "CASE WHEN id < 20 THEN 3L ELSE id END as k", "id as v")
+    // 65 distinct (plan, threshold) entries: one plan, thresholds 1..65
+    val got = (1L to 65L).map(t => t -> DistRank.heavyKeyValues(base, "k", t))
+    assert(DistRank.keyCountCacheSize <= 64,
+      s"cache grew to ${DistRank.keyCountCacheSize} entries")
+    got.foreach { case (t, h) =>
+      val want = if (t == 1L) (Seq(3L) ++ (20L until 40L)).toSet
+        else if (t <= 20L) Set(3L) else Set.empty[Long]
+      assert(h.map(_.asInstanceOf[Long]).toSet == want, s"threshold $t")
+    }
+    // a post-bound lookup recounts correctly too
+    assert(DistRank.heavyKeyValues(base, "k", 20L).toSeq == Seq(3L))
+    DistRank.clearKeyCountCache()
   }
 
   test("a precomputed heavy set skips the count job and still splits " +
