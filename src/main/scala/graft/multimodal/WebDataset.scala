@@ -1,9 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
-  StructField, StructType}
 
 import graft.text.TextOps
 
@@ -19,6 +17,14 @@ import graft.text.TextOps
   * use (formatted lines oracled, file IO at the edge).
   */
 object WebDataset {
+
+  /** Zero-padded sample key: the id as a string, left-padded to 9
+    * digits; an id of 9 or more characters is used as is, never cut, so
+    * distinct ids always get distinct keys. */
+  private def key(id: Column): Column = {
+    val s = id.cast("string")
+    when(length(s) >= 9, s).otherwise(lpad(s, 9, "0"))
+  }
 
   /** Deterministic export manifest: one row per sample with its shard
     * (the [[graft.text.TextOps.shardAssign]] md5 assignment — salt-free
@@ -37,134 +43,77 @@ object WebDataset {
     val base = media.select(col(idCol),
       octet_length(col(payloadCol)).cast("long").as("img_bytes"),
       octet_length(col(textCol)).cast("long").as("txt_bytes"))
-    val key = lpad(col(idCol).cast("string"), 9, "0")
+    val k = key(col(idCol))
     TextOps.shardAssign(base, idCol, nShards)
       .select(col(idCol), col("shard"), col("seq"),
-        key.as("key"),
-        concat(key, lit(s".$ext")).as("img_member"),
-        concat(key, lit(".txt")).as("txt_member"),
+        k.as("key"),
+        concat(k, lit(s".$ext")).as("img_member"),
+        concat(k, lit(".txt")).as("txt_member"),
         col("img_bytes"), col("txt_bytes"))
   }
 
   /** Write `shard-%06d.tar` USTAR archives under `outDir`, one tar per
     * manifest shard, members in manifest `seq` order (`<key>.<ext>`
     * image bytes then `<key>.txt` caption bytes — the WebDataset
-    * same-key-adjacent convention). Pure-JVM USTAR emission (no
+    * same-key-adjacent convention), streamed through
+    * [[graft.sources.ShardIO.writeShards]]. Pure-JVM USTAR emission (no
     * external tooling): 512-byte headers, octal sizes, correct
     * checksums, two zero blocks at the end — readable by any tar.
-    * Returns the per-shard report (shard, path, n_samples,
-    * bytes_written) collected from the writing tasks themselves, so a
-    * lost task cannot silently under-write an archive.
+    * Member names are built by the same expressions as [[manifest]]'s.
+    * A null payload or caption becomes an empty member. Returns the
+    * per-shard report (shard, path, n_samples, bytes_written) collected
+    * from the writing tasks themselves, so a lost task cannot silently
+    * under-write an archive.
     *
-    * Scale shape: one exchange partitioning samples by shard, a
-    * per-shard sort on seq, then each shard streams to its own tar in
-    * one pass (payload bytes cross the shuffle once — unavoidable for
-    * a sink that must co-locate a shard's members); shards are
+    * Scale shape: payload bytes cross two exchanges — the shard seq
+    * window's and the repartition that co-locates a shard's members —
+    * then each shard streams to its own tar in one pass; shards are
     * independent, so the write parallelism is min(nShards, cores). */
   def writeShards(media: DataFrame, idCol: String, payloadCol: String,
       textCol: String, outDir: String, nShards: Int,
       ext: String = "bmp"): DataFrame = {
-    val m = manifest(media, idCol, payloadCol, textCol, nShards, ext)
-    val rows = media.select(col(idCol),
-        col(payloadCol).as("__img"),
-        col(textCol).cast("string").as("__txt"))
-      .join(m, Seq(idCol))
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("seq"))
-      .select(col("shard"), col("seq"), col("img_member"),
-        col("txt_member"), col("__img"), col("__txt"))
-    val schema = StructType(Seq(
-      StructField("shard", IntegerType),
-      StructField("path", StringType),
-      StructField("n_samples", LongType),
-      StructField("bytes_written", LongType)))
-    val enc = Encoders.row(schema)
-    val hc = graft.sources.ShardIO.conf(media)
-    val planToken = graft.sources.ShardIO.newPlanToken()
-    val report = rows.mapPartitions { it =>
-      // a partition may carry several shards (hash partitioning):
-      // consume sequentially, cutting a new tar at each shard change —
-      // packSequencesAtomic's group-fold pattern. All file IO rides
-      // ShardIO's Hadoop-FS temp+rename commit (cluster-portable,
-      // retry-safe — see ShardIO's contract).
-      var out: java.io.OutputStream = null
-      var ss: graft.sources.ShardIO.ShardStream = null
-      var cur = Int.MinValue
-      var path: String = null
-      var n = 0L
-      var bytes = 0L
-      val done = scala.collection.mutable.ArrayBuffer.empty[Row]
-      def close(): Unit = if (out != null) {
-        out.write(new Array[Byte](1024)) // end-of-archive zero blocks
-        out.close()
-        ss.commit()
-        done += Row(cur, path, n, bytes + 1024L)
-        out = null; ss = null
-      }
-      def entry(name: String, data: Array[Byte]): Long = {
-        val h = new Array[Byte](512)
-        val nb = name.getBytes("UTF-8")
-        require(nb.length <= 100, s"tar member name too long: $name")
-        System.arraycopy(nb, 0, h, 0, nb.length)
-        def oct(off: Int, len: Int, v: Long): Unit = {
-          val s = java.lang.Long.toOctalString(v)
-          val p = "0" * (len - 1 - s.length) + s
-          System.arraycopy(p.getBytes("UTF-8"), 0, h, off, len - 1)
-        }
-        oct(100, 8, 420)            // mode 0644
-        oct(108, 8, 0); oct(116, 8, 0)
-        oct(124, 12, data.length.toLong)
-        oct(136, 12, 0L)            // mtime 0: bit-reproducible shards
-        h(156) = '0'                // regular file
-        System.arraycopy("ustar".getBytes("UTF-8"), 0, h, 257, 5)
-        h(263) = '0'; h(264) = '0' // POSIX magic "ustar\u0000", version "00"
-        java.util.Arrays.fill(h, 148, 156, ' '.toByte)
-        var sum = 0L
-        var i = 0
-        while (i < 512) { sum += (h(i) & 0xff); i += 1 }
-        oct(148, 7, sum); h(155) = ' '
-        out.write(h)
-        out.write(data)
-        val pad = (512 - data.length % 512) % 512
-        if (pad > 0) out.write(new Array[Byte](pad))
-        512L + data.length + pad
-      }
-      val emitted = it.flatMap { r =>
-        val sh = r.getInt(0)
-        val flushed = if (sh != cur) {
-          close()
-          if (cur == Int.MinValue) // first write of this task: verify
-            graft.sources.ShardIO.requirePrepared(hc, outDir, planToken)
-          cur = sh
-          path = s"$outDir/shard-${"%06d".format(sh)}.tar"
-          ss = graft.sources.ShardIO.begin(hc, path)
-          out = new java.io.BufferedOutputStream(ss.raw)
-          n = 0L; bytes = 0L
-          val f = done.toList; done.clear(); f
-        } else Nil
-        // null payload → empty member, mirroring the caption guard
-        // below (one null row must not fail the whole export task)
-        bytes += entry(r.getString(2),
-          Option(r.getAs[Array[Byte]](4)).getOrElse(Array.emptyByteArray))
-        bytes += entry(r.getString(3),
-          Option(r.getString(5)).getOrElse("").getBytes("UTF-8"))
-        n += 1
-        flushed
-      }
-      emitted ++ new Iterator[Row] {
-        private var flushedTail: List[Row] = null
-        override def hasNext: Boolean = {
-          if (flushedTail == null) { close(); flushedTail = done.toList }
-          flushedTail.nonEmpty
-        }
-        override def next(): Row = {
-          val h = flushedTail.head; flushedTail = flushedTail.tail; h
-        }
-      }
-    }(enc)
-    // overwrite semantics at FIRST EXECUTION (not plan build): a plan
-    // that is never acted on touches nothing — see ShardIO's contract
-    graft.sources.ShardIO.withLazyPrepare(report, hc, outDir, planToken)
+    val k = key(col(idCol))
+    graft.sources.ShardIO.writeShards(media, idCol,
+        Seq(concat(k, lit(s".$ext")), concat(k, lit(".txt")),
+          col(payloadCol), col(textCol).cast("string")),
+        outDir, nShards, "shard-%06d.tar", "n_samples",
+        trailer = new Array[Byte](1024)) { (out, r) =>
+      entry(out, r.getString(2),
+        Option(r.getAs[Array[Byte]](4)).getOrElse(Array.emptyByteArray))
+      entry(out, r.getString(3),
+        Option(r.getString(5)).getOrElse("").getBytes("UTF-8"))
+    }
+  }
+
+  /** One USTAR member: 512-byte header (mode 0644, mtime 0 so shards
+    * are bit-reproducible), the data, zero padding to 512. */
+  private def entry(out: java.io.OutputStream, name: String,
+      data: Array[Byte]): Unit = {
+    val h = new Array[Byte](512)
+    val nb = name.getBytes("UTF-8")
+    require(nb.length <= 100, s"tar member name too long: $name")
+    System.arraycopy(nb, 0, h, 0, nb.length)
+    def oct(off: Int, len: Int, v: Long): Unit = {
+      val s = java.lang.Long.toOctalString(v)
+      val p = "0" * (len - 1 - s.length) + s
+      System.arraycopy(p.getBytes("UTF-8"), 0, h, off, len - 1)
+    }
+    oct(100, 8, 420)            // mode 0644
+    oct(108, 8, 0); oct(116, 8, 0)
+    oct(124, 12, data.length.toLong)
+    oct(136, 12, 0L)            // mtime 0: bit-reproducible shards
+    h(156) = '0'                // regular file
+    System.arraycopy("ustar".getBytes("UTF-8"), 0, h, 257, 5)
+    h(263) = '0'; h(264) = '0' // POSIX magic "ustar\u0000", version "00"
+    java.util.Arrays.fill(h, 148, 156, ' '.toByte)
+    var sum = 0L
+    var i = 0
+    while (i < 512) { sum += (h(i) & 0xff); i += 1 }
+    oct(148, 7, sum); h(155) = ' '
+    out.write(h)
+    out.write(data)
+    val pad = (512 - data.length % 512) % 512
+    if (pad > 0) out.write(new Array[Byte](pad))
   }
 
   /** JOB-level atomic export: [[writeShards]] + verification + the

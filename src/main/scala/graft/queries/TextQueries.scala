@@ -1326,11 +1326,6 @@ object TextQueries {
         .orderBy("source")
     }),
 
-    // WebDataset export manifest over the planted-pattern BMPs +
-    // caption texts: md5 shard assignment, per-shard sequence,
-    // zero-padded member names and exact member byte sizes — the
-    // oracle-checkable half of the sharded-tar sink (the tar EMISSION
-    // itself is spec-verified by a byte-exact write/read round trip)
     // JSONL shard manifest (t147): the sink's oracle-checkable half —
     // t35's md5 shard chain, the writer's own to_json line render,
     // per-line byte size; what a downstream hash manifest verifies
@@ -1421,6 +1416,11 @@ object TextQueries {
         .orderBy("doc_id")
     }),
 
+    // WebDataset export manifest over the planted-pattern BMPs +
+    // caption texts: md5 shard assignment, per-shard sequence,
+    // zero-padded member names and exact member byte sizes — the
+    // oracle-checkable half of the sharded-tar sink (the tar EMISSION
+    // itself is spec-verified by a byte-exact write/read round trip)
     "t144_webdataset_manifest" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val media = graft.multimodal.Media.syntheticPatternBmps(

@@ -16,10 +16,9 @@ import org.apache.spark.sql.types.StructType
   * the JSON scan prunes columns like any other source (only the
   * requested fields are parsed).
   *
-  * Write contract: `to_json` over a struct of all columns through the
-  * text sink — one shard per partition. For controlled shard counts
-  * and sizes, compose with [[graft.text.TextOps.shardAssign]] +
-  * `repartition(n, col("shard"))` before writing.
+  * Write contract: `to_json` over a struct of all columns. [[write]]
+  * goes through the text sink, one part file per partition;
+  * [[writeShards]] and [[export]] write named, reproducible shards.
   */
 object Jsonl {
 
@@ -37,8 +36,16 @@ object Jsonl {
     * omitted per JSON-source convention (Spark's to_json drops null
     * fields), so a round trip restores them as nulls. */
   def write(df: DataFrame, path: String, compression: String = "none"): Unit =
-    df.select(to_json(struct(df.columns.map(col): _*)).as("value"))
+    df.select(line(df).as("value"))
       .write.mode("overwrite").option("compression", compression).text(path)
+
+  /** Shard file name pattern, shared by [[manifest]] and [[writeShards]]. */
+  private def pattern(gzip: Boolean): String =
+    if (gzip) "shard-%06d.jsonl.gz" else "shard-%06d.jsonl"
+
+  /** One JSONL line per row: `to_json` over the frame's column order. */
+  private def line(df: DataFrame): org.apache.spark.sql.Column =
+    to_json(struct(df.columns.map(col): _*))
 
   /** PURE export manifest for [[writeShards]] — the oracle-checkable
     * half of the sink ([[graft.multimodal.WebDataset.manifest]]'s
@@ -52,16 +59,12 @@ object Jsonl {
     * per-shard seq window; the line render is a narrow codegen'd
     * projection and only its LENGTH survives into the manifest. */
   def manifest(df: DataFrame, idCol: String, nShards: Int,
-      gzip: Boolean = true): DataFrame = {
-    val sfx = if (gzip) ".jsonl.gz" else ".jsonl"
-    val withLine = df.withColumn("__line",
-      to_json(struct(df.columns.map(col): _*)))
-    graft.text.TextOps.shardAssign(withLine, idCol, nShards)
+      gzip: Boolean = true): DataFrame =
+    graft.text.TextOps.shardAssign(df.withColumn("__line", line(df)),
+        idCol, nShards)
       .select(col(idCol), col("shard"), col("seq"),
-        concat(lit("shard-"), lpad(col("shard").cast("string"), 6, "0"),
-          lit(sfx)).as("file"),
+        format_string(pattern(gzip), col("shard")).as("file"),
         octet_length(col("__line")).cast("long").as("line_bytes"))
-  }
 
   /** Deterministic NAMED-shard JSONL export — the text sibling of
     * [[graft.multimodal.WebDataset.writeShards]], and the artifact
@@ -71,87 +74,18 @@ object Jsonl {
     * hash manifest can verify): rows are assigned by
     * [[graft.text.TextOps.shardAssign]]'s salt-free md5 hash, ordered
     * by its per-shard `seq`, rendered with Spark's `to_json` over the
-    * frame's own column order, and streamed one shard per file. Gzip
-    * members are reproducible too (Java's GZIP header carries
-    * mtime 0). Returns the per-shard report (shard, path, n_lines,
-    * bytes_written) from the writing tasks themselves; the write
-    * happens when the returned frame is acted on.
-    *
-    * Scale shape: one exchange on the shard key + the per-shard seq
-    * window, then each shard streams to its file in one pass; shards
-    * are independent, so write parallelism is min(nShards, cores). */
+    * frame's own column order, and streamed one shard per file through
+    * [[ShardIO.writeShards]]. Gzip members are reproducible too (Java's
+    * GZIP header carries mtime 0). Returns the per-shard report
+    * (shard, path, n_lines, bytes_written); the write happens when the
+    * returned frame is acted on. */
   def writeShards(df: DataFrame, idCol: String, outDir: String,
-      nShards: Int, gzip: Boolean = true): DataFrame = {
-    val withLine = df.withColumn("__line",
-      to_json(struct(df.columns.map(col): _*)))
-    val rows = graft.text.TextOps.shardAssign(withLine, idCol, nShards)
-      .select(col("shard"), col("seq"), col("__line"))
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("seq"))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("shard",
-        org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("n_lines",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("bytes_written",
-        org.apache.spark.sql.types.LongType)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    val hc = ShardIO.conf(df)
-    val planToken = ShardIO.newPlanToken()
-    val sfx = if (gzip) ".jsonl.gz" else ".jsonl"
-    val report = rows.mapPartitions { it =>
-      // group-fold over (possibly several) shards per hash partition —
-      // the WebDataset writer's pattern. All file IO rides ShardIO's
-      // Hadoop-FS temp+rename commit (cluster-portable, retry-safe).
-      var out: java.io.OutputStream = null
-      var ss: ShardIO.ShardStream = null
-      var path: String = null
-      var cur = Int.MinValue
-      var n = 0L
-      val done = scala.collection.mutable.ArrayBuffer
-        .empty[org.apache.spark.sql.Row]
-      def close(): Unit = if (out != null) {
-        out.close() // finishes the gzip member before commit
-        val len = ss.commit()
-        done += org.apache.spark.sql.Row(cur, path, n, len)
-        out = null; ss = null
-      }
-      val emitted = it.flatMap { r =>
-        val sh = r.getInt(0)
-        val flushed = if (sh != cur) {
-          close()
-          if (cur == Int.MinValue) // first write of this task: verify
-            ShardIO.requirePrepared(hc, outDir, planToken)
-          cur = sh
-          path = s"$outDir/shard-${"%06d".format(sh)}$sfx"
-          ss = ShardIO.begin(hc, path)
-          out = new java.io.BufferedOutputStream(
-            if (gzip) new java.util.zip.GZIPOutputStream(ss.raw) else ss.raw)
-          n = 0L
-          val f = done.toList; done.clear(); f
-        } else Nil
-        out.write(r.getString(2).getBytes("UTF-8"))
-        out.write('\n')
-        n += 1
-        flushed
-      }
-      emitted ++ new Iterator[org.apache.spark.sql.Row] {
-        private var tail: List[org.apache.spark.sql.Row] = null
-        override def hasNext: Boolean = {
-          if (tail == null) { close(); tail = done.toList }
-          tail.nonEmpty
-        }
-        override def next(): org.apache.spark.sql.Row = {
-          val h = tail.head; tail = tail.tail; h
-        }
-      }
-    }(enc)
-    // overwrite semantics at FIRST EXECUTION (not plan build): a plan
-    // that is never acted on touches nothing — see ShardIO's contract
-    ShardIO.withLazyPrepare(report, hc, outDir, planToken)
-  }
+      nShards: Int, gzip: Boolean = true): DataFrame =
+    ShardIO.writeShards(df, idCol, Seq(line(df)), outDir, nShards,
+        pattern(gzip), "n_lines", gzip) { (out, r) =>
+      out.write(r.getString(2).getBytes("UTF-8"))
+      out.write('\n')
+    }
 
   /** JOB-level atomic export: [[writeShards]] + verification +
     * the terminal `_MANIFEST.jsonl` commit ([[ShardIO.commitExport]]).

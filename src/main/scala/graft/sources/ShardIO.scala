@@ -1,16 +1,20 @@
 package graft.sources
 
-import java.io.{IOException, ObjectInputStream, ObjectOutputStream, OutputStream}
+import java.io.{BufferedOutputStream, FilterOutputStream, IOException,
+  ObjectInputStream, ObjectOutputStream, OutputStream}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 
 /** Shared shard-commit machinery for the export tier ([[Jsonl]],
   * [[TfRecord]], [[graft.multimodal.WebDataset]]): every named-shard
-  * writer opens its files through here so the sink is deployable on a
-  * real cluster, not just `local[*]`.
+  * sink writes through the one shard writer here ([[writeShards]]), so
+  * the sink is deployable on a real cluster, not just `local[*]`.
   *
   * Cluster contract (the r14 verdict's "local-FS-only" gap, closed):
   *  - All paths go through the Hadoop [[FileSystem]] API, so `outDir`
@@ -330,5 +334,95 @@ object ShardIO {
         })
     }
     ss
+  }
+
+  /** Counts the bytes that reach the shard file, under any gzip or
+    * buffer stream, so `bytes_written` means the same for every format. */
+  private final class CountingStream(raw: OutputStream)
+      extends FilterOutputStream(raw) {
+    var count = 0L
+    override def write(b: Int): Unit = { raw.write(b); count += 1 }
+    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+      raw.write(b, off, len); count += len
+    }
+  }
+
+  /** The export tier's one shard writer. Assigns `df`'s rows to
+    * `nShards` shards ([[graft.text.TextOps.shardAssign]] on `idCol`),
+    * co-locates each shard and sorts it by `seq`, then streams every
+    * shard to `outDir/<pattern>` in one pass, where the file name is
+    * `String.format(pattern, shard, nShards)` — the same pattern a
+    * sink's manifest renders with `format_string`. Each row reaches
+    * `encode` as (shard, seq, payload...) and writes one record;
+    * `trailer` closes each file and `gzip` wraps it in one gzip member.
+    * Returns the per-shard report (shard, path, `countCol`,
+    * bytes_written) from the writing tasks, where `bytes_written`
+    * counts the bytes passed to the shard file. The write, and the
+    * directory preparation before it ([[withLazyPrepare]]), happen
+    * when the returned frame is acted on.
+    *
+    * Scale shape: the seq window's exchange, the repartition on the
+    * shard key, then one pass per partition that cuts a new file at
+    * each shard change; shards are independent, so write parallelism
+    * is min(nShards, cores). */
+  private[graft] def writeShards(df: DataFrame, idCol: String,
+      payload: Seq[Column], outDir: String, nShards: Int, pattern: String,
+      countCol: String, gzip: Boolean = false,
+      trailer: Array[Byte] = Array.emptyByteArray)(
+      encode: (OutputStream, Row) => Unit): DataFrame = {
+    val cols = payload.indices.map(i => s"__p$i")
+    val assigned = graft.text.TextOps.shardAssign(
+      df.select(col(idCol) +: payload.zip(cols).map { case (c, n) =>
+        c.as(n) }: _*), idCol, nShards)
+    val rows = assigned.select((Seq("shard", "seq") ++ cols).map(col): _*)
+      .repartition(nShards, col("shard"))
+      .sortWithinPartitions(col("shard"), col("seq"))
+    val schema = StructType(Seq(
+      StructField("shard", IntegerType),
+      StructField("path", StringType),
+      StructField(countCol, LongType),
+      StructField("bytes_written", LongType)))
+    val hc = conf(df)
+    val planToken = newPlanToken()
+    val report = rows.mapPartitions { it =>
+      // a hash partition may carry several shards: one file per shard,
+      // cut at each shard change
+      val done = scala.collection.mutable.ArrayBuffer.empty[Row]
+      if (it.hasNext) requirePrepared(hc, outDir, planToken)
+      var cur = -1
+      var path: String = null
+      var n = 0L
+      var ss: ShardStream = null
+      var counted: CountingStream = null
+      var out: OutputStream = null
+      def close(): Unit = if (out != null) {
+        out.write(trailer)
+        out.close() // finishes the gzip member before commit
+        ss.commit()
+        done += Row(cur, path, n, counted.count)
+      }
+      it.foreach { r =>
+        val sh = r.getInt(0)
+        if (sh != cur) {
+          close()
+          cur = sh
+          n = 0L
+          path = s"$outDir/" +
+            String.format(java.util.Locale.US, pattern, Int.box(sh),
+              Int.box(nShards))
+          ss = begin(hc, path)
+          counted = new CountingStream(ss.raw)
+          out = new BufferedOutputStream(
+            if (gzip) new java.util.zip.GZIPOutputStream(counted) else counted)
+        }
+        encode(out, r)
+        n += 1
+      }
+      close()
+      done.iterator
+    }(Encoders.row(schema))
+    // overwrite semantics at FIRST EXECUTION (not plan build): a plan
+    // that is never acted on touches nothing
+    withLazyPrepare(report, hc, outDir, planToken)
   }
 }

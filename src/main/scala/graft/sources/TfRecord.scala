@@ -1,9 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
-  StructField, StructType}
+import org.apache.spark.sql.types.BinaryType
 
 /** TFRecord named-shard export — the third artifact format of the
   * export tier (next to [[graft.multimodal.WebDataset]]'s tars and
@@ -45,16 +44,25 @@ object TfRecord {
     b
   }
 
-  /** Write one framed record; returns bytes emitted. */
+  /** Write one framed record. */
   private def writeRecord(out: java.io.OutputStream,
-      payload: Array[Byte]): Long = {
+      payload: Array[Byte]): Unit = {
     val len = le64(payload.length.toLong)
     out.write(len)
     out.write(le32(maskedCrc32c(len, 0, 8)))
     out.write(payload)
     out.write(le32(maskedCrc32c(payload, 0, payload.length)))
-    16L + payload.length
   }
+
+  /** Shard file name pattern over (shard, nShards), shared by
+    * [[manifest]] and [[writeShards]]. */
+  private val Pattern = "shard-%05d-of-%05d.tfrecord"
+
+  /** The value column as record payload bytes: BINARY as is, anything
+    * else as its UTF-8 string. */
+  private def payload(df: DataFrame, valueCol: String): Column =
+    if (df.schema(valueCol).dataType == BinaryType) col(valueCol)
+    else encode(col(valueCol).cast("string"), "UTF-8")
 
   /** PURE export manifest for [[writeShards]] — the oracle-checkable
     * half of the sink: one row per record with its shard, dense
@@ -63,99 +71,34 @@ object TfRecord {
     * so `sum(record_bytes)` per shard equals the committed file's
     * byte length exactly (TfRecordSpec pins that equality). */
   def manifest(df: DataFrame, idCol: String, valueCol: String,
-      nShards: Int): DataFrame = {
-    val isBinary = df.schema(valueCol).dataType ==
-      org.apache.spark.sql.types.BinaryType
-    val valued = df.select(col(idCol),
-      (if (isBinary) col(valueCol)
-       else encode(col(valueCol).cast("string"), "UTF-8")).as("__val"))
-    graft.text.TextOps.shardAssign(valued, idCol, nShards)
+      nShards: Int): DataFrame =
+    graft.text.TextOps.shardAssign(
+        df.select(col(idCol), payload(df, valueCol).as("__val")),
+        idCol, nShards)
       .select(col(idCol), col("shard"), col("seq"),
-        concat(lit("shard-"), lpad(col("shard").cast("string"), 5, "0"),
-          lit("-of-"), lpad(lit(nShards).cast("string"), 5, "0"),
-          lit(".tfrecord")).as("file"),
+        format_string(Pattern, col("shard"), lit(nShards)).as("file"),
         (octet_length(col("__val")) + lit(16)).cast("long")
           .as("record_bytes"))
-  }
 
   /** Deterministic named-shard TFRecord export of a BINARY or STRING
     * value column (strings are UTF-8 encoded): `shard-%05d-of-%05d
     * .tfrecord` under `outDir`, records in [[graft.text.TextOps
-    * .shardAssign]] `seq` order. Returns the per-shard report (shard,
-    * path, n_records, bytes_written) from the writing tasks; the write
-    * happens when the returned frame is acted on.
-    *
-    * Scale shape: one exchange on the shard key + the per-shard seq
-    * window, then each shard streams in one pass — the
-    * [[graft.multimodal.WebDataset.writeShards]] fold. */
+    * .shardAssign]] `seq` order, streamed through
+    * [[ShardIO.writeShards]]. Returns the per-shard report (shard,
+    * path, n_records, bytes_written); the write happens when the
+    * returned frame is acted on. A NULL value fails the writing task
+    * with an [[IllegalArgumentException]] naming the column and the
+    * row's shard and seq: a record has no null encoding. */
   def writeShards(df: DataFrame, idCol: String, valueCol: String,
-      outDir: String, nShards: Int): DataFrame = {
-    val isBinary = df.schema(valueCol).dataType ==
-      org.apache.spark.sql.types.BinaryType
-    val valued = df.select(col(idCol),
-      (if (isBinary) col(valueCol)
-       else encode(col(valueCol).cast("string"), "UTF-8")).as("__val"))
-    val rows = graft.text.TextOps.shardAssign(valued, idCol, nShards)
-      .select(col("shard"), col("seq"), col("__val"))
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("seq"))
-    val schema = StructType(Seq(
-      StructField("shard", IntegerType),
-      StructField("path", StringType),
-      StructField("n_records", LongType),
-      StructField("bytes_written", LongType)))
-    val enc = Encoders.row(schema)
-    val hc = ShardIO.conf(df)
-    val planToken = ShardIO.newPlanToken()
-    val report = rows.mapPartitions { it =>
-      // All file IO rides ShardIO's Hadoop-FS temp+rename commit
-      // (cluster-portable, retry-safe — see ShardIO's contract).
-      var out: java.io.OutputStream = null
-      var ss: ShardIO.ShardStream = null
-      var path: String = null
-      var cur = Int.MinValue
-      var n = 0L
-      var bytes = 0L
-      val done = scala.collection.mutable.ArrayBuffer.empty[Row]
-      def close(): Unit = if (out != null) {
-        out.close()
-        ss.commit()
-        done += Row(cur, path, n, bytes)
-        out = null; ss = null
-      }
-      val emitted = it.flatMap { r =>
-        val sh = r.getInt(0)
-        val flushed = if (sh != cur) {
-          close()
-          if (cur == Int.MinValue) // first write of this task: verify
-            ShardIO.requirePrepared(hc, outDir, planToken)
-          cur = sh
-          path = s"$outDir/shard-${"%05d".format(sh)}-of-" +
-            s"${"%05d".format(nShards)}.tfrecord"
-          ss = ShardIO.begin(hc, path)
-          out = new java.io.BufferedOutputStream(ss.raw)
-          n = 0L; bytes = 0L
-          val f = done.toList; done.clear(); f
-        } else Nil
-        bytes += writeRecord(out, r.getAs[Array[Byte]](2))
-        n += 1
-        flushed
-      }
-      emitted ++ new Iterator[Row] {
-        private var tail: List[Row] = null
-        override def hasNext: Boolean = {
-          if (tail == null) { close(); tail = done.toList }
-          tail.nonEmpty
-        }
-        override def next(): Row = {
-          val h = tail.head; tail = tail.tail; h
-        }
-      }
-    }(enc)
-    // overwrite semantics at FIRST EXECUTION (not plan build): a plan
-    // that is never acted on touches nothing — see ShardIO's contract
-    ShardIO.withLazyPrepare(report, hc, outDir, planToken)
-  }
+      outDir: String, nShards: Int): DataFrame =
+    ShardIO.writeShards(df, idCol, Seq(payload(df, valueCol)), outDir,
+        nShards, Pattern, "n_records") { (out, r) =>
+      val v = r.getAs[Array[Byte]](2)
+      if (v == null) throw new IllegalArgumentException(
+        s"TFRecord export: value column `$valueCol` is NULL at shard " +
+          s"${r.getInt(0)} seq ${r.getLong(1)}; a record needs a payload")
+      writeRecord(out, v)
+    }
 
   /** JOB-level atomic export: [[writeShards]] + verification + the
     * terminal `_MANIFEST.jsonl` commit ([[ShardIO.commitExport]]).

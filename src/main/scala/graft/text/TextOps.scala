@@ -1573,7 +1573,7 @@ object TextOps {
       require(!docs.columns.contains(c),
         s"column $c collides with leakSafeSplit's output columns"))
     val sigs = minhashSignature(docs, idCol, textCol, k)
-    val bux = lshBuckets(sigs, idCol, k, rows).localCheckpoint(eager = false)
+    val bux = lshBuckets(sigs, idCol, k, rows).barrierFirewall()
     val pairs = lshCandidatePairs(bux, idCol)
     val clusters = nearDupClusters(pairs)
       .select(col("id").as(idCol), col("cluster").as("__cl"))
@@ -2728,7 +2728,7 @@ object TextOps {
     *
     * Scale shape: each corpus is shingled exactly once — the target
     * into a <=buckets-row count table, the raw pool into a
-    * per-(doc, bucket) count table (localCheckpointed, so its two
+    * per-(doc, bucket) count table (a firewall barrier, so its two
     * consumers share the single explode pass); the model totals are
     * sums over those tables, never a re-scan. The scorer joins the
     * per-(doc, bucket) counts to the KB-sized model broadcast-style
@@ -2751,21 +2751,17 @@ object TextOps {
     // <=buckets-row count table, the raw pool to a per-(doc, bucket)
     // count table, and every total below is a sum over those tables
     // rather than a second (or third) explode+hash pass over the
-    // corpus. localCheckpoint pins each single pass because both
+    // corpus. A firewall barrier pins each single pass because both
     // frames feed two branches (model + totals, model + scorer).
     // coalesce(sum, 0): sum() over an EMPTY count table is NULL, which
     // would null every downstream weight — an empty target/raw frame
     // must degrade to the defined smoothed log-ratios the old
     // count-based totals gave, not to all-NULL scores.
-    // eager = false: building the DataFrame must not launch Spark jobs
-    // before the caller runs an action (framework-API contract); the
-    // checkpoint materializes at the first action and the branches
-    // still share the single shingle pass.
     val tgt = bucketed(target).groupBy("__b")
-      .agg(count(lit(1)).as("__ct")).localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("__ct")).barrierFirewall()
     val tgtTot = tgt.agg(coalesce(sum("__ct"), lit(0L)).as("__tt"))
     val rawDoc = bucketed(raw).groupBy(col(idCol), col("__b"))
-      .agg(count(lit(1)).as("__c")).localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("__c")).barrierFirewall()
     val rawCnt = rawDoc.groupBy("__b").agg(sum("__c").as("__cr"))
     val rawTot = rawCnt.agg(coalesce(sum("__cr"), lit(0L)).as("__rt"))
     val model = rawCnt.join(tgt, Seq("__b"), "full")
