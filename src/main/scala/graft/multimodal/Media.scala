@@ -1352,6 +1352,11 @@ object Media {
       (a == 'R' && b == 'I' && c == 'F' && d == 'F')
     }
 
+  /** The javax.sound format-conversion providers, resolved once per
+    * JVM like [[audioFileReaders]] (the same per-call registry scan,
+    * for [[audioConvert]]). Bounded: the array never grows after
+    * first use, and its size is the number of installed
+    * `FormatConversionProvider` SPI implementations. */
   private lazy val audioConversionProviders
       : Array[javax.sound.sampled.spi.FormatConversionProvider] = {
     val it = java.util.ServiceLoader.load(
@@ -1665,8 +1670,8 @@ object Media {
 
   /** 64-bit audio ENERGY-ENVELOPE fingerprint — the audio sibling of
     * [[imageHash]]: real PCM decode ([[pcmSamples]]), the first 16
-    * fixed-size windows' RMS levels quantized to 4 bits each
-    * (`min(15, round(rms) / levelStep)`) and packed window-w-at-bits
+    * 1000-sample windows' RMS levels quantized to 4 bits each
+    * (`min(15, round(rms) / 256)`) and packed window-w-at-bits
     * [4w, 4w+4) — a coarse loudness profile that survives re-encoding
     * and small amplitude noise (the dominant duplicate classes for
     * crawled audio: same clip re-uploaded, transcoded, or gain-shifted
@@ -1674,22 +1679,7 @@ object Media {
     * fingerprint. Per-partition map with no shuffle; clips shorter
     * than 16 windows leave the high nibbles 0 (duration is part of
     * the profile). */
-  def audioFingerprint(media: DataFrame, windowSamples: Int = 1000,
-      levelStep: Int = 256): DataFrame = {
-    require(windowSamples > 0 && levelStep > 0,
-      s"invalid fingerprint params: $windowSamples/$levelStep")
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("afp", LongType)))
-    val enc = Encoders.row(schema)
-    media.select("media_id", "payload").mapPartitions { rows =>
-      rows.map { r =>
-        Row(r.getLong(0),
-          audioFingerprintOf(r.getAs[Array[Byte]](1), windowSamples,
-            levelStep).map(java.lang.Long.valueOf).orNull)
-      }
-    }(enc)
-  }
+  def audioFingerprint(media: DataFrame): DataFrame = fingerprint(media, "audio")
 
   /** Per-payload core of [[audioFingerprint]] — shared with the
     * streaming twin ([[graft.streaming.MediaStreams]]). */
@@ -1714,19 +1704,6 @@ object Media {
       acc
     }
 
-  /** Audio near-duplicate pairs — [[imageNearDups]]' audio sibling:
-    * [[audioFingerprint]] envelopes through the shared
-    * [[bandedHammingPairs]] machinery (4 x 16-bit bands, hot-bucket
-    * capped candidates, exact Hamming verify). Returns (a_id, b_id,
-    * hamming); cluster + drop survivors with
-    * [[graft.text.TextOps.nearDupClusters]] as everywhere else. */
-  def audioNearDups(media: DataFrame, maxHamming: Int = 3,
-      windowSamples: Int = 1000): DataFrame =
-    bandedHammingPairs(
-      audioFingerprint(media, windowSamples)
-        .filter(col("afp").isNotNull).barrierFirewall(),
-      "afp", maxHamming)
-
   /** Planted near-duplicate audio classes over [[buildSquareWav]] —
     * [[syntheticPatternBmps]]' audio twin: five consecutive ids share
     * one md5-derived 60-bit envelope pattern (`cls = id / 5`), member
@@ -1735,26 +1712,12 @@ object Media {
     * nibble exactly). [[audioFingerprint]] over the REAL codec path
     * provably equals the planted pattern, making the whole
     * band-join + Hamming + CC chain externally SQL-recomputable. */
-  def syntheticEnvelopeWavs(df: DataFrame, idCol: String,
-      windowSamples: Int = 1000): DataFrame = {
-    val enc = Encoders.row(mediaSchema)
-    df.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        rows.map { r =>
-          val id = r.getLong(0)
-          md.reset()
-          val hex = md.digest(s"audcls:${id / 5}".getBytes("UTF-8"))
-            .map(b => f"$b%02x").mkString
-          val base = java.lang.Long.parseLong(hex.substring(0, 15), 16)
-          val pattern = base ^ ((1L << (id % 5).toInt) - 1L)
-          val amps = (0 until 16).map(w =>
-            ((pattern >>> (4 * w)) & 0xfL).toInt * 256 + 128)
-          Row(id, "audio", buildSquareWav(amps, windowSamples),
-            Row("synthetic", "wav"))
-        }
-      }(enc)
-  }
+  def syntheticEnvelopeWavs(df: DataFrame, idCol: String): DataFrame =
+    plantedPatterns(df, idCol, "audcls") { (id, pattern) =>
+      val amps = (0 until 16).map(w =>
+        ((pattern >>> (4 * w)) & 0xfL).toInt * 256 + 128)
+      Row(id, "audio", buildSquareWav(amps), Row("synthetic", "wav"))
+    }
 
   /** 64-bit video LUMINANCE-ENVELOPE fingerprint — the video sibling
     * of [[imageHash]]/[[audioFingerprint]]: real container walk +
@@ -1767,19 +1730,7 @@ object Media {
     * payloads emit a null fingerprint; clips shorter than 16 frames
     * leave the high nibbles 0 (length is part of the profile).
     * Per-partition map, no shuffle. */
-  def videoFingerprint(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("vfp", LongType)))
-    val enc = Encoders.row(schema)
-    media.select("media_id", "payload").mapPartitions { rows =>
-      rows.map { r =>
-        Row(r.getLong(0),
-          videoFingerprintOf(r.getAs[Array[Byte]](1))
-            .map(java.lang.Long.valueOf).orNull)
-      }
-    }(enc)
-  }
+  def videoFingerprint(media: DataFrame): DataFrame = fingerprint(media, "video")
 
   /** Per-payload core of [[videoFingerprint]] — shared with the
     * streaming twin ([[graft.streaming.MediaStreams]]). */
@@ -1812,15 +1763,6 @@ object Media {
     }
   }
 
-  /** Video near-duplicate pairs — [[imageNearDups]]' video sibling:
-    * [[videoFingerprint]] envelopes through the shared
-    * [[bandedHammingPairs]] machinery. Returns (a_id, b_id, hamming);
-    * cluster + drop with the usual CC chain. */
-  def videoNearDups(media: DataFrame, maxHamming: Int = 3): DataFrame =
-    bandedHammingPairs(
-      videoFingerprint(media).filter(col("vfp").isNotNull).barrierFirewall(),
-      "vfp", maxHamming)
-
   /** Planted near-duplicate video classes over [[buildMp4FramesWith]]
     * — [[syntheticPatternBmps]]' video twin: five consecutive ids
     * share one md5-derived 60-bit envelope pattern (`cls = id / 5`),
@@ -1831,24 +1773,12 @@ object Media {
     * equals the planted pattern — the whole band join + Hamming + CC
     * chain is externally SQL-recomputable while Spark still earns it
     * through real ISO-BMFF bytes and raw RGB24 frame decode. */
-  def syntheticPatternMp4s(df: DataFrame, idCol: String): DataFrame = {
-    val enc = Encoders.row(mediaSchema)
-    df.select(col(idCol).cast("long").as("media_id"))
-      .mapPartitions { rows =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        rows.map { r =>
-          val id = r.getLong(0)
-          md.reset()
-          val hex = md.digest(s"vidcls:${id / 5}".getBytes("UTF-8"))
-            .map(b => f"$b%02x").mkString
-          val base = java.lang.Long.parseLong(hex.substring(0, 15), 16)
-          val pattern = base ^ ((1L << (id % 5).toInt) - 1L)
-          val payload = buildMp4FramesWith(8, 6, 16, 10, mjpeg = false,
-            (_, _, f) => (((pattern >>> (4 * f)) & 0xfL).toInt << 4) | 8)
-          Row(id, "video", payload, Row("synthetic", "mp4"))
-        }
-      }(enc)
-  }
+  def syntheticPatternMp4s(df: DataFrame, idCol: String): DataFrame =
+    plantedPatterns(df, idCol, "vidcls") { (id, pattern) =>
+      val payload = buildMp4FramesWith(8, 6, 16, 10, mjpeg = false,
+        (_, _, f) => (((pattern >>> (4 * f)) & 0xfL).toInt << 4) | 8)
+      Row(id, "video", payload, Row("synthetic", "mp4"))
+    }
 
   /** Real image resize: decode -> bilinear resample -> re-encode PNG.
     * Rows whose payload is not a decodable image pass through with a
@@ -1880,26 +1810,18 @@ object Media {
     * group by hash (exact dups) or LSH over bit bands (near dups) —
     * the same bucketing machinery as the text MinHash track. Null for
     * undecodable payloads. */
-  def imageHash(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("ahash", LongType)))
-    val enc = Encoders.row(schema)
-    media.select("media_id", "payload").mapPartitions { rows =>
-      rows.map { r =>
-        val id = r.getLong(0)
-        val h = decodeImage(r.getAs[Array[Byte]](1)).map { img =>
-          val g = withResampled(img, 8, 8)(p =>
-            Array.tabulate(64)(i => gray(p.getRGB(i % 8, i / 8))))
-          val mean = g.sum / 64.0
-          g.zipWithIndex.foldLeft(0L) {
-            case (acc, (v, i)) => if (v > mean) acc | (1L << i) else acc
-          }
-        }
-        Row(id, h.map(java.lang.Long.valueOf).orNull)
+  def imageHash(media: DataFrame): DataFrame = fingerprint(media, "image")
+
+  /** Per-payload core of [[imageHash]]. */
+  def imageHashOf(payload: Array[Byte]): Option[Long] =
+    decodeImage(payload).map { img =>
+      val g = withResampled(img, 8, 8)(p =>
+        Array.tabulate(64)(i => gray(p.getRGB(i % 8, i / 8))))
+      val mean = g.sum / 64.0
+      g.zipWithIndex.foldLeft(0L) {
+        case (acc, (v, i)) => if (v > mean) acc | (1L << i) else acc
       }
-    }(enc)
-  }
+    }
 
   /** Fixed-point 8x8 DCT-II cosine table for [[imagePHash]]:
     * round(cos((2x+1) u pi / 16) * 2^14). ONE source of truth — the
@@ -1920,85 +1842,117 @@ object Media {
     * brightness/contrast shifts that flip aHash bits near the mean,
     * while staying bit-identical across engines and platforms (all
     * integer arithmetic; ties AT the median are 0 in both engines).
-    * Null for undecodable payloads. Near-dup pairs: rename `phash` to
-    * `ahash` and feed [[imageNearDupsFromHashes]] — the same banded
-    * Hamming geometry. */
-  def imagePHash(media: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("phash", LongType)))
-    val enc = Encoders.row(schema)
-    media.select("media_id", "payload").mapPartitions { rows =>
+    * Null for undecodable payloads. Near-dup pairs: filter the null
+    * hashes and feed `bandedHammingPairs(sigs, "phash")` — the same
+    * banded Hamming geometry. */
+  def imagePHash(media: DataFrame): DataFrame =
+    fingerprintFrame(media, "phash", imagePHashOf)
+
+  /** Per-payload core of [[imagePHash]]. */
+  def imagePHashOf(payload: Array[Byte]): Option[Long] =
+    decodeImage(payload).map { img =>
       val ct = PhashCosTable
-      rows.map { r =>
-        val id = r.getLong(0)
-        val h = decodeImage(r.getAs[Array[Byte]](1)).map { img =>
-          val g = withResampled(img, 8, 8)(p =>
-            Array.tabulate(64)(i => math.round(gray(p.getRGB(i % 8, i / 8)))))
-          val dct = Array.ofDim[Long](64)
-          var u = 0
-          while (u < 8) {
-            var v = 0
-            while (v < 8) {
-              var acc = 0L
-              var y = 0
-              while (y < 8) {
-                var x = 0
-                while (x < 8) {
-                  acc += g(y * 8 + x) * ct(u)(x) * ct(v)(y)
-                  x += 1
-                }
-                y += 1
-              }
-              dct(v * 8 + u) = acc
-              v += 1
+      val g = withResampled(img, 8, 8)(p =>
+        Array.tabulate(64)(i => math.round(gray(p.getRGB(i % 8, i / 8)))))
+      val dct = Array.ofDim[Long](64)
+      var u = 0
+      while (u < 8) {
+        var v = 0
+        while (v < 8) {
+          var acc = 0L
+          var y = 0
+          while (y < 8) {
+            var x = 0
+            while (x < 8) {
+              acc += g(y * 8 + x) * ct(u)(x) * ct(v)(y)
+              x += 1
             }
-            u += 1
+            y += 1
           }
-          val ac = java.util.Arrays.copyOfRange(dct, 1, 64)
-          java.util.Arrays.sort(ac)
-          val median = ac(31) // lower median of 63 AC coefficients
-          var bits = 0L
-          var i = 1
-          while (i < 64) {
-            if (dct(i) > median) bits |= (1L << i)
-            i += 1
-          }
-          bits
+          dct(v * 8 + u) = acc
+          v += 1
         }
-        Row(id, h.map(java.lang.Long.valueOf).orNull)
+        u += 1
+      }
+      val ac = java.util.Arrays.copyOfRange(dct, 1, 64)
+      java.util.Arrays.sort(ac)
+      val median = ac(31) // lower median of 63 AC coefficients
+      var bits = 0L
+      var i = 1
+      while (i < 64) {
+        if (dct(i) > median) bits |= (1L << i)
+        i += 1
+      }
+      bits
+    }
+
+  /** The kind table: the one place a media kind picks its 64-bit
+    * fingerprint and names its signature column — image -> `ahash`
+    * ([[imageHashOf]]), audio -> `afp` ([[audioFingerprintOf]]), video
+    * -> `vfp` ([[videoFingerprintOf]]). `windowSamples`/`levelStep`
+    * are the audio envelope's quantization knobs (the streaming
+    * operators expose them); image and video have none. */
+  private[graft] def kindSignature(kind: String, windowSamples: Int = 1000,
+      levelStep: Int = 256): (String, Array[Byte] => Option[Long]) =
+    kind match {
+      case "image" => ("ahash", imageHashOf _)
+      case "audio" => ("afp", audioFingerprintOf(_, windowSamples, levelStep))
+      case "video" => ("vfp", videoFingerprintOf _)
+      case other => throw new IllegalArgumentException(
+        s"unknown media kind '$other': expected one of image, audio, video")
+    }
+
+  /** The one fingerprint kernel: a per-partition map (no shuffle) from
+    * (media_id, payload, passThrough...) to (media_id, sigCol,
+    * passThrough...), where sigCol is `of(payload)` and null when the
+    * payload does not decode. Every fingerprint frame — [[fingerprint]]
+    * per kind, [[imagePHash]], and the streaming
+    * [[graft.streaming.MediaStreams]] stage — is this map. */
+  private[graft] def fingerprintFrame(media: DataFrame, sigCol: String,
+      of: Array[Byte] => Option[Long], passThrough: String*): DataFrame = {
+    val in = media.select("media_id", "payload" +: passThrough: _*)
+    val enc = Encoders.row(StructType(StructField("media_id", LongType) +:
+      StructField(sigCol, LongType) +: in.schema.fields.drop(2).toSeq))
+    in.mapPartitions { rows =>
+      rows.map { r =>
+        val sig = of(r.getAs[Array[Byte]](1)).map(java.lang.Long.valueOf).orNull
+        Row.fromSeq(r.getLong(0) +: sig +: (2 until r.length).map(r.get))
       }
     }(enc)
   }
 
-  /** Image near-duplicate pairs — the multimodal twin of
-    * [[graft.text.TextOps.simhashNearDupPairs]]: 64-bit average-hash
-    * fingerprints ([[imageHash]], real decoded pixels) band-bucketed
-    * into 4 x 16-bit bands (pigeonhole: every pair within Hamming
-    * distance 3 shares at least one band; raising `maxHamming` above 3
-    * trades recall exactly like text SimHash), then an exact
-    * bit_count(xor) verify per candidate. Returns (a_id, b_id,
-    * hamming) with hamming <= maxHamming; undecodable payloads (null
-    * hash) never pair. Cluster + drop survivors by feeding the pairs
-    * to [[graft.text.TextOps.nearDupClusters]] /
-    * `dropNearDuplicates` — the same CC machinery as text.
-    *
-    * Scale shape: per-partition decode (the imageHash map), then a
-    * banded candidate join — never all-pairs; the signature frame is
-    * materialized once (it is referenced four times below). */
-  def imageNearDups(media: DataFrame, maxHamming: Int = 3): DataFrame =
-    imageNearDupsFromHashes(
-      imageHash(media).filter(col("ahash").isNotNull).barrierFirewall(),
-      maxHamming)
+  /** `kind`'s 64-bit fingerprint per media row: (media_id, sigCol) with
+    * the column named by the kind table ([[kindSignature]]) and null
+    * for undecodable payloads. Throws IllegalArgumentException for a
+    * kind other than image, audio or video. */
+  def fingerprint(media: DataFrame, kind: String): DataFrame = {
+    val (sigCol, of) = kindSignature(kind)
+    fingerprintFrame(media, sigCol, of)
+  }
 
-  /** [[imageNearDups]] from an already-computed (media_id, ahash)
-    * signature frame — pipelines that also need the hashes downstream
-    * (e.g. [[graft.pipeline.Pipeline.imageCaptionCurateNearDup]]) pass
-    * their own materialized frame so the decode runs once. Null hashes
-    * must already be filtered; callers with an expensive lineage
-    * should cache the frame (it is referenced three times). */
-  def imageNearDupsFromHashes(sigs: DataFrame, maxHamming: Int = 3): DataFrame =
-    bandedHammingPairs(sigs, "ahash", maxHamming)
+  /** Near-duplicate media pairs of one kind — the multimodal twin of
+    * [[graft.text.TextOps.simhashNearDupPairs]]: the kind's 64-bit
+    * fingerprints ([[fingerprint]] — real decoded pixels, PCM or
+    * frames) with undecodable payloads dropped, band-bucketed by
+    * [[bandedHammingPairs]] into 4 x 16-bit bands (pigeonhole: every
+    * pair within Hamming distance 3 shares at least one band; raising
+    * `maxHamming` above 3 trades recall exactly like text SimHash),
+    * then an exact bit_count(xor) verify per candidate. Returns (a_id,
+    * b_id, hamming) with hamming <= maxHamming. Cluster + drop
+    * survivors by feeding the pairs to
+    * [[graft.text.TextOps.nearDupClusters]] / `dropNearDuplicates` —
+    * the same CC machinery as text.
+    *
+    * Scale shape: per-partition decode, then a banded candidate join —
+    * never all-pairs; the signature frame is materialized once (the
+    * pair build reads it three times). */
+  def nearDups(media: DataFrame, kind: String, maxHamming: Int = 3): DataFrame = {
+    val (sigCol, of) = kindSignature(kind)
+    bandedHammingPairs(
+      fingerprintFrame(media, sigCol, of)
+        .filter(col(sigCol).isNotNull).barrierFirewall(),
+      sigCol, maxHamming)
+  }
 
   /** Shared banded-Hamming candidate machinery over ANY 64-bit
     * signature column — the one near-dup geometry every fingerprint
@@ -2092,20 +2046,31 @@ object Media {
     * (md5 hex parse + xor + bit_count), yet the Spark side still
     * earns it: real BMP bytes, real ImageIO decode, real resample/
     * gray/mean hashing. */
-  def syntheticPatternBmps(df: DataFrame, idCol: String): DataFrame = {
+  def syntheticPatternBmps(df: DataFrame, idCol: String): DataFrame =
+    plantedPatterns(df, idCol, "imgcls") { (id, pattern) =>
+      Row(id, "image", buildBmpPattern(pattern), Row("synthetic", "bmp"))
+    }
+
+  /** The planted-class rule [[syntheticPatternBmps]],
+    * [[syntheticEnvelopeWavs]] and [[syntheticPatternMp4s]] share: id's
+    * class `cls = id / 5` takes the first 15 hex digits of
+    * md5(`salt:cls`) as its 60-bit base pattern, member `id % 5 = p`
+    * XORs in the low-p-bit mask `(1 << p) - 1`, and `build(id, pattern)`
+    * renders the media row. The DuckDB oracle mirrors this rule per
+    * salt, so a salt never changes. */
+  private def plantedPatterns(df: DataFrame, idCol: String, salt: String)(
+      build: (Long, Long) => Row): DataFrame = {
     val enc = Encoders.row(mediaSchema)
     df.select(col(idCol).cast("long").as("media_id"))
       .mapPartitions { rows =>
         val md = java.security.MessageDigest.getInstance("MD5")
         rows.map { r =>
           val id = r.getLong(0)
-          val cls = id / 5
           md.reset()
-          val hex = md.digest(s"imgcls:$cls".getBytes("UTF-8"))
+          val hex = md.digest(s"$salt:${id / 5}".getBytes("UTF-8"))
             .map(b => f"$b%02x").mkString
           val base = java.lang.Long.parseLong(hex.substring(0, 15), 16)
-          val pattern = base ^ ((1L << (id % 5).toInt) - 1L)
-          Row(id, "image", buildBmpPattern(pattern), Row("synthetic", "bmp"))
+          build(id, base ^ ((1L << (id % 5).toInt) - 1L))
         }
       }(enc)
   }

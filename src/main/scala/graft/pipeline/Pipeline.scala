@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.multimodal.Media
 import graft.text.TextOps
 import graft.util.Barriers.FirewallOps
 
@@ -149,163 +150,78 @@ object Pipeline {
     * decode (never pay the codec for a duplicate), caption curation
     * AFTER image survival (a caption dropped with its duplicate image
     * must not influence text near-dup clustering). Near-duplicate
-    * IMAGE dedup (aHash bands, [[graft.multimodal.Media.imageNearDups]])
-    * composes the same way — pairs -> CC -> drop — and is pinned at
-    * spec level (PipelineSpec), where planted perturbed copies make
-    * the expected clusters exact; its hash values ride through lossy
-    * codecs and bilinear resampling, so an external SQL oracle can
-    * only mirror the byte-identity stage.
+    * IMAGE dedup (aHash bands, [[captionCurateNearDup]] with
+    * `kind = "image"`) composes the same way — pairs -> CC -> drop — and
+    * is pinned at spec level (PipelineSpec), where planted perturbed
+    * copies make the expected clusters exact; its hash values ride
+    * through lossy codecs and bilinear resampling, so an external SQL
+    * oracle can only mirror the byte-identity stage.
+    *
+    * `media` must carry the standard media columns (media_id, kind,
+    * payload) — the synthetic builders' and
+    * [[graft.multimodal.Media.fromText]]'s shape; `captions` carries
+    * (idCol, textCol) keyed by the same ids as media_id.
     *
     * Scale shape: the payload-hash dedup is one hash agg over
     * (md5(payload), min id) — map-side combinable, shuffle ∝ distinct
     * images; decode is per-partition and touches survivors only;
     * the caption stages inherit [[graft.text.TextOps.curateCorpus]]'s
     * measured curve. */
-  /** `media` must carry the standard media columns (media_id, kind,
-    * payload) — the synthetic builders' and
-    * [[graft.multimodal.Media.fromText]]'s shape; `captions` carries
-    * (idCol, textCol) keyed by the same ids as media_id. */
   def imageCaptionCurate(media: DataFrame, captions: DataFrame,
       idCol: String, textCol: String,
       minJaccard: Double = 0.5, minTokens: Long = 20, maxTokens: Long = 80,
       maxTopWordFrac: Double = 0.12,
       keepLangs: Seq[String] = Seq("en")): DataFrame = {
     // id-scale barrier: both modalities' survivor joins consume it
-    val keep = media.groupBy(md5(col("payload")).as("__h"))
-      .agg(min(col("media_id")).as("media_id"))
-      .select("media_id")
-      .barrierFirewall()
-    val survivors = media.join(keep, Seq("media_id"), "left_semi")
-    val meta = graft.multimodal.Media.decode(survivors)
+    val keep = byteUnique(media).barrierFirewall()
+    val meta = Media.decode(media.join(keep, Seq("media_id"), "left_semi"))
       .select(col("media_id"), col("format"), col("width"), col("height"))
-    val caps = captions.select(col(idCol), col(textCol))
-      .join(keep.select(col("media_id").as(idCol)), Seq(idCol), "left_semi")
-    val curated = TextOps.curateCorpus(caps, idCol, textCol,
+    captionTail(keep, meta, captions, idCol, textCol,
       minJaccard, minTokens, maxTokens, maxTopWordFrac, keepLangs)
-    curated
-      .join(meta, curated(idCol) === meta("media_id"))
-      .select(col(idCol), col("format"), col("width"), col("height"),
-        size(TextOps.tokens(col(textCol))).cast("long").as("n_tokens"))
   }
 
-  /** [[imageCaptionCurate]] with NEAR-duplicate image dedup: the aHash
-    * band join + Hamming verify + connected-components chain
-    * ([[graft.multimodal.Media.imageNearDupsFromHashes]] — hot-bucket
-    * capped like every candidate generator) replaces the byte-identity
-    * stage, each near-dup image cluster keeps its min-id member, and
-    * the caption curation core runs over the survivors only. Returns
-    * (idCol, ahash, n_tokens) — the hash column pins the REAL decode
-    * path (for [[graft.multimodal.Media.syntheticPatternBmps]] inputs
-    * it provably equals the planted pattern, which is what makes the
-    * whole composition externally mirrorable, t122).
+  /** Caption curation behind NEAR-duplicate media dedup: `kind`'s
+    * 64-bit fingerprint ([[graft.multimodal.Media.fingerprint]] — image
+    * aHash, audio energy envelope or video luminance envelope, each a
+    * real decode path) drives the banded-Hamming pair build + Hamming
+    * verify + connected-components chain
+    * ([[graft.multimodal.Media.bandedHammingPairs]] — hot-bucket capped
+    * like every candidate generator), each near-dup cluster keeps its
+    * min-id member, and the caption curation core runs over the
+    * survivors only. Returns (idCol, sigCol, n_tokens) with sigCol the
+    * kind's signature column (`ahash`, `afp` or `vfp`) — it pins the
+    * REAL decode path: for the planted-pattern builders
+    * ([[graft.multimodal.Media.syntheticPatternBmps]] and its audio and
+    * video twins) it provably equals the planted pattern, which is what
+    * makes the whole composition externally mirrorable (t122, t129,
+    * t130). Throws IllegalArgumentException for a kind other than
+    * image, audio or video.
     *
-    * Stage order contract mirrors [[imageCaptionCurate]]: image decode
-    * happens once (the signature frame is the shared barrier), image
+    * Stage order contract mirrors [[imageCaptionCurate]]: decode
+    * happens once (the signature frame is the shared barrier), media
     * survival gates caption curation — a caption dropped with its
-    * near-dup image never influences text clustering. */
-  def imageCaptionCurateNearDup(media: DataFrame, captions: DataFrame,
-      idCol: String, textCol: String, maxHamming: Int = 3,
+    * near-dup media never influences text clustering. */
+  def captionCurateNearDup(media: DataFrame, captions: DataFrame,
+      idCol: String, textCol: String, kind: String, maxHamming: Int = 3,
       minJaccard: Double = 0.5, minTokens: Long = 20, maxTokens: Long = 80,
       maxTopWordFrac: Double = 0.12,
-      keepLangs: Seq[String] = Seq("en")): DataFrame =
-    // one decode for both the near-dup chain and the output hashes
-    signatureCaptionCurateNearDup(
-      graft.multimodal.Media.imageHash(media)
-        .filter(col("ahash").isNotNull).barrierFirewall(),
-      captions, idCol, textCol, "ahash", maxHamming,
+      keepLangs: Seq[String] = Seq("en")): DataFrame = {
+    val nd = nearDupStages(media, kind, maxHamming)
+    captionTail(nd.keep, nd.decodable, captions, idCol, textCol,
       minJaccard, minTokens, maxTokens, maxTopWordFrac, keepLangs)
-
-  /** [[imageCaptionCurateNearDup]]'s audio edition (t129): the 64-bit
-    * energy envelope ([[graft.multimodal.Media.audioFingerprint]],
-    * real PCM decode) drives the near-dup stage; surviving clips'
-    * captions run the curation core. Returns (idCol, afp, n_tokens). */
-  def audioCaptionCurateNearDup(media: DataFrame, captions: DataFrame,
-      idCol: String, textCol: String, maxHamming: Int = 3,
-      minJaccard: Double = 0.5, minTokens: Long = 20, maxTokens: Long = 80,
-      maxTopWordFrac: Double = 0.12,
-      keepLangs: Seq[String] = Seq("en")): DataFrame =
-    signatureCaptionCurateNearDup(
-      graft.multimodal.Media.audioFingerprint(media)
-        .filter(col("afp").isNotNull).barrierFirewall(),
-      captions, idCol, textCol, "afp", maxHamming,
-      minJaccard, minTokens, maxTokens, maxTopWordFrac, keepLangs)
-
-  /** [[imageCaptionCurateNearDup]]'s video edition (t130): the 64-bit
-    * luminance envelope ([[graft.multimodal.Media.videoFingerprint]],
-    * real container walk + frame decode) drives the near-dup stage.
-    * Returns (idCol, vfp, n_tokens). */
-  def videoCaptionCurateNearDup(media: DataFrame, captions: DataFrame,
-      idCol: String, textCol: String, maxHamming: Int = 3,
-      minJaccard: Double = 0.5, minTokens: Long = 20, maxTokens: Long = 80,
-      maxTopWordFrac: Double = 0.12,
-      keepLangs: Seq[String] = Seq("en")): DataFrame =
-    signatureCaptionCurateNearDup(
-      graft.multimodal.Media.videoFingerprint(media)
-        .filter(col("vfp").isNotNull).barrierFirewall(),
-      captions, idCol, textCol, "vfp", maxHamming,
-      minJaccard, minTokens, maxTokens, maxTopWordFrac, keepLangs)
-
-  /** The signature-agnostic near-dup caption-curation core the three
-    * modality pipelines above share: a (media_id, sigCol) 64-bit
-    * signature frame (already decoded, nulls filtered, CACHED by the
-    * caller — it is read three times) drives
-    * [[graft.multimodal.Media.bandedHammingPairs]] + CC + min-id
-    * survivor selection, survivors gate the caption curation core, and
-    * the output carries the signature column so planted-pattern inputs
-    * stay externally mirrorable end-to-end. Stage order contract as
-    * [[imageCaptionCurate]]: decode once, media survival gates caption
-    * clustering. */
-  def signatureCaptionCurateNearDup(sigs: DataFrame, captions: DataFrame,
-      idCol: String, textCol: String, sigCol: String, maxHamming: Int,
-      minJaccard: Double, minTokens: Long, maxTokens: Long,
-      maxTopWordFrac: Double, keepLangs: Seq[String]): DataFrame = {
-    val pairs = graft.multimodal.Media
-      .bandedHammingPairs(sigs, sigCol, maxHamming)
-      .select("a_id", "b_id")
-    val keep = TextOps.dropNearDuplicates(
-      sigs.select("media_id"), "media_id", pairs)
-    val caps = captions.select(col(idCol), col(textCol))
-      .join(keep.select(col("media_id").as(idCol)), Seq(idCol), "left_semi")
-    val curated = TextOps.curateCorpus(caps, idCol, textCol,
-      minJaccard, minTokens, maxTokens, maxTopWordFrac, keepLangs)
-    // sigs' own media_id is renamed before the join so a caller whose
-    // idCol IS "media_id" cannot hit an ambiguous-column resolution
-    val sigSide = sigs.select(col("media_id").as("__sig_mid"), col(sigCol))
-    curated
-      .join(sigSide, curated(idCol) === sigSide("__sig_mid"))
-      .select(col(idCol), col(sigCol),
-        size(TextOps.tokens(col(textCol))).cast("long").as("n_tokens"))
   }
 
   /** Multimodal pipeline FUNNEL — the observability row a multimodal
     * curation team reads per ingest batch, [[graft.queries.TextQueries]]
-    * t121's sibling for [[imageCaptionCurateNearDup]]: one row per
-    * stage with the surviving document count, so a broken crawler
-    * (decodable collapse), a templated image source (near-dup
+    * t121's sibling for [[captionCurateNearDup]]: one row per stage
+    * with the surviving document count, so a broken crawler
+    * (decodable collapse), a templated media source (near-dup
     * collapse) or a caption-quality regression (curation collapse)
-    * shows up as the stage where the funnel suddenly narrows.
-    * Stages: media -> decodable -> image_unique (near-dup survivors)
-    * -> curated (captions through the full curation core). Returns
-    * (stage_idx, stage, n_docs). Each count is an id-scale aggregate
-    * over frames the pipeline builds anyway — the funnel adds no new
-    * shuffle class. */
-  def multimodalFunnel(media: DataFrame, captions: DataFrame,
-      idCol: String, textCol: String, maxHamming: Int = 3,
-      minJaccard: Double = 0.5, minTokens: Long = 20, maxTokens: Long = 80,
-      maxTopWordFrac: Double = 0.12,
-      keepLangs: Seq[String] = Seq("en")): DataFrame =
-    modalFunnel(media, captions, idCol, textCol, "image", maxHamming,
-      minJaccard, minTokens, maxTokens, maxTopWordFrac, keepLangs)
-
-  /** [[multimodalFunnel]] parameterized over the signature-agnostic
-    * near-dup core: `kind` selects the fingerprint kernel (image aHash
-    * / audio energy envelope / video luminance envelope — each a real
-    * decode path) and names the near-dup stage `<kind>_unique`, so the
-    * audio and video caption pipelines (t129/t130) get the same
-    * per-stage observability row the image pipeline reads (t128).
-    * Stages: media -> decodable (fingerprintable payloads) ->
-    * <kind>_unique (banded-Hamming near-dup survivors) -> curated
-    * (captions through the full curation core). Returns
+    * shows up as the stage where the funnel suddenly narrows. `kind`
+    * selects the fingerprint as in [[captionCurateNearDup]] and names
+    * the near-dup stage. Stages: media -> decodable (fingerprintable
+    * payloads) -> <kind>_unique (banded-Hamming near-dup survivors) ->
+    * curated (captions through the full curation core). Returns
     * (stage_idx, stage, n_docs); every count is an id-scale aggregate
     * over frames the pipeline builds anyway — no new shuffle class. */
   def modalFunnel(media: DataFrame, captions: DataFrame,
@@ -313,39 +229,16 @@ object Pipeline {
       minJaccard: Double = 0.5, minTokens: Long = 20, maxTokens: Long = 80,
       maxTopWordFrac: Double = 0.12,
       keepLangs: Seq[String] = Seq("en")): DataFrame = {
-    val m = graft.multimodal.Media
-    // The UNFILTERED fingerprint frame is the barrier (r17): every
-    // fingerprint kernel emits exactly one row per media row (null
-    // signature for undecodable payloads), so stage 0's media count
-    // equals count(sigsAll) — reading it from this cache saves a
-    // second full synth/decode pass over the media payloads that
-    // `stage(0, media)` used to pay. Same posture at scale: one scan
-    // of the media table instead of two.
-    val sigsAll = (kind match {
-      case "image" => m.imageHash(media)
-        .select(col("media_id"), col("ahash").as("__sig"))
-      case "audio" => m.audioFingerprint(media)
-        .select(col("media_id"), col("afp").as("__sig"))
-      case "video" => m.videoFingerprint(media)
-        .select(col("media_id"), col("vfp").as("__sig"))
-      case other => throw new IllegalArgumentException(
-        s"kind must be image, audio or video, got $other")
-    }).barrierFirewall()
-    val sigs = sigsAll.filter(col("__sig").isNotNull)
-    val pairs = m.bandedHammingPairs(sigs, "__sig", maxHamming)
-      .select("a_id", "b_id")
-    val keep = TextOps.dropNearDuplicates(
-      sigs.select("media_id"), "media_id", pairs).barrierFirewall()
-    val caps = captions.select(col(idCol), col(textCol))
-      .join(keep.select(col("media_id").as(idCol)), Seq(idCol), "left_semi")
-    val curated = TextOps.curateCorpus(caps, idCol, textCol,
+    val nd = nearDupStages(media, kind, maxHamming)
+    val keep = nd.keep.barrierFirewall()
+    val curated = curatedCaptions(keep, captions, idCol, textCol,
       minJaccard, minTokens, maxTokens, maxTopWordFrac, keepLangs)
     def stage(i: Int, name: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).as("n_docs"))
         .select(lit(i).as("stage_idx"), lit(name).as("stage"),
           col("n_docs"))
-    stage(0, "media", sigsAll)
-      .union(stage(1, "decodable", sigs))
+    stage(0, "media", nd.all)
+      .union(stage(1, "decodable", nd.decodable))
       .union(stage(2, s"${kind}_unique", keep))
       .union(stage(3, "curated", curated))
       .orderBy("stage_idx")
@@ -381,10 +274,7 @@ object Pipeline {
       maxTopWordFrac: Double = 0.12,
       keepLangs: Seq[String] = Seq("en")): DataFrame = {
     val audio = media.filter(col("kind") === "audio")
-    val keep = audio.groupBy(md5(col("payload")).as("__h"))
-      .agg(min(col("media_id")).as("media_id"))
-      .select("media_id")
-    val survivors = audio.join(keep, Seq("media_id"), "left_semi")
+    val survivors = audio.join(byteUnique(audio), Seq("media_id"), "left_semi")
     // id-scale barrier: the gated stats feed both the caption semi
     // join and the final output join. The per-clip mean RMS is
     // computed in exact micro-units (the t63 classifier discipline):
@@ -392,8 +282,7 @@ object Pipeline {
     // exact long and the half-up mean ((2S + n) div 2n) is pure
     // integer arithmetic — a float avg() would differ from an external
     // oracle's by one ulp exactly at rounding boundaries.
-    val stats = graft.multimodal.Media
-      .audioWindows(survivors, windowSamples)
+    val stats = Media.audioWindows(survivors, windowSamples)
       .groupBy("media_id")
       .agg(count(lit(1)).as("n_windows"),
         sum(round(col("rms") * 1e6).cast("long")).as("__sm"),
@@ -405,14 +294,8 @@ object Pipeline {
       .select(col("media_id"), col("n_windows"),
         (col("__mm").cast("double") / 1e6).as("mean_rms"), col("peak"))
       .barrierFirewall()
-    val caps = captions.select(col(idCol), col(textCol))
-      .join(stats.select(col("media_id").as(idCol)), Seq(idCol), "left_semi")
-    val curated = TextOps.curateCorpus(caps, idCol, textCol,
+    captionTail(stats, stats, captions, idCol, textCol,
       minJaccard, minTokens, maxTokens, maxTopWordFrac, keepLangs)
-    curated
-      .join(stats, curated(idCol) === stats("media_id"))
-      .select(col(idCol), col("n_windows"), col("mean_rms"), col("peak"),
-        size(TextOps.tokens(col(textCol))).cast("long").as("n_tokens"))
   }
 
   /** The video edition of [[imageCaptionCurate]]: video-caption pairs
@@ -439,13 +322,10 @@ object Pipeline {
       maxTopWordFrac: Double = 0.12,
       keepLangs: Seq[String] = Seq("en")): DataFrame = {
     val video = media.filter(col("kind") === "video")
-    val keep = video.groupBy(md5(col("payload")).as("__h"))
-      .agg(min(col("media_id")).as("media_id"))
-      .select("media_id")
-    val survivors = video.join(keep, Seq("media_id"), "left_semi")
+    val survivors = video.join(byteUnique(video), Seq("media_id"), "left_semi")
     // exact micro-unit mean over the 6-dp per-frame means, as in
     // [[audioCaptionCurate]] — integer half-up, no float-avg ulp drift
-    val stats = graft.multimodal.Media.videoFrames(survivors)
+    val stats = Media.videoFrames(survivors)
       .groupBy("media_id")
       .agg(count(lit(1)).as("n_frames"),
         max(col("f_width")).as("width"),
@@ -460,21 +340,74 @@ object Pipeline {
         col("height"),
         (col("__mg").cast("double") / 1e6).as("mean_gray"))
       .barrierFirewall()
-    val caps = captions.select(col(idCol), col(textCol))
-      .join(stats.select(col("media_id").as(idCol)), Seq(idCol), "left_semi")
-    val curated = TextOps.curateCorpus(caps, idCol, textCol,
+    captionTail(stats, stats, captions, idCol, textCol,
       minJaccard, minTokens, maxTokens, maxTopWordFrac, keepLangs)
-    curated
-      .join(stats, curated(idCol) === stats("media_id"))
-      .select(col(idCol), col("n_frames"), col("width"), col("height"),
-        col("mean_gray"),
-        size(TextOps.tokens(col(textCol))).cast("long").as("n_tokens"))
+  }
+
+  /** Byte-identity media dedup: the min media_id of each distinct
+    * payload (md5) — one map-side-combinable hash agg, shuffle ∝
+    * distinct payloads. */
+  private def byteUnique(media: DataFrame): DataFrame =
+    media.groupBy(md5(col("payload")).as("__h"))
+      .agg(min(col("media_id")).as("media_id"))
+      .select("media_id")
+
+  /** The near-dup stages [[captionCurateNearDup]] and [[modalFunnel]]
+    * share. `all` is `kind`'s fingerprint frame, one row per media row
+    * (null signature for undecodable payloads), and it is the barrier:
+    * decode runs once, and the funnel's media count reads it instead of
+    * a second pass over the payloads. `decodable` drops the null
+    * signatures; `keep` holds the min-id survivor of each
+    * banded-Hamming near-dup cluster. */
+  private final case class NearDupStages(all: DataFrame,
+      decodable: DataFrame, keep: DataFrame)
+
+  private def nearDupStages(media: DataFrame, kind: String,
+      maxHamming: Int): NearDupStages = {
+    val (sigCol, of) = Media.kindSignature(kind)
+    val all = Media.fingerprintFrame(media, sigCol, of).barrierFirewall()
+    val decodable = all.filter(col(sigCol).isNotNull)
+    val pairs = Media.bandedHammingPairs(decodable, sigCol, maxHamming)
+      .select("a_id", "b_id")
+    NearDupStages(all, decodable, TextOps.dropNearDuplicates(
+      decodable.select("media_id"), "media_id", pairs))
+  }
+
+  /** The captions of the surviving media (`ids` carries media_id)
+    * through the full curation core. */
+  private def curatedCaptions(ids: DataFrame, captions: DataFrame,
+      idCol: String, textCol: String, minJaccard: Double, minTokens: Long,
+      maxTokens: Long, maxTopWordFrac: Double,
+      keepLangs: Seq[String]): DataFrame =
+    TextOps.curateCorpus(
+      captions.select(col(idCol), col(textCol))
+        .join(ids.select(col("media_id").as(idCol)), Seq(idCol), "left_semi"),
+      idCol, textCol, minJaccard, minTokens, maxTokens, maxTopWordFrac,
+      keepLangs)
+
+  /** The caption tail every media-caption pipeline ends in: the
+    * surviving media's captions through the curation core
+    * ([[curatedCaptions]]), joined back to the per-media columns of
+    * `perMedia` (media_id first), plus each caption's token count.
+    * Returns (idCol, perMedia's other columns..., n_tokens). */
+  private def captionTail(ids: DataFrame, perMedia: DataFrame,
+      captions: DataFrame, idCol: String, textCol: String,
+      minJaccard: Double, minTokens: Long, maxTokens: Long,
+      maxTopWordFrac: Double, keepLangs: Seq[String]): DataFrame = {
+    val curated = curatedCaptions(ids, captions, idCol, textCol,
+      minJaccard, minTokens, maxTokens, maxTopWordFrac, keepLangs)
+    // perMedia's own media_id is renamed before the join so a caller
+    // whose idCol IS "media_id" cannot hit an ambiguous reference
+    val side = perMedia.withColumnRenamed("media_id", "__mid")
+    curated.join(side, curated(idCol) === side("__mid"))
+      .select(col(idCol) +: perMedia.columns.tail.map(col) :+
+        size(TextOps.tokens(col(textCol))).cast("long").as("n_tokens"): _*)
   }
 
   /** CROSS-MODAL duplicate clustering — the LAION-style rule "a pair
     * is a duplicate if EITHER modality matches": image near-dup edges
     * (aHash band join + Hamming verify,
-    * [[graft.multimodal.Media.imageNearDups]]) are unioned with text
+    * [[graft.multimodal.Media.nearDups]]) are unioned with text
     * near-dup edges (the banded MinHash candidate convention the
     * dedup chain uses everywhere, [[TextOps.lshCandidatePairs]] over
     * [[TextOps.lshBuckets]]) into ONE connected-components pass, so a
@@ -490,15 +423,9 @@ object Pipeline {
     * shuffle class beyond the per-modality chains. */
   def crossModalDupClusters(media: DataFrame, docs: DataFrame,
       idCol: String, textCol: String, maxHamming: Int = 3,
-      k: Int = 8, rows: Int = 2): DataFrame = {
-    val ipairs = graft.multimodal.Media.imageNearDups(media, maxHamming)
-      .select(col("a_id"), col("b_id"))
-    val bux = TextOps.lshBuckets(
-      TextOps.minhashSignature(docs, idCol, textCol, k), idCol, k, rows)
-    val tpairs = TextOps.lshCandidatePairs(bux, idCol)
-    TextOps.nearDupClusters(ipairs.union(tpairs).distinct())
-      .select(col("id").as(idCol), col("cluster"))
-  }
+      k: Int = 8, rows: Int = 2): DataFrame =
+    crossModalClusters(Seq(Media.nearDups(media, "image", maxHamming)),
+      docs, idCol, textCol, k, rows)
 
   /** [[crossModalDupClusters]] over ALL FOUR modalities — image aHash,
     * audio energy-envelope, video luminance-envelope, and text MinHash
@@ -517,19 +444,23 @@ object Pipeline {
     * new shuffle class beyond the per-modality chains. */
   def crossModalDupClustersAll(images: DataFrame, audio: DataFrame,
       video: DataFrame, docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, k: Int = 8, rows: Int = 2): DataFrame = {
-    val m = graft.multimodal.Media
-    val ipairs = m.imageNearDups(images, maxHamming)
-      .select(col("a_id"), col("b_id"))
-    val apairs = m.audioNearDups(audio, maxHamming)
-      .select(col("a_id"), col("b_id"))
-    val vpairs = m.videoNearDups(video, maxHamming)
-      .select(col("a_id"), col("b_id"))
+      maxHamming: Int = 3, k: Int = 8, rows: Int = 2): DataFrame =
+    crossModalClusters(Seq(Media.nearDups(images, "image", maxHamming),
+        Media.nearDups(audio, "audio", maxHamming),
+        Media.nearDups(video, "video", maxHamming)),
+      docs, idCol, textCol, k, rows)
+
+  /** The cross-modal body: media near-dup edge frames (a_id, b_id, ...)
+    * and the text MinHash edges of `docs`, unioned in that order into
+    * one connected-components pass. */
+  private def crossModalClusters(mediaPairs: Seq[DataFrame], docs: DataFrame,
+      idCol: String, textCol: String, k: Int, rows: Int): DataFrame = {
     val bux = TextOps.lshBuckets(
       TextOps.minhashSignature(docs, idCol, textCol, k), idCol, k, rows)
     val tpairs = TextOps.lshCandidatePairs(bux, idCol)
     TextOps.nearDupClusters(
-        ipairs.union(apairs).union(vpairs).union(tpairs).distinct())
+        (mediaPairs.map(_.select(col("a_id"), col("b_id"))) :+ tpairs)
+          .reduce(_ union _).distinct())
       .select(col("id").as(idCol), col("cluster"))
   }
 

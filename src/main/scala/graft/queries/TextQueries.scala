@@ -1149,7 +1149,7 @@ object TextQueries {
     "t111_image_ahash_dedup" -> ((s, dir) => {
       val media = graft.multimodal.Media.syntheticPatternBmps(
         graft.util.FanOut(t(s, dir, "documents")), "doc_id")
-      val pairs = graft.multimodal.Media.imageNearDups(media, maxHamming = 3)
+      val pairs = graft.multimodal.Media.nearDups(media, "image", maxHamming = 3)
         .select(col("a_id"), col("b_id"))
       TextOps.nearDupClusters(pairs)
         .select(col("id").as("media_id"), col("cluster"))
@@ -1164,7 +1164,7 @@ object TextQueries {
     "t125_audio_envelope_dedup" -> ((s, dir) => {
       val media = graft.multimodal.Media.syntheticEnvelopeWavs(
         graft.util.FanOut(t(s, dir, "documents")), "doc_id")
-      val pairs = graft.multimodal.Media.audioNearDups(media, maxHamming = 3)
+      val pairs = graft.multimodal.Media.nearDups(media, "audio", maxHamming = 3)
         .select(col("a_id"), col("b_id"))
       TextOps.nearDupClusters(pairs)
         .select(col("id").as("media_id"), col("cluster"))
@@ -1178,7 +1178,7 @@ object TextQueries {
     "t126_video_envelope_dedup" -> ((s, dir) => {
       val media = graft.multimodal.Media.syntheticPatternMp4s(
         graft.util.FanOut(t(s, dir, "documents")), "doc_id")
-      val pairs = graft.multimodal.Media.videoNearDups(media, maxHamming = 3)
+      val pairs = graft.multimodal.Media.nearDups(media, "video", maxHamming = 3)
         .select(col("a_id"), col("b_id"))
       TextOps.nearDupClusters(pairs)
         .select(col("id").as("media_id"), col("cluster"))
@@ -1186,20 +1186,20 @@ object TextQueries {
     }),
 
     // multimodal pipeline funnel: per-stage survival counts through
-    // imageCaptionCurateNearDup's chain (media -> decodable ->
+    // captionCurateNearDup's image chain (media -> decodable ->
     // near-dup survivors -> curated captions) — t121's multimodal
     // sibling, the row that localizes WHERE a batch collapsed
     "t128_multimodal_funnel" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val media = graft.multimodal.Media.syntheticPatternBmps(
         graft.util.FanOut(docs), "doc_id")
-      graft.pipeline.Pipeline.multimodalFunnel(media, docs,
-        "doc_id", "text")
+      graft.pipeline.Pipeline.modalFunnel(media, docs,
+        "doc_id", "text", "image")
     }),
 
     // t128's audio sibling: per-stage survival counts through
-    // audioCaptionCurateNearDup's chain (real PCM decode, planted
-    // envelope classes) via the parameterized modal funnel
+    // captionCurateNearDup's audio chain (real PCM decode, planted
+    // envelope classes) via the same modal funnel
     "t134_audio_funnel" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val media = graft.multimodal.Media.syntheticEnvelopeWavs(
@@ -1474,8 +1474,8 @@ object TextQueries {
       val docs = t(s, dir, "documents")
       val media = graft.multimodal.Media.syntheticPatternBmps(
         graft.util.FanOut(docs), "doc_id")
-      graft.pipeline.Pipeline.imageCaptionCurateNearDup(media, docs,
-          "doc_id", "text")
+      graft.pipeline.Pipeline.captionCurateNearDup(media, docs,
+          "doc_id", "text", "image")
         .orderBy("doc_id")
     }),
 
@@ -1487,8 +1487,8 @@ object TextQueries {
       val docs = t(s, dir, "documents")
       val media = graft.multimodal.Media.syntheticEnvelopeWavs(
         graft.util.FanOut(docs), "doc_id")
-      graft.pipeline.Pipeline.audioCaptionCurateNearDup(media, docs,
-          "doc_id", "text")
+      graft.pipeline.Pipeline.captionCurateNearDup(media, docs,
+          "doc_id", "text", "audio")
         .orderBy("doc_id")
     }),
 
@@ -1498,8 +1498,8 @@ object TextQueries {
       val docs = t(s, dir, "documents")
       val media = graft.multimodal.Media.syntheticPatternMp4s(
         graft.util.FanOut(docs), "doc_id")
-      graft.pipeline.Pipeline.videoCaptionCurateNearDup(media, docs,
-          "doc_id", "text")
+      graft.pipeline.Pipeline.captionCurateNearDup(media, docs,
+          "doc_id", "text", "video")
         .orderBy("doc_id")
     }),
 
@@ -2776,7 +2776,7 @@ object TextQueries {
     * parameterized by class salt and output signature column — one
     * statement shared by the image (t122, imgcls/ahash), audio (t129,
     * audcls/afp) and video (t130, vidcls/vfp) editions of
-    * signatureCaptionCurateNearDup: the md5-rule pattern chain resolves
+    * captionCurateNearDup: the md5-rule pattern chain resolves
     * near-dup survivors, the shared curation core gates their
     * captions, and the output carries the planted signature the real
     * codec path provably reproduces. */

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
 
 import graft.multimodal.Media
 
@@ -15,30 +14,20 @@ import graft.multimodal.Media
   */
 object MediaStreams {
 
-  /** Shared fingerprint stage: (media_id, __fp nullable, __ts) via the
-    * batch kernels; audio takes the quantization knobs, video has
-    * none. */
+  /** Shared fingerprint stage: (media_id, __fp nullable, __ts) through
+    * the batch kernel, with the kind resolved by the batch kind table;
+    * audio takes the quantization knobs, video has none. */
   private def fingerprinted(media: DataFrame, kind: String,
       eventTimeCol: String, windowSamples: Int,
       levelStep: Int): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType),
-      StructField("__fp", LongType),
-      StructField("__ts", TimestampType)))
-    val enc = Encoders.row(schema)
-    media
-      .select(col("media_id").cast("long"), col("payload"),
-        col(eventTimeCol).cast("timestamp"))
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val sig =
-            if (kind == "audio") Media.audioFingerprintOf(
-              r.getAs[Array[Byte]](1), windowSamples, levelStep)
-            else Media.videoFingerprintOf(r.getAs[Array[Byte]](1))
-          Row(r.getLong(0), sig.map(java.lang.Long.valueOf).orNull,
-            r.getTimestamp(2))
-        }
-      }(enc)
+    require(kind == "audio" || kind == "video",
+      s"kind must be audio or video, got $kind")
+    val (sigCol, of) = Media.kindSignature(kind, windowSamples, levelStep)
+    Media.fingerprintFrame(
+        media.select(col("media_id").cast("long").as("media_id"),
+          col("payload"), col(eventTimeCol).cast("timestamp").as("__ts")),
+        sigCol, of, "__ts")
+      .withColumnRenamed(sigCol, "__fp")
   }
 
   /** Online exact-envelope dedup — [[DocStreams.dedupBySimhash]]'s
@@ -49,9 +38,9 @@ object MediaStreams {
     * discarded; undecodable payloads are dropped (they carry no
     * dedupable content signal — route them to a quarantine sink
     * upstream if they must be kept). For Hamming-tolerant matching
-    * run the batch [[Media.audioNearDups]]/[[Media.videoNearDups]]
-    * over the survivors periodically — the exact split
-    * [[DocStreams.dedupBySimhash]] documents for text.
+    * run the batch [[Media.nearDups]] over the survivors periodically
+    * — the exact split [[DocStreams.dedupBySimhash]] documents for
+    * text.
     *
     * Scale shape: the fingerprint is a narrow per-partition map (no
     * aggregation state), and dropDuplicatesWithinWatermark keeps one
@@ -60,16 +49,15 @@ object MediaStreams {
     * length or the payload bytes.
     *
     * `windowSamples`/`levelStep` are the AUDIO envelope's quantization
-    * knobs and must match the batch side's ([[Media.audioNearDups]]'s
-    * parameters) or the parity contract silently breaks — a stream
-    * fingerprinting at a different window width sees different 64-bit
-    * envelopes than the batch sweep; the video envelope has no knobs
-    * and ignores them. */
+    * knobs and must match the batch side's (the
+    * [[Media.audioFingerprintOf]] defaults [[Media.nearDups]] uses) or
+    * the parity contract silently breaks — a stream fingerprinting at
+    * a different window width sees different 64-bit envelopes than
+    * the batch sweep; the video envelope has no knobs and ignores
+    * them. */
   def dedupByEnvelope(media: DataFrame, kind: String,
       eventTimeCol: String, watermark: String = "2 hours",
       windowSamples: Int = 1000, levelStep: Int = 256): DataFrame = {
-    require(kind == "audio" || kind == "video",
-      s"kind must be audio or video, got $kind")
     val fp = fingerprinted(media, kind, eventTimeCol,
       windowSamples, levelStep)
     fp.filter(col("__fp").isNotNull)
@@ -80,8 +68,8 @@ object MediaStreams {
   }
 
   /** Online HAMMING-TOLERANT envelope dedup — the streaming twin of
-    * the batch [[Media.audioNearDups]]/[[Media.videoNearDups]] + CC +
-    * keep-canonical chain, closing the gap [[dedupByEnvelope]]
+    * the batch [[Media.nearDups]] + CC + keep-canonical chain,
+    * closing the gap [[dedupByEnvelope]]
     * documents (a re-encoded clip whose envelope differs by a few
     * quantization levels slips an exact-match dedup): the clip's
     * 64-bit envelope is split into the SAME 4 x 16-bit bands the batch
@@ -116,8 +104,6 @@ object MediaStreams {
       eventTimeCol: String, watermark: String = "2 hours",
       claimHorizonMs: Long = 2L * 3600 * 1000,
       windowSamples: Int = 1000, levelStep: Int = 256): DataFrame = {
-    require(kind == "audio" || kind == "video",
-      s"kind must be audio or video, got $kind")
     val fp = fingerprinted(media, kind, eventTimeCol,
       windowSamples, levelStep)
     val spark = media.sparkSession

@@ -323,7 +323,6 @@ object ScaleStep {
     * independent, so wall ∝ corpus / min(nShards, cores). */
   private def exportSuite(docs: DataFrame, census: Census,
       shardCounts: Seq[Int]): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("scalestep-export")
     val nDocs = docs.count()
     val media = graft.multimodal.Media.syntheticPatternBmps(docs, "doc_id")
       .select(col("media_id").as("doc_id"), col("payload"))
@@ -340,13 +339,16 @@ object ScaleStep {
           "text" -> col("text")), out, n)),
       "webdataset" -> ((out, n) => graft.multimodal.WebDataset.writeShards(
         media, "doc_id", "payload", "text", out, n)))
-    for (n <- shardCounts; (name, sink) <- sinks) {
+    val tmp = java.nio.file.Files.createTempDirectory("scalestep-export")
+    try for (n <- shardCounts; (name, sink) <- sinks) {
       val s = census.measure(name)(sink(tmp.resolve(s"$name-$n").toString, n)
         .agg(sum("bytes_written")).head().getLong(0))
       val mb = s.out / 1e6
       println(f"export: $name%-12s $nDocs docs -> $mb%8.1f MB in ${s.wallS}%6.2f s " +
         f"(${mb / s.wallS}%6.1f MB/s) shards=$n jobs=${s.jobs} tasks=${s.tasks}")
-    }
+    } finally scala.util.Using.resource(java.nio.file.Files.walk(tmp))(
+      _.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p)))
   }
 
   /** Trained-BPE cost. Training is one corpus pass, then an in-memory

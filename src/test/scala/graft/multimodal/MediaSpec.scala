@@ -502,7 +502,7 @@ class MediaSpec extends AnyFunSuite {
       (3L, png(invert(base))),                        // far from 1
       (4L, "not an image".getBytes)                   // undecodable
     ).toDF("media_id", "payload")
-    val pairs = Media.imageNearDups(media, maxHamming = 6)
+    val pairs = Media.nearDups(media, "image", maxHamming = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)), s"perturbed copy must pair, got $pairs")
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L),
@@ -656,10 +656,10 @@ class MediaSpec extends AnyFunSuite {
     def clusters(pairs: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       graft.text.TextOps.nearDupClusters(pairs.select("a_id", "b_id"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ac = clusters(Media.audioNearDups(
-      Media.syntheticEnvelopeWavs(ids, "doc_id")))
-    val vc = clusters(Media.videoNearDups(
-      Media.syntheticPatternMp4s(ids, "doc_id")))
+    val ac = clusters(Media.nearDups(
+      Media.syntheticEnvelopeWavs(ids, "doc_id"), "audio"))
+    val vc = clusters(Media.nearDups(
+      Media.syntheticPatternMp4s(ids, "doc_id"), "video"))
     for (c <- Seq(ac, vc); id <- 0L until 15L)
       assert(c(id) == (id / 5) * 5, s"doc $id -> ${c(id)} in $c")
   }
@@ -728,6 +728,22 @@ class MediaSpec extends AnyFunSuite {
     (1L until 5L).foreach { id =>
       val d = java.lang.Long.bitCount(base ^ a(id))
       assert(d <= 16, s"within-class pHash distance blew up: $d")
+    }
+  }
+
+  test("the kind table rejects an unknown kind before any job") {
+    // a Spark job that read this payload would fail with a
+    // SparkException, not the kind table's IllegalArgumentException
+    val poison = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("payload was read")
+      Array.emptyByteArray
+    }
+    val media = spark.range(3).select(col("id").as("media_id"),
+      poison(col("id")).as("payload"))
+    for (run <- Seq(() => Media.nearDups(media, "text"),
+        () => Media.fingerprint(media, "text"))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("image, audio, video"), e.getMessage)
     }
   }
 }

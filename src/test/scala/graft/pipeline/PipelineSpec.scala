@@ -184,8 +184,8 @@ class PipelineSpec extends AnyFunSuite {
     val docs = spark.createDataFrame((0L until 15L).map(id => (id, cap(id))))
       .toDF("doc_id", "text")
     val media = graft.multimodal.Media.syntheticPatternBmps(docs, "doc_id")
-    val out = Pipeline.imageCaptionCurateNearDup(media, docs,
-        "doc_id", "text", minTokens = 10, maxTokens = 80)
+    val out = Pipeline.captionCurateNearDup(media, docs,
+        "doc_id", "text", "image", minTokens = 10, maxTokens = 80)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out.keySet == Set(0L, 5L, 10L), s"got ${out.keySet}")
     // the REAL decode reproduced the planted md5-derived pattern
@@ -228,7 +228,7 @@ class PipelineSpec extends AnyFunSuite {
       (1L, png(base)), (2L, png(base)), (3L, png(perturb(40))),
       (4L, png(far)), (5L, png(perturb(2048))))
       .toDF("media_id", "payload")
-    val pairs = graft.multimodal.Media.imageNearDups(media, maxHamming = 6)
+    val pairs = graft.multimodal.Media.nearDups(media, "image", maxHamming = 6)
       .select("a_id", "b_id")
     val survivors = TextOps.dropNearDuplicates(media, "media_id", pairs)
       .select("media_id")
@@ -315,6 +315,53 @@ class PipelineSpec extends AnyFunSuite {
     out.foreach { case (id, (nf, w, mg)) =>
       assert(nf == 2L && w == 8 + id.toInt && mg > 20.0,
         s"doc $id: $nf/$w/$mg")
+    }
+  }
+
+  test("byte-dedup caption pipelines accept idCol = media_id") {
+    // captions keyed by the media's own column name: the join back to
+    // the per-media columns must not resolve media_id ambiguously
+    def cap(id: Long): String =
+      (0 until 30).map(i => s"w${id}x$i").mkString("the and of to in ", " ", " end")
+    val m = graft.multimodal.Media
+    val ids = 0L until 4L
+    val caps = ids.map(id => (id, cap(id))).toDF("media_id", "text")
+    def media(kind: String, build: Long => Array[Byte]): DataFrame =
+      ids.map(id => (id, kind, build(id))).toDF("media_id", "kind", "payload")
+    val outs = Seq(
+      Pipeline.imageCaptionCurate(
+        media("image", id => m.buildImage(20 + id.toInt, 15, "png")),
+        caps, "media_id", "text", minTokens = 10, maxTokens = 80),
+      Pipeline.audioCaptionCurate(
+        media("audio", id => m.buildWav(8000, 2000 + 100 * id.toInt)),
+        caps, "media_id", "text", minTokens = 10, maxTokens = 80),
+      Pipeline.videoCaptionCurate(
+        media("video", id => m.buildMp4Frames(8 + id.toInt, 6, 2)),
+        caps, "media_id", "text", minTokens = 10, maxTokens = 80))
+    for (out <- outs) {
+      assert(out.columns.head == "media_id" && out.columns.last == "n_tokens",
+        out.columns.mkString(","))
+      assert(out.collect().map(_.getLong(0)).sorted.toSeq == ids,
+        out.columns.mkString(","))
+    }
+  }
+
+  test("near-dup caption pipelines reject an unknown kind before any job") {
+    // a Spark job that read this payload would fail with a
+    // SparkException, not the kind table's IllegalArgumentException
+    val poison = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("payload was read")
+      Array.emptyByteArray
+    }
+    val media = spark.range(3).select(col("id").as("media_id"),
+      lit("text").as("kind"), poison(col("id")).as("payload"))
+    val caps = spark.range(3).select(col("id").as("doc_id"),
+      lit("a caption").as("text"))
+    for (run <- Seq[() => DataFrame](
+        () => Pipeline.captionCurateNearDup(media, caps, "doc_id", "text", "text"),
+        () => Pipeline.modalFunnel(media, caps, "doc_id", "text", "text"))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("image, audio, video"), e.getMessage)
     }
   }
 }

@@ -86,7 +86,7 @@ class MediaStreamsSpec extends AnyFunSuite {
       val ids = (0L until 30L) ++ (0 until 10).map(i => 1000L + i * 5)
       val media = Media.syntheticEnvelopeWavs(
         ids.toDF("media_id"), "media_id").cache()
-      val pairs = Media.audioNearDups(media)
+      val pairs = Media.nearDups(media, "audio")
         .select("a_id", "b_id")
       val want = TextOps.dropNearDuplicates(
           media.select("media_id"), "media_id", pairs)
@@ -152,7 +152,7 @@ class MediaStreamsSpec extends AnyFunSuite {
       val ids = (0L until 15L) ++ (0 until 4).map(i => 2000L + i * 5)
       val media = Media.syntheticPatternMp4s(
         ids.toDF("media_id"), "media_id").cache()
-      val pairs = Media.videoNearDups(media).select("a_id", "b_id")
+      val pairs = Media.nearDups(media, "video").select("a_id", "b_id")
       val want = TextOps.dropNearDuplicates(
           media.select("media_id"), "media_id", pairs)
         .as[Long].collect().toSet
@@ -217,6 +217,18 @@ class MediaStreamsSpec extends AnyFunSuite {
         .collect().toSet.filter(_ < 4L)
       assert(got == Set(0L, 2L),
         s"expected A and the post-expiry re-claim C, got $got")
+    }
+  }
+
+  test("envelope dedup rejects the image kind") {
+    // envelopes exist for audio and video only; the check runs before
+    // the stream is built, so a batch frame is enough to reach it
+    val media = spark.range(1).select(col("id").as("media_id"),
+      lit(Array[Byte](1)).as("payload"), current_timestamp().as("ts"))
+    for (run <- Seq(() => MediaStreams.dedupByEnvelope(media, "image", "ts"),
+        () => MediaStreams.dedupByEnvelopeBanded(media, "image", "ts"))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("audio or video"), e.getMessage)
     }
   }
 }
