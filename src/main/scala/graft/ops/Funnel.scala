@@ -90,8 +90,7 @@ object Funnel {
     // advance times set within this run (indices s until exit)
     final case class Sim(exit: Array[Int], times: Array[Array[Long]])
     val scanned = graft.util.DistRank.scanHybrid[(Int, Array[Long]), Sim](
-      flagged, keyCol, Seq(col(timeUsCol)), stField,
-      Some(graft.util.DistRank.defaultHeavyRowThreshold(events.sparkSession)))(
+      flagged, keyCol, Seq(col(timeUsCol)), stField)(
       summary = { (m, r) =>
         var s = 0
         while (s <= k) {
@@ -176,9 +175,7 @@ object Funnel {
     * [[matchSteps]]'s single-chain times: levels may be first reached
     * by DIFFERENT chains. */
   def matchStepsWindowed(events: DataFrame, keyCol: String,
-      timeUsCol: String, steps: Seq[Column], windowUs: Long,
-      heavyRowThreshold: Option[Long] = None,
-      precomputedHeavy: Option[Seq[Any]] = None): DataFrame = {
+      timeUsCol: String, steps: Seq[Column], windowUs: Long): DataFrame = {
     val k = steps.size
     require(k >= 1 && k <= 8, s"1..8 funnel steps supported, got $k")
     require(windowUs >= 1, s"windowUs must be >= 1, got $windowUs")
@@ -193,8 +190,6 @@ object Funnel {
       "with matchStepsWindowed's reserved internal names (__wb, __wown)")
     val spark = events.sparkSession
     val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val thr = heavyRowThreshold.getOrElse(
-      graft.util.DistRank.defaultHeavyRowThreshold(spark))
     val flagged = events
       .filter(col(timeUsCol).isNotNull)
       .select(col(keyCol) +: col(timeUsCol) +:
@@ -206,8 +201,7 @@ object Funnel {
         StructField("__best", IntegerType, nullable = false) +:
         (1 to k).map(i =>
           StructField(s"step_${i}_us", LongType, nullable = true)))
-    val heavyVals: Array[Any] = precomputedHeavy.map(_.toArray).getOrElse(
-      graft.util.DistRank.heavyKeyValues(flagged, keyCol, thr))
+    val heavyVals = graft.util.DistRank.heavyKeyValues(flagged, keyCol)
 
     // light rows: (key, t, __p0..__p{k-1}) — group = (key)
     def lightPartials(light: DataFrame): DataFrame = {
@@ -241,18 +235,8 @@ object Funnel {
     val partials =
       if (heavyVals.isEmpty) lightPartials(flagged)
       else {
-        val heavyDf = spark.createDataFrame(
-          java.util.Arrays.asList(heavyVals.map(v => Row(v)): _*),
-          StructType(Seq(flagged.schema(keyCol).copy(name = "__hk"))))
-        // null-safe split, same rationale as DistRank.scanHybrid: a hot
-        // NULL key must route heavy, and a plain equi-join never
-        // matches null
-        val cond = flagged(keyCol) <=> heavyDf("__hk")
-        val cols = flagged.columns.map(col).toSeq
-        val light = flagged.join(broadcast(heavyDf), cond, "left_anti")
-          .select(cols: _*)
-        val heavy = flagged.join(broadcast(heavyDf), cond, "left_semi")
-          .select(cols: _*)
+        val (light, heavy) =
+          graft.util.DistRank.splitHeavyLight(flagged, keyCol, heavyVals)
         lightPartials(light).unionByName(heavyPartials(heavy))
       }
     // heavy keys emit one partial per bucket: reach is the max, and

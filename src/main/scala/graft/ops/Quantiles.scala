@@ -41,13 +41,9 @@ object Quantiles {
     * column's own type. `percents` are integer percents in [1, 100].
     * `tieBreak` column names totally order duplicate values (hygiene:
     * makes every intermediate rank deterministic, not just the
-    * selected values, which are tie-insensitive either way).
-    * `heavyRowThreshold` overrides the per-group row count at which a
-    * group leaves the hash path for the two-pass range scan (default:
-    * `spark.graft.skew.heavyKeyRows`). */
+    * selected values, which are tie-insensitive either way). */
   def exactPercentiles(df: DataFrame, keyCol: String, valueCol: String,
-      percents: Seq[Int], tieBreak: Seq[String] = Nil,
-      heavyRowThreshold: Option[Long] = None): DataFrame = {
+      percents: Seq[Int], tieBreak: Seq[String] = Nil): DataFrame = {
     require(percents.nonEmpty && percents.forall(p => p >= 1 && p <= 100),
       s"percents must be integers in [1, 100], got $percents")
     require(percents.distinct.size == percents.size,
@@ -60,11 +56,8 @@ object Quantiles {
       .select((Seq(keyCol, valueCol) ++ tieBreak).map(col): _*)
       .filter(col(valueCol).isNotNull)
       .withColumnRenamed(valueCol, "__v")
-    val thr = heavyRowThreshold.getOrElse(
-      graft.util.DistRank.defaultHeavyRowThreshold(df.sparkSession))
     val ranked = graft.util.DistRank.perKeyRowNumber(
-      sel, keyCol, (Seq("__v") ++ tieBreak).map(col), "__rk",
-      heavyRowThreshold = Some(thr))
+      sel, keyCol, (Seq("__v") ++ tieBreak).map(col), "__rk")
     // per-key counts from the RANKED frame (max rank == count): reuses
     // the scan's completed work instead of re-reading the input
     // relation a second time. NOT hint-broadcast: with few groups AQE
@@ -105,8 +98,8 @@ object Quantiles {
     * count join is AQE's choice — the [[exactPercentiles]] posture
     * throughout. */
   def weightedPercentiles(df: DataFrame, keyCol: String, valueCol: String,
-      weightCol: String, percents: Seq[Int], tieBreak: Seq[String] = Nil,
-      heavyRowThreshold: Option[Long] = None): DataFrame = {
+      weightCol: String, percents: Seq[Int],
+      tieBreak: Seq[String] = Nil): DataFrame = {
     require(percents.nonEmpty && percents.forall(p => p >= 1 && p <= 100),
       s"percents must be integers in [1, 100], got $percents")
     require(percents.distinct.size == percents.size,
@@ -123,11 +116,8 @@ object Quantiles {
       .select((Seq(keyCol, valueCol, weightCol) ++ tieBreak).map(col): _*)
       .filter(col(valueCol).isNotNull && col(weightCol).isNotNull &&
         col(weightCol) > 0)
-    val thr = heavyRowThreshold.getOrElse(
-      graft.util.DistRank.defaultHeavyRowThreshold(df.sparkSession))
     val ranked = graft.util.DistRank.perKeyRunningSum(
-      sel, keyCol, (valueCol +: tieBreak).map(col), weightCol, "__cw",
-      heavyRowThreshold = Some(thr))
+      sel, keyCol, (valueCol +: tieBreak).map(col), weightCol, "__cw")
     // the crossing predicate multiplies cumulative weights by 100 in
     // Long — guard the bound (ANSI off would wrap silently); the guard
     // feeds the carried value so the optimizer cannot prune it
@@ -172,19 +162,16 @@ object Quantiles {
     * ORDER BY can't place). Output: the input columns + `bucketCol`
     * (LongType in [1, k]). */
   def ntileBuckets(df: DataFrame, keyCol: String, valueCol: String,
-      k: Int, tieBreak: Seq[String] = Nil, bucketCol: String = "bucket",
-      heavyRowThreshold: Option[Long] = None): DataFrame = {
+      k: Int, tieBreak: Seq[String] = Nil,
+      bucketCol: String = "bucket"): DataFrame = {
     require(k >= 1, s"ntileBuckets: k must be >= 1, got $k")
     val reserved = Seq("__rk", "__n", bucketCol)
     val clash = df.columns.filter(reserved.contains)
     require(clash.isEmpty, s"ntileBuckets: input columns " +
       s"${clash.mkString(", ")} collide with the reserved/output names")
     val sel = df.filter(col(valueCol).isNotNull)
-    val thr = heavyRowThreshold.getOrElse(
-      graft.util.DistRank.defaultHeavyRowThreshold(df.sparkSession))
     val ranked = graft.util.DistRank.perKeyRowNumber(
-      sel, keyCol, (valueCol +: tieBreak).map(col), "__rk",
-      heavyRowThreshold = Some(thr))
+      sel, keyCol, (valueCol +: tieBreak).map(col), "__rk")
     val counts = ranked.groupBy(keyCol).agg(max(col("__rk")).as("__n"))
     // ntile(rank r of n into k): the first (n % k) buckets hold
     // (n div k + 1) rows, the rest (n div k). All-integer; the ELSE

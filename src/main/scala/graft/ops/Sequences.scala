@@ -36,12 +36,11 @@ object Sequences {
     * from_state partition), never over the corpus. No self-join, no
     * second scan of the input. */
   def transitionCounts(df: DataFrame, keyCol: String,
-      orderCols: Seq[Column], stateCol: String,
-      heavyRowThreshold: Option[Long] = None): DataFrame = {
+      orderCols: Seq[Column], stateCol: String): DataFrame = {
     require(df.columns.contains(stateCol),
       s"state column $stateCol not in ${df.columns.toSeq}")
     val lagged = DistRank.perKeyLag(df, keyCol, orderCols, stateCol,
-      "__from", heavyRowThreshold)
+      "__from")
     val pairs = lagged
       .filter(col("__from").isNotNull) // first-of-key / null-prev rows out
       .groupBy(col("__from").as("from_state"),

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Temporal join operators Spark lacks natively.
   *
@@ -24,6 +25,38 @@ import org.apache.spark.sql.functions._
   * instead of serializing through one task's sort.
   */
 object Temporal {
+
+  /** The as-of time axis: a timestamp or integral time column as
+    * LongType epoch microseconds; `op` names the caller in the error. */
+  private def epochMicros(c: Column, dt: DataType, op: String): Column =
+    dt match {
+      case TimestampType | TimestampNTZType => unix_micros(c.cast("timestamp"))
+      case ByteType | ShortType | IntegerType | LongType => c.cast("long")
+      case other => throw new IllegalArgumentException(
+        s"$op needs timestamp or integral time columns; " +
+          s"got ${other.simpleString}")
+    }
+
+  /** Fail fast with the exact offending columns — each clash would
+    * otherwise surface later as a confusing analysis error (duplicate
+    * column in a select) or as silently-wrong running-scan input. */
+  private def requireNoClash(op: String, left: DataFrame,
+      right: DataFrame, on: Seq[String], leftTime: String,
+      leftPayload: Seq[String], rightCarry: Seq[String],
+      reserved: Seq[String]): Unit = {
+    val clashPayload = leftPayload.intersect(rightCarry)
+    require(clashPayload.isEmpty,
+      s"rename right columns ${clashPayload.mkString(", ")} — they clash with left payload columns")
+    val clashOn = rightCarry.filter(on.contains)
+    require(clashOn.isEmpty,
+      s"right columns ${clashOn.mkString(", ")} clash with the `on` keys; rename them before the join")
+    require(!rightCarry.contains(leftTime),
+      s"right column `$leftTime` clashes with the left time column; rename it before the join")
+    val clashReserved =
+      (left.columns ++ right.columns).distinct.filter(reserved.contains)
+    require(clashReserved.isEmpty,
+      s"columns ${clashReserved.mkString(", ")} collide with $op's reserved internal names (${reserved.mkString(", ")})")
+  }
 
   /** As-of (backward, inclusive) join.
     *
@@ -62,22 +95,8 @@ object Temporal {
       left.columns.toSeq.filterNot(c => on.contains(c) || c == leftTime)
     // tieBreak columns ride along in the union even when not carried out.
     val rightCarry = rightVals ++ tieBreak.filterNot(rightVals.contains)
-    // Fail fast with the exact offending columns — each of these would
-    // otherwise surface later as a confusing analysis error (duplicate
-    // column in a select) or as silently-wrong running-window input.
-    val reserved = Seq("__t", "__is_l", "__r", "__rv", "__k")
-    val clashPayload = leftPayload.intersect(rightCarry)
-    require(clashPayload.isEmpty,
-      s"rename right columns ${clashPayload.mkString(", ")} — they clash with left payload columns")
-    val clashOn = rightCarry.filter(on.contains)
-    require(clashOn.isEmpty,
-      s"right columns ${clashOn.mkString(", ")} clash with the `on` keys; rename them before the join")
-    require(!rightCarry.contains(leftTime),
-      s"right column `$leftTime` clashes with the left time column; rename it before the join")
-    val clashReserved =
-      (left.columns ++ right.columns).distinct.filter(reserved.contains)
-    require(clashReserved.isEmpty,
-      s"columns ${clashReserved.mkString(", ")} collide with asofJoin's reserved internal names (${reserved.mkString(", ")})")
+    requireNoClash("asofJoin", left, right, on, leftTime, leftPayload,
+      rightCarry, Seq("__t", "__is_l", "__r", "__rv", "__k"))
     val l = left.select(
       on.map(col) ++
         Seq(col(leftTime).as("__t"), lit(true).as("__is_l")) ++
@@ -110,19 +129,8 @@ object Temporal {
     // micros axis also works for the FORWARD wrapper's negated longs:
     // there, __t - __tol_rt equals (r - l) on the original axis — the
     // lookahead distance — so one formula covers both directions.
-    def micros(c: Column, dt: org.apache.spark.sql.types.DataType): Column =
-      dt match {
-        case org.apache.spark.sql.types.TimestampType |
-             org.apache.spark.sql.types.TimestampNTZType =>
-          unix_micros(c.cast("timestamp"))
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => c.cast("long")
-        case other => throw new IllegalArgumentException(
-          s"asofJoin tolerance needs timestamp or integral time columns; " +
-            s"got ${other.simpleString}")
-      }
+    def micros(c: Column, dt: DataType): Column =
+      epochMicros(c, dt, "asofJoin tolerance")
     require(toleranceUs.isEmpty || !rightVals.contains("__tol_rt"),
       "right column `__tol_rt` collides with the tolerance carry field")
     val carryStruct =
@@ -134,9 +142,7 @@ object Temporal {
       .withColumn("__rv", when(!col("__is_l"), carryStruct))
       .withColumn("__k", struct(on.map(col): _*))
     val carried = graft.util.DistRank.perKeyRunningLast(unioned, "__k",
-      col("__t") +: col("__is_l") +: tieBreak.map(col), "__rv", "__r",
-      heavyRowThreshold = Some(graft.util.DistRank
-        .defaultHeavyRowThreshold(left.sparkSession)))
+      col("__t") +: col("__is_l") +: tieBreak.map(col), "__rv", "__r")
     val lefts = carried.filter(col("__is_l"))
       .withColumn(leftTime, col("__t"))
     val outVals = toleranceUs match {
@@ -170,20 +176,8 @@ object Temporal {
       leftTime: String, rightTime: String, rightVals: Seq[String],
       tieBreak: Seq[String] = Nil,
       toleranceUs: Option[Long] = None): DataFrame = {
-    def negMicros(df: DataFrame, c: String): org.apache.spark.sql.Column =
-      df.schema(c).dataType match {
-        case org.apache.spark.sql.types.TimestampType |
-             org.apache.spark.sql.types.TimestampNTZType =>
-          -unix_micros(col(c).cast("timestamp"))
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType =>
-          -col(c).cast("long")
-        case other => throw new IllegalArgumentException(
-          s"asofJoinForward needs a timestamp or integral time column; " +
-            s"`$c` is ${other.simpleString}")
-      }
+    def negMicros(df: DataFrame, c: String): Column =
+      -epochMicros(col(c), df.schema(c).dataType, "asofJoinForward")
     val fwdReserved = Seq("__fwd_lt", "__fwd_rt")
     val clash = (left.columns ++ right.columns).distinct
       .filter(fwdReserved.contains)
@@ -222,35 +216,13 @@ object Temporal {
     val leftPayload =
       left.columns.toSeq.filterNot(c => on.contains(c) || c == leftTime)
     val rightCarry = rightVals ++ tieBreak.filterNot(rightVals.contains)
-    val reserved =
-      Seq("__t", "__is_l", "__k", "__rv", "__rb", "__rf", "__lt0", "__m_rt")
-    val clashPayload = leftPayload.intersect(rightCarry)
-    require(clashPayload.isEmpty,
-      s"rename right columns ${clashPayload.mkString(", ")} — they clash with left payload columns")
-    val clashOn = rightCarry.filter(on.contains)
-    require(clashOn.isEmpty,
-      s"right columns ${clashOn.mkString(", ")} clash with the `on` keys; rename them before the join")
-    require(!rightCarry.contains(leftTime),
-      s"right column `$leftTime` clashes with the left time column; rename it before the join")
-    val clashReserved =
-      (left.columns ++ right.columns).distinct.filter(reserved.contains)
-    require(clashReserved.isEmpty,
-      s"columns ${clashReserved.mkString(", ")} collide with asofJoinNearest's reserved internal names (${reserved.mkString(", ")})")
+    requireNoClash("asofJoinNearest", left, right, on, leftTime,
+      leftPayload, rightCarry,
+      Seq("__t", "__is_l", "__k", "__rv", "__rb", "__rf", "__lt0", "__m_rt"))
     toleranceUs.foreach(t =>
       require(t >= 0, s"toleranceUs must be >= 0, got $t"))
-    def micros(c: Column, dt: org.apache.spark.sql.types.DataType): Column =
-      dt match {
-        case org.apache.spark.sql.types.TimestampType |
-             org.apache.spark.sql.types.TimestampNTZType =>
-          unix_micros(c.cast("timestamp"))
-        case org.apache.spark.sql.types.ByteType |
-             org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.LongType => c.cast("long")
-        case other => throw new IllegalArgumentException(
-          s"asofJoinNearest needs timestamp or integral time columns; " +
-            s"got ${other.simpleString}")
-      }
+    def micros(c: Column, dt: DataType): Column =
+      epochMicros(c, dt, "asofJoinNearest")
     // the union rides a LONG micros axis (both directions need the
     // arithmetic); the original left time is carried as payload so the
     // output keeps its exact type and value
@@ -273,16 +245,14 @@ object Temporal {
     val unioned = l.unionByName(r)
       .withColumn("__rv", when(!col("__is_l"), carryStruct))
       .withColumn("__k", struct(on.map(col): _*))
-    val spark = left.sparkSession
-    val thr = graft.util.DistRank.defaultHeavyRowThreshold(spark)
     // one count, both scans: the key population is identical
-    val heavy = graft.util.DistRank.heavyKeyValues(unioned, "__k", thr)
+    val heavy = Some(graft.util.DistRank.heavyKeyValues(unioned, "__k").toSeq)
     val back = graft.util.DistRank.perKeyRunningLast(unioned, "__k",
       col("__t") +: col("__is_l") +: tieBreak.map(col), "__rv", "__rb",
-      heavyRowThreshold = Some(thr), precomputedHeavy = Some(heavy.toSeq))
+      precomputedHeavy = heavy)
     val both = graft.util.DistRank.perKeyRunningLast(back, "__k",
       (-col("__t")) +: col("__is_l") +: tieBreak.map(col), "__rv", "__rf",
-      heavyRowThreshold = Some(thr), precomputedHeavy = Some(heavy.toSeq))
+      precomputedHeavy = heavy)
     val lefts = both.filter(col("__is_l"))
     val distB = col("__t") - col("__rb").getField("__m_rt")
     val distF = col("__rf").getField("__m_rt") - col("__t")
@@ -504,8 +474,7 @@ object Temporal {
     * convention). NULL time or value rows drop. */
   def timeWeightedAverage(df: DataFrame, keyCol: String,
       timeUsCol: String, valueCol: String, bucketUs: Long,
-      maxHoldUs: Long, tieBreak: Seq[String] = Nil,
-      heavyRowThreshold: Option[Long] = None): DataFrame = {
+      maxHoldUs: Long, tieBreak: Seq[String] = Nil): DataFrame = {
     require(bucketUs > 0, s"timeWeightedAverage: bucketUs must be " +
       s"positive, got $bucketUs")
     require(maxHoldUs > 0, s"timeWeightedAverage: maxHoldUs must be " +
@@ -522,9 +491,7 @@ object Temporal {
     // semantics (the LAST duplicate in ascending order sees the true
     // next time, earlier ones see their twin and hold zero length)
     val nxt = graft.util.DistRank.perKeyLag(sel, keyCol,
-      desc(timeUsCol) +: tieBreak.map(desc), timeUsCol, "__next",
-      heavyRowThreshold = Some(heavyRowThreshold.getOrElse(
-        graft.util.DistRank.defaultHeavyRowThreshold(df.sparkSession))))
+      desc(timeUsCol) +: tieBreak.map(desc), timeUsCol, "__next")
     val capped = when(col(timeUsCol) > lit(Long.MaxValue - maxHoldUs),
       lit(Long.MaxValue)).otherwise(col(timeUsCol) + lit(maxHoldUs))
     val holds = nxt
@@ -566,8 +533,7 @@ object Temporal {
     * the cost of two scan passes. The final islands aggregate is a
     * plain map-side-combinable groupBy. */
   def mergeIntervals(df: DataFrame, keyCol: String, loCol: String,
-      hiCol: String,
-      heavyRowThreshold: Option[Long] = None): DataFrame = {
+      hiCol: String): DataFrame = {
     requireLong(df, loCol, "mergeIntervals")
     requireLong(df, hiCol, "mergeIntervals")
     require(df.columns.contains(keyCol),
@@ -576,9 +542,6 @@ object Temporal {
       require(!df.columns.contains(c),
         s"mergeIntervals: input column `$c` collides with an internal/" +
           "output name"))
-    val thrVal = heavyRowThreshold.getOrElse(
-      graft.util.DistRank.defaultHeavyRowThreshold(df.sparkSession))
-    val thr = Some(thrVal)
     val clean = df.select(col(keyCol), col(loCol), col(hiCol))
       .filter(col(loCol).isNotNull && col(hiCol).isNotNull &&
         col(loCol) < col(hiCol))
@@ -586,11 +549,10 @@ object Temporal {
     // projection of scan 1's output with identical per-key row counts,
     // but its plan canonicalizes differently, so the session count
     // cache alone would pay the count job twice
-    val heavy = Some(graft.util.DistRank
-      .heavyKeyValues(clean, keyCol, thrVal).toSeq)
+    val heavy = Some(graft.util.DistRank.heavyKeyValues(clean, keyCol).toSeq)
     val pm = graft.util.DistRank.perKeyRunningMaxExclusive(
       clean, keyCol, Seq(col(loCol), col(hiCol)), hiCol, "__pm",
-      heavyRowThreshold = thr, precomputedHeavy = heavy)
+      precomputedHeavy = heavy)
     val flagged = pm.withColumn("__new",
       when(col("__pm").isNull || col(loCol) > col("__pm"), 1L)
         .otherwise(0L))
@@ -603,7 +565,7 @@ object Temporal {
     // flag-0 rows — interchangeable +0 contributions)
     graft.util.DistRank.perKeyRunningSum(flagged, keyCol,
         Seq(col(loCol), col(hiCol), desc("__new")), "__new", "__island",
-        heavyRowThreshold = thr, precomputedHeavy = heavy)
+        precomputedHeavy = heavy)
       .groupBy(col(keyCol), col("__island"))
       .agg(min(loCol).as(loCol), max(hiCol).as(hiCol),
         count(lit(1)).as("n_merged"))

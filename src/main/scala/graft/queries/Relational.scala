@@ -705,8 +705,6 @@ object Relational {
           col("event_type"),
           unix_micros(graft.streaming.EventStreams.eventTime(e0)).as("tus"))
         .filter(col("tus").isNotNull)
-      val thrVal = graft.util.DistRank.defaultHeavyRowThreshold(s)
-      val thr = Some(thrVal)
       // The composite session key's heavy set derives from the user
       // key's: rows(user#sid) <= rows(user), so a session key can only
       // be heavy if its user prefix is. One count job finds the heavy
@@ -718,26 +716,19 @@ object Relational {
       // output-identical (the hybrid==pure spec), and every key the
       // derivation sends down the light path is below the threshold by
       // the pigeonhole bound above.
-      val heavyUsers = graft.util.DistRank.heavyKeyValues(e, "user_id", thrVal)
+      val heavyUsers =
+        graft.util.DistRank.heavyKeyValues(e, "user_id").toSeq
       val sid = graft.util.DistRank.perKeySessionIds(e, "user_id", "tus",
-        gapUs = 1800000000L, outCol = "sid", heavyRowThreshold = thr,
-        precomputedHeavy = Some(heavyUsers.toSeq))
+        gapUs = 1800000000L, outCol = "sid",
+        precomputedHeavy = Some(heavyUsers))
       val keyed = sid.withColumn("skey",
         concat_ws("#", col("user_id"), col("sid")))
       val heavySkeys: Seq[Any] =
         if (heavyUsers.isEmpty) Nil
-        else {
-          val hu = s.createDataFrame(
-            java.util.Arrays.asList(heavyUsers.map(org.apache.spark.sql.Row(_)): _*),
-            org.apache.spark.sql.types.StructType(Seq(
-              e.schema("user_id").copy(name = "__hu"))))
-          graft.util.DistRank.heavyKeyValues(
-            keyed.join(broadcast(hu), col("user_id") <=> col("__hu"),
-              "left_semi"),
-            "skey", thrVal).toSeq
-        }
+        else graft.util.DistRank.heavyKeyValues(graft.util.DistRank
+          .splitHeavyLight(keyed, "user_id", heavyUsers)._2, "skey").toSeq
       val ranked = graft.util.DistRank.perKeyRowNumber(keyed, "skey",
-        Seq(col("tus"), col("event_id")), "rk", heavyRowThreshold = thr,
+        Seq(col("tus"), col("event_id")), "rk",
         precomputedHeavy = Some(heavySkeys))
       ranked.filter(col("rk") <= 5)
         .groupBy("skey")

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.graftbridge.Bridge
 
+import graft.util.Barriers.FirewallOps
+
 /** Similarity search over embedding columns (Array[Float]).
   *
   * Scale design:
@@ -973,9 +975,11 @@ object Similarity {
     * groupBy joined back BROADCAST (k rows — the de-skewed
     * [[graft.text.TextOps.lshCandidatePairs]] stats discipline, never
     * a count window over the skewed cell key); the prototypicality
-    * rank is [[graft.util.DistRank.perKeyRowNumber]] (r15) — a
-    * range-partitioned two-pass row number, NOT a per-cell window, so
-    * a degenerate corpus whose every vector lands in one k-means cell
+    * rank is [[graft.util.DistRank.perKeyRowNumber]] (r15), NOT a
+    * per-cell window: a cell above the heavy-row threshold, or every
+    * cell when there are no more cells than partitions, takes the
+    * range-partitioned two-pass, so a degenerate corpus whose every
+    * vector lands in one k-means cell
     * (near-constant embeddings — exactly the redundancy D4 targets)
     * spreads that cell across all tasks instead of funneling it
     * through one. Ranks are exact; a unique id tiebreaker totalizes
@@ -988,9 +992,12 @@ object Similarity {
     val assigned = ivfAssign(corpus,
       trained.select(col("cell").as(idCol), col("centroid").as(vecCol)),
       idCol, vecCol)
+    // id-scale barrier: the cell sizes, the heavy-key count and the
+    // rank scan all read it, so ivfAssign's shuffle runs once
     val scored = assigned.join(broadcast(trained), Seq("cell"))
       .select(col(idCol), col("cell"),
         round(cosine(col("v"), col("centroid")), 4).as("proto"))
+      .barrierFirewall()
     val sizes = scored.groupBy("cell").agg(count(lit(1)).as("__n"))
     graft.util.DistRank
       .perKeyRowNumber(scored, "cell", Seq(desc("proto"), col(idCol)), "rank")

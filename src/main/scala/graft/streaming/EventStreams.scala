@@ -612,9 +612,7 @@ object EventStreams {
       .select(col("user_id"), col("event_time"), col("value"))
       .withColumn("__tus", unix_micros(col("event_time")))
     graft.util.DistRank
-      .perKeySessionIds(ev, "user_id", "__tus", gapMs * 1000L, "session_id",
-        heavyRowThreshold = Some(graft.util.DistRank
-          .defaultHeavyRowThreshold(events.sparkSession)))
+      .perKeySessionIds(ev, "user_id", "__tus", gapMs * 1000L, "session_id")
       .groupBy("user_id", "session_id")
       .agg(min("event_time").as("session_start"), max("event_time").as("session_end"),
         count(lit(1)).as("n_events"), sum("value").as("total_value"))

@@ -1756,9 +1756,10 @@ object TextOps {
     * deferred to training time. The per-source cumulative total is
     * [[graft.util.DistRank.perKeyRunningSum]] (r15 — previously a
     * source-partitioned window sum, which single-tasks a source
-    * holding most of the corpus; real corpora are source-skewed): the
-    * range-partitioned two-pass prefix sum keeps max-task flat no
-    * matter the source histogram, with identical totals. */
+    * holding most of the corpus; real corpora are source-skewed): a
+    * source above the heavy-row threshold takes the range-partitioned
+    * two-pass prefix sum, so max-task stays flat no matter the source
+    * histogram, with identical totals. */
   def packSequences(df: DataFrame, idCol: String, textCol: String,
       sourceCol: String, budget: Int = 512): DataFrame = {
     val sized = df.select(col(sourceCol), col(idCol),

@@ -12,14 +12,17 @@ import graft.util.DistRank
   * redundancy D4 prunes) makes k-means collapse every vector into ONE
   * cell, so a `Window.partitionBy(cell)` rank funnels the whole corpus
   * through a single task. The fix ranks with
-  * [[DistRank.perKeyRowNumber]] — range-partitioned two-pass row
-  * numbers whose max single-task time stays flat as the cell grows.
+  * [[DistRank.perKeyRowNumber]] — a one-cell input has fewer keys than
+  * partitions, so its default dispatch takes the range-partitioned
+  * two-pass row numbers whose max single-task time stays flat as the
+  * cell grows.
   *
-  * Measures, per corpus size: the isolated rank stage under BOTH
-  * implementations (same input frame, same output ranks — the window
-  * path is reconstructed here purely as the measured straw man), and
-  * the full prototypePrune chain. The growth curves are the
-  * BASELINE.md PruneSkew table.
+  * Measures, per corpus size: the isolated rank stage under the
+  * default dispatch, forced down the light path, and as a window (same
+  * input frame, same output ranks — the window path is reconstructed
+  * here purely as the measured straw man), and the full prototypePrune
+  * chain, all at the default heavy-key threshold. The growth curves
+  * are the BASELINE.md PruneSkew table.
   *
   * Usage: runMain graft.tools.PruneSkew [sizes...]
   */
@@ -62,6 +65,15 @@ object PruneSkew {
       measure(s"rank_distrank n=$n") {
         DistRank.perKeyRowNumber(s, "cell",
             Seq(desc("proto"), col("vec_id")), "rank")
+          .agg(sum("rank")).head.getLong(0)
+      }
+      // the same rank forced down the light path (no key counted
+      // heavy): the one-task hash fold a one-cell input would get if
+      // the count did not route a few-key input to the two-pass leg
+      measure(s"rank_lightpath n=$n") {
+        DistRank.perKeyRowNumber(s, "cell",
+            Seq(desc("proto"), col("vec_id")), "rank",
+            precomputedHeavy = Some(Nil))
           .agg(sum("rank")).head.getLong(0)
       }
       measure(s"rank_window n=$n") {

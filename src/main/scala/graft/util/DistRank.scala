@@ -13,28 +13,29 @@ import org.apache.spark.sql.types._
   * sessionization, where a threshold prefilter cannot help because
   * every surviving row needs its exact scan value.
   *
-  * Mechanism (the classic distributed ranking construction):
-  *  1. `repartitionByRange` + `sortWithinPartitions` on
-  *     (key, orderCols...) — a TOTAL order split across partitions by
-  *     sampled range bounds, so a mega-key spreads over MANY
-  *     partitions instead of one task.
-  *  2. One pass folds each partition's contiguous per-key runs into a
-  *     small run SUMMARY (a count, a last value, a session sketch).
-  *     Because the data is range-sorted, a partition holds at most
-  *     (#keys-crossing-it) runs and the whole summary table is bounded
-  *     by #partitions + #distinct-keys rows — collected to the driver
-  *     (the k-row contract, guarded — see below) and folded, per key in
-  *     partition order, into per-(partition, key) carried-in states.
-  *  3. A second pass scans each run with its carried-in state and
-  *     emits the per-row output.
+  * Every op takes ONE dispatch ([[scanHybrid]]), steered by ONE conf,
+  * `spark.graft.skew.heavyKeyRows` (default 2,000,000 rows), read here
+  * and nowhere else:
+  *  1. One map-side-combinable count finds the HEAVY keys (rows >= the
+  *     threshold); an input with no more keys than shuffle partitions
+  *     counts every key heavy, so a few mega-keys still spread over
+  *     all tasks. `precomputedHeavy` lets a caller share one count
+  *     across two scans of the same key population.
+  *  2. Heavy keys take the two-pass range scan ([[scanTwoPass]]):
+  *     `repartitionByRange` + `sortWithinPartitions` on
+  *     (key, orderCols...) spreads a mega-key over MANY partitions;
+  *     pass 1 folds each partition's contiguous per-key runs into a
+  *     small run SUMMARY collected to the driver and folded, per key in
+  *     partition order, into carried-in states; pass 2 scans each run
+  *     from its carried-in state.
+  *  3. The unbounded tail of light keys hash-folds in ONE pass, each
+  *     key wholly inside one task, with no driver table — so key
+  *     cardinality is unbounded.
   *
-  * Scan values are EXACT and deterministic regardless of where the
-  * sampled range bounds fall, provided (key, orderCols...) is a total
-  * order (include a unique tiebreaker where the op needs one) —
-  * correctness never depends on the sampler. Two narrow passes over
-  * the sorted shuffle output are the price for flat max-task; the
-  * shuffle itself is the same one the window needed, and Spark reuses
-  * its map stage between the passes.
+  * Scan values are EXACT and deterministic regardless of the split or
+  * where the sampled range bounds fall, provided (key, orderCols...) is
+  * a total order (include a unique tiebreaker where the op needs one) —
+  * correctness never depends on the sampler or the threshold.
   *
   * == Contracts (hard-checked) ==
   *  - The KEY column must be an atomic equatable type (integral,
@@ -43,37 +44,30 @@ import org.apache.spark.sql.types._
   *    Float/Double keys (NaN != NaN restarts every row), binary/array
   *    keys (reference equality), and decimals (scale-sensitive
   *    `BigDecimal.equals`) are REJECTED at plan build.
-  *  - The collected run table is bounded by #partitions + #distinct
-  *    keys. A partition whose run count exceeds
-  *    [[DistRank.MaxRunsPerPartition]] fails fast EXECUTOR-SIDE with a
-  *    clear too-many-keys message, before the driver collect can OOM —
-  *    these ops are for few-keys/many-rows shapes; a high-cardinality
-  *    key column wants a plain window (each key is small) instead.
+  *  - The heavy-key collect is capped (`spark.graft.skew.maxHeavyKeys`)
+  *    and the two-pass run table per partition is capped
+  *    ([[DistRank.MaxRunsPerPartition]]); either fails fast with a
+  *    clear message before a driver collect can OOM.
   */
 object DistRank {
 
-  /** Executor-side cap on per-partition run-summary count (default;
-    * override with `spark.graft.distrank.maxRunsPerPartition`). With
-    * the default 32 shuffle partitions this bounds the driver table at
-    * ~8.4 M small tuples — far above every in-repo call site
-    * (sources, users, asof keys) and far below driver heap, so a
-    * future high-cardinality caller fails with a message, not an OOM. */
+  /** Executor-side cap on the two-pass leg's per-partition run-summary
+    * count (default; override with
+    * `spark.graft.distrank.maxRunsPerPartition`). With the default 32
+    * shuffle partitions this bounds the driver table at ~8.4 M small
+    * tuples — only heavy keys (or at most #partitions keys in all)
+    * reach it, so it binds only when the threshold is set so low that
+    * most keys count as heavy. */
   val MaxRunsPerPartition: Int = 1 << 18
 
   /** Append `rankCol` (1-based LongType per-key row number) to `df`,
     * ranked within `keyCol` by `orderCols` (which must totally order
-    * rows within a key — include a unique tiebreaker). With a
-    * `heavyRowThreshold` the rank rides the HYBRID dispatch (unbounded
-    * key cardinality: heavy keys two-pass, light tail hash-folded with
-    * no driver table); without one it keeps the pure two-pass scan and
-    * its bounded-key contract. */
+    * rows within a key — include a unique tiebreaker). */
   def perKeyRowNumber(df: DataFrame, keyCol: String, orderCols: Seq[Column],
       rankCol: String,
-      heavyRowThreshold: Option[Long] = None,
       precomputedHeavy: Option[Seq[Any]] = None): DataFrame =
     scanHybrid[Long, Long](df, keyCol, orderCols,
-      StructField(rankCol, LongType, nullable = false), heavyRowThreshold,
-      precomputedHeavy)(
+      StructField(rankCol, LongType, nullable = false), precomputedHeavy)(
       summary = (acc, _) => acc + 1L,
       summary0 = 0L,
       init = 0L,
@@ -89,14 +83,9 @@ object DistRank {
     * INCLUDING the current row. NULL values contribute 0 (the window
     * sum's null tolerance); `orderCols` must totally order rows within
     * a key. `valueCol` must be LongType (checked — a silent
-    * `getLong` on an int column would ClassCastException mid-job).
-    * Hybrid-dispatched since r17 (unbounded key cardinality — interval
-    * coalescing and weighted percentiles run it over user/source keys;
-    * previously the pure two-pass, whose bounded-key run table the
-    * packing call sites satisfied by construction). */
+    * `getLong` on an int column would ClassCastException mid-job). */
   def perKeyRunningSum(df: DataFrame, keyCol: String,
       orderCols: Seq[Column], valueCol: String, outCol: String,
-      heavyRowThreshold: Option[Long] = None,
       precomputedHeavy: Option[Seq[Any]] = None): DataFrame = {
     val valIdx = df.columns.indexOf(valueCol)
     require(valIdx >= 0, s"value column $valueCol not in ${df.columns.toSeq}")
@@ -105,8 +94,7 @@ object DistRank {
         s"${df.schema(valueCol).dataType.simpleString} — cast it first")
     def inc(r: Row): Long = if (r.isNullAt(valIdx)) 0L else r.getLong(valIdx)
     scanHybrid[Long, Long](df, keyCol, orderCols,
-      StructField(outCol, LongType, nullable = false), heavyRowThreshold,
-      precomputedHeavy)(
+      StructField(outCol, LongType, nullable = false), precomputedHeavy)(
       summary = (acc, r) => acc + inc(r),
       summary0 = 0L,
       init = 0L,
@@ -127,15 +115,13 @@ object DistRank {
     * fine (a bounded number of them reach the driver). */
   def perKeyRunningLast(df: DataFrame, keyCol: String,
       orderCols: Seq[Column], valueCol: String, outCol: String,
-      heavyRowThreshold: Option[Long] = None,
       precomputedHeavy: Option[Seq[Any]] = None): DataFrame = {
     val valIdx = df.columns.indexOf(valueCol)
     require(valIdx >= 0, s"value column $valueCol not in ${df.columns.toSeq}")
     def pick(s: Any, r: Row): Any = if (r.isNullAt(valIdx)) s else r.get(valIdx)
     val out = StructField(outCol, df.schema(valueCol).dataType,
       nullable = true)
-    scanHybrid[Any, Any](df, keyCol, orderCols, out, heavyRowThreshold,
-      precomputedHeavy)(
+    scanHybrid[Any, Any](df, keyCol, orderCols, out, precomputedHeavy)(
       summary = pick, summary0 = null, init = null,
       carry = (s, m) => if (m != null) m else s,
       step = pick, emit = identity[Any])
@@ -158,7 +144,6 @@ object DistRank {
     * through one task. */
   def perKeyLag(df: DataFrame, keyCol: String,
       orderCols: Seq[Column], valueCol: String, outCol: String,
-      heavyRowThreshold: Option[Long] = None,
       precomputedHeavy: Option[Seq[Any]] = None): DataFrame = {
     val valIdx = df.columns.indexOf(valueCol)
     require(valIdx >= 0, s"value column $valueCol not in ${df.columns.toSeq}")
@@ -168,7 +153,7 @@ object DistRank {
     // run summary: (sawAnyRow, lastRowValue) — the only carry a later
     // partition needs is the run's final row value
     scanHybrid[LagState, (Boolean, Any)](df, keyCol, orderCols, out,
-      heavyRowThreshold, precomputedHeavy)(
+      precomputedHeavy)(
       summary = (m, r) => (true, valOf(r)),
       summary0 = (false, null),
       init = LagState(null, null),
@@ -198,7 +183,6 @@ object DistRank {
     * scan + [[perKeyRunningSum]] instead of one fused scan). */
   def perKeyRunningMaxExclusive(df: DataFrame, keyCol: String,
       orderCols: Seq[Column], valueCol: String, outCol: String,
-      heavyRowThreshold: Option[Long] = None,
       precomputedHeavy: Option[Seq[Any]] = None): DataFrame = {
     val vIdx = df.columns.indexOf(valueCol)
     require(vIdx >= 0, s"value column $valueCol not in ${df.columns.toSeq}")
@@ -212,7 +196,7 @@ object DistRank {
       else java.lang.Long.valueOf(math.max(a.longValue, b.longValue))
     val out = StructField(outCol, LongType, nullable = true)
     scanHybrid[MaxState, java.lang.Long](df, keyCol, orderCols, out,
-      heavyRowThreshold, precomputedHeavy)(
+      precomputedHeavy)(
       summary = (m, r) => mx(m, valOf(r)),
       summary0 = null,
       init = MaxState(null, null),
@@ -253,7 +237,6 @@ object DistRank {
   def perKeySessionIds(df: DataFrame, keyCol: String, timeUsCol: String,
       gapUs: Long, outCol: String,
       extraOrder: Seq[Column] = Nil,
-      heavyRowThreshold: Option[Long] = None,
       precomputedHeavy: Option[Seq[Any]] = None): DataFrame = {
     val tIdx = df.columns.indexOf(timeUsCol)
     require(tIdx >= 0, s"time column $timeUsCol not in ${df.columns.toSeq}")
@@ -286,15 +269,14 @@ object DistRank {
     }
     val init = SessState(seen = false, prev = null, count = 0L)
     scanHybrid[SessState, SessRun](df, keyCol,
-      col(timeUsCol) +: extraOrder, out, heavyRowThreshold,
-      precomputedHeavy)(
+      col(timeUsCol) +: extraOrder, out, precomputedHeavy)(
       summaryF, SessRun(null, null, 0L, 0L), init, carryF, stepF,
       (s: SessState) => s.count)
   }
 
-  /** Both scan forms run Spark jobs EAGERLY at operator-call time
-    * (pass-1 run collect, the hybrid's heavy-key count) and then
-    * re-execute the input lineage for pass 2 / the splits — a
+  /** The scan runs Spark jobs EAGERLY at operator-call time (the
+    * heavy-key count, the two-pass leg's pass-1 run collect) and then
+    * re-executes the input lineage for the splits / pass 2 — a
     * NONDETERMINISTIC upstream (`rand()` sampling, `uuid()`,
     * `monotonically_increasing_id()`) would silently disagree between
     * those executions, yielding wrong ranks/sessions/carries. This
@@ -328,14 +310,14 @@ object DistRank {
         "date/timestamp key, or a struct of those.")
   }
 
-  /** The shared two-pass core: range-partition + partition-local sort
-    * on (key, orderCols...), fold each partition's per-key runs into
-    * summaries `M` (bounded by #partitions + #keys rows, guarded then
-    * collected), fold summaries per key in partition order into
-    * carried-in states `S`, then scan each run in a second pass over
-    * the REUSED shuffle (Spark skips the completed exchange map stage,
-    * so only the cheap partition-local sort re-runs — no corpus-sized
-    * cache).
+  /** The heavy-key leg of [[scanHybrid]]: range-partition +
+    * partition-local sort on (key, orderCols...), fold each partition's
+    * per-key runs into summaries `M` (bounded by #partitions + #heavy
+    * keys rows, guarded then collected), fold summaries per key in
+    * partition order into carried-in states `S`, then scan each run in
+    * a second pass over the REUSED shuffle (Spark skips the completed
+    * exchange map stage, so only the cheap partition-local sort re-runs
+    * — no corpus-sized cache).
     *
     * `summary` folds pass-1 rows into a run summary (start `summary0`);
     * `carry(state, summary)` advances a key's carried state over one
@@ -344,30 +326,23 @@ object DistRank {
     * output from the POST-row state (inclusive-frame semantics). All
     * closures observe the PRE-SHUFFLE column order in both passes.
     *
-    * Exposed `private[graft]` for sibling scan operators
-    * ([[graft.ops.Funnel]]); external callers use the named ops above.
     * NOTE for callers whose orderCols do NOT totally order rows within
     * a key: rows with EQUAL (key, orderCols...) never split across
     * partitions (the range partitioner maps equal keys identically),
     * but their relative order within a partition is arbitrary — the
     * op's semantics must be invariant to it (the funnel's strict-`>`
     * advance is; a rank is not, hence its tiebreaker contract). */
-  private[graft] def scanTwoPass[S, M](df0: DataFrame, keyCol: String,
-      orderCols: Seq[Column], outField: StructField)(
+  private def scanTwoPass[S, M](df: DataFrame, keyCol: String,
+      orderCols: Seq[Column], outField: StructField, nPart: Int)(
       summary: (M, Row) => M, summary0: => M,
       init: S, carry: (S, M) => S,
       step: (S, Row) => S, emit: S => Any): DataFrame = {
-    val df = ensureDeterministicLineage(df0)
-    val spark = df.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    validateKeyType(keyCol, df.schema(keyCol).dataType)
     val sortExprs = col(keyCol) +: orderCols
     val sorted = df.repartitionByRange(nPart, sortExprs: _*)
       .sortWithinPartitions(sortExprs: _*)
     val keyIdx = sorted.columns.indexOf(keyCol)
-    require(keyIdx >= 0, s"key column $keyCol not in ${sorted.columns.toSeq}")
     val rdd = sorted.rdd
-    val maxRuns = spark.conf
+    val maxRuns = df.sparkSession.conf
       .get("spark.graft.distrank.maxRunsPerPartition",
         MaxRunsPerPartition.toString).toInt
     // pass 1: per-partition, per-key run summaries (range-sorted ->
@@ -384,11 +359,10 @@ object DistRank {
             if (started) buf += ((pid, curKey, acc))
             if (buf.length >= maxRuns) throw new IllegalStateException(
               s"DistRank: partition $pid holds more than $maxRuns distinct " +
-                s"`$keyCol` runs — the key cardinality is too high for the " +
-                "driver-collected offset table. These scans are for few-" +
-                "keys/many-rows shapes; a high-cardinality key wants the " +
-                "HYBRID dispatch (scanHybrid / the ops' heavyRowThreshold) " +
-                "or a plain window (each key is small there).")
+                s"heavy `$keyCol` runs — the key cardinality is too high " +
+                "for the driver-collected offset table. Raise " +
+                "spark.graft.skew.heavyKeyRows so that only keys large " +
+                "enough to skew a task count as heavy.")
             curKey = k; acc = summary0; started = true
           }
           acc = summary(acc, r)
@@ -413,9 +387,9 @@ object DistRank {
 
   /** Single-pass per-key fold over an already key-clustered, locally
     * sorted frame: on each key change the state restarts from
-    * `lookup(pid, key)`. The shared tail of both the two-pass scan
-    * (lookup = carried offsets) and the hybrid's light path
-    * (lookup = const init — each key is wholly inside one partition). */
+    * `lookup(pid, key)`. The shared tail of both legs: the two-pass
+    * scan (lookup = carried offsets) and the light path (lookup =
+    * const init — each key is wholly inside one partition). */
   private def foldSorted[S](sorted: DataFrame, keyIdx: Int,
       outField: StructField)(init: S, step: (S, Row) => S, emit: S => Any,
       lookup: (Int, Any) => S): DataFrame = {
@@ -437,45 +411,17 @@ object DistRank {
     sorted.sparkSession.createDataFrame(withOut, schema)
   }
 
-  /** Default hybrid heavy-key row threshold (override with
-    * `spark.graft.skew.heavyKeyRows`): keys at or above it take the
-    * two-pass range scan; lighter keys take the hash path. 2 M rows
-    * sort in one task in a couple of seconds — the max-task ceiling
-    * the light path accepts. */
-  def defaultHeavyRowThreshold(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.get("spark.graft.skew.heavyKeyRows", "2000000").toLong
+  /** The heavy-key row threshold, `spark.graft.skew.heavyKeyRows`
+    * (default 2 M): keys at or above it take the two-pass range scan;
+    * lighter keys take the hash path. 2 M rows sort in one task in a
+    * couple of seconds — the max-task ceiling the light path accepts. */
+  private def defaultHeavyRowThreshold(
+      spark: org.apache.spark.sql.SparkSession): Long = {
+    val t = spark.conf.get("spark.graft.skew.heavyKeyRows", "2000000").toLong
+    require(t >= 1, s"spark.graft.skew.heavyKeyRows must be >= 1, got $t")
+    t
+  }
 
-  /** HYBRID per-key scan dispatch — the unbounded-cardinality form of
-    * [[scanTwoPass]] (closes the review finding that routing
-    * user-keyed operators through the pure two-pass scan imposed its
-    * bounded-key driver-table contract on naturally high-cardinality
-    * keys):
-    *
-    *  1. One map-side-combinable count finds the HEAVY keys (rows >=
-    *     `heavyRowThreshold`). By pigeonhole there are at most
-    *     total/threshold of them, so collecting them is bounded by
-    *     construction — no cardinality guard needed.
-    *  2. Heavy keys take [[scanTwoPass]]: flat max-task, a
-    *     corpus-sized key spreads over all partitions; the driver run
-    *     table is bounded by (#heavy keys x #partitions).
-    *  3. The unbounded tail of light keys takes a hash-partitioned
-    *     SINGLE-pass fold ([[foldSorted]] with `init` lookup): each
-    *     key sits wholly inside one task — the window's distribution,
-    *     acceptable because every light key is below the threshold by
-    *     definition — with NO driver table at all.
-    *
-    * Costs one extra aggregate job + two broadcast splits when heavy
-    * keys exist (none: just the count + the light path). Both paths
-    * share `step`/`emit`, so semantics are identical; ops whose
-    * orderCols do not totally order rows must be tie-order invariant
-    * (see [[scanTwoPass]]).
-    *
-    * NOTE (both scan forms): pass 1 / the count run EAGERLY at
-    * operator-call time — building the result frame executes Spark
-    * jobs, unlike a declarative plan — and the input's lineage must be
-    * DETERMINISTIC between those jobs and the output's actions (no
-    * `rand()` upstream, no source overwritten mid-flight;
-    * `localCheckpoint()` the input first if in doubt). */
   /** Driver-table cap for the collected heavy-key set (override with
     * `spark.graft.skew.maxHeavyKeys`): the pigeonhole bound
     * (total/threshold) is only small when the threshold is large
@@ -486,45 +432,65 @@ object DistRank {
   val MaxHeavyKeys: Int = 1000000
 
   /** Session-scoped heavy-key cache — one count job per distinct
-    * (key-projection plan, threshold) instead of one per operator call
+    * (key-projection plan, threshold, shuffle partitions) instead of
+    * one per operator call
     * (the r16 verdict's finding 1: six event-tier queries over one
     * corpus paid six identical full count passes). Keyed on the
     * OPTIMIZED CANONICAL plan of `df.select(keyCol)`, so two calls hit
     * only when Catalyst proves the pruned key projection identical
     * (`sameResult` semantics — different inputs can never collide).
     * The heavy/light split is a pure EXECUTION-STRATEGY choice (both
-    * paths compute identical outputs, pinned by the hybrid==pure
+    * legs compute identical outputs, pinned by the hybrid==two-pass
     * specs), so even a stale entry — same plan, underlying files
     * rewritten mid-session, already outside the scans' deterministic-
     * lineage contract — can only mis-route keys, never corrupt a
     * result. [[clearKeyCountCache]] drops all entries. */
   private val keyCountCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
-    Array[Any]]()
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long, Int),
+    HeavyKeys]()
+
+  /** One count's verdict: the keys at or above the threshold, and
+    * whether the input has so few keys (at most #partitions) that all
+    * of them should take the two-pass leg. */
+  private final case class HeavyKeys(values: Array[Any], all: Boolean)
 
   def clearKeyCountCache(): Unit = keyCountCache.clear()
 
   private[graft] def keyCountCacheSize: Int = keyCountCache.size
 
-  /** The values of keys holding at least `threshold` rows — one
-    * map-side-combinable count job, cached per session (see
-    * [[keyCountCache]]). Bounded by pigeonhole at total/threshold,
-    * which is only "small" when the threshold is proportionate to the
-    * input, so the collect is capped (`spark.graft.skew.maxHeavyKeys`)
-    * and fails fast with guidance instead of OOMing the driver. */
-  private[graft] def heavyKeyValues(df: DataFrame, keyCol: String,
-      threshold: Long): Array[Any] = {
+  /** The values of keys holding at least the heavy-key threshold of
+    * rows (see [[heavyKeys]]). */
+  private[graft] def heavyKeyValues(df: DataFrame,
+      keyCol: String): Array[Any] = heavyKeys(df, keyCol).values
+
+  /** The one count behind the dispatch — one map-side-combinable count
+    * job, cached per session (see [[keyCountCache]]). Each count
+    * partition returns its heavy keys plus its first #partitions + 1
+    * keys, so at most #partitions rows back means the driver saw every
+    * key: such an input takes the two-pass leg whole, because the hash
+    * fold runs each key in one task and could not use more tasks than
+    * there are keys. The heavy set is bounded by pigeonhole at
+    * total/threshold, which is only "small" when the threshold is
+    * proportionate to the input, so the collect is capped
+    * (`spark.graft.skew.maxHeavyKeys`) and fails fast with guidance
+    * instead of OOMing the driver. */
+  private def heavyKeys(df: DataFrame, keyCol: String): HeavyKeys = {
     val spark = df.sparkSession
+    val threshold = defaultHeavyRowThreshold(spark)
+    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val cacheKey = (df.select(col(keyCol)).queryExecution
-      .optimizedPlan.canonicalized, threshold)
+      .optimizedPlan.canonicalized, threshold, nPart)
     Option(keyCountCache.get(cacheKey)).getOrElse {
       val maxHeavy = spark.conf
         .get("spark.graft.skew.maxHeavyKeys", MaxHeavyKeys.toString).toInt
-      val heavyRows = df.groupBy(keyCol)
-        .agg(count(lit(1)).as("__cnt"))
-        .filter(col("__cnt") >= threshold)
-        .select(keyCol)
-        .limit(maxHeavy + 1).collect()
+      val counted = df.groupBy(keyCol).agg(count(lit(1)).as("__cnt")).rdd
+      // the light keys sent back are bounded per partition, so the cap
+      // still cuts only when the heavy set itself is too large
+      val cap = maxHeavy + counted.getNumPartitions * (nPart + 1L) + 1L
+      val rows = counted.mapPartitions(_.zipWithIndex.collect {
+          case (r, i) if i <= nPart || r.getLong(1) >= threshold => r
+        }).take(math.min(cap, Int.MaxValue - 1L).toInt)
+      val heavyRows = rows.filter(_.getLong(1) >= threshold)
       if (heavyRows.length > maxHeavy) throw new IllegalStateException(
         s"DistRank: more than $maxHeavy keys exceed the " +
           s"heavy-row threshold $threshold — the heavy-key broadcast " +
@@ -532,30 +498,68 @@ object DistRank {
           "(spark.graft.skew.heavyKeyRows) so 'heavy' means a key large " +
           "enough to matter, or raise spark.graft.skew.maxHeavyKeys if " +
           "the driver can really hold this set.")
-      val vals: Array[Any] = heavyRows.map(_.get(0))
+      val hk = HeavyKeys(heavyRows.map(_.get(0)),
+        all = rows.nonEmpty && rows.length <= nPart)
       if (keyCountCache.size >= 64) keyCountCache.clear()
-      keyCountCache.put(cacheKey, vals)
-      vals
+      keyCountCache.put(cacheKey, hk)
+      hk
     }
   }
 
+  /** The one heavy/light split: `(light, heavy)` = the rows of `df`
+    * whose `keyCol` is NOT / IS among `heavyVals`, each in `df`'s
+    * column order (fold closures read fields BY INDEX). NULL-SAFE: a
+    * heavy NULL key (or a struct key with a null field) must route
+    * HEAVY — a plain equi-join condition never matches null, which
+    * would silently send the hottest key of all (the null bucket)
+    * through the light path's one-task fold. */
+  private[graft] def splitHeavyLight(df: DataFrame, keyCol: String,
+      heavyVals: Seq[Any]): (DataFrame, DataFrame) = {
+    val heavyDf = broadcast(df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(heavyVals.map(v => Row(v)): _*),
+      StructType(Seq(df.schema(keyCol).copy(name = "__hk")))))
+    val cond = df(keyCol) <=> heavyDf("__hk")
+    val cols = df.columns.map(col).toSeq
+    (df.join(heavyDf, cond, "left_anti").select(cols: _*),
+      df.join(heavyDf, cond, "left_semi").select(cols: _*))
+  }
+
+  /** The per-key scan dispatch every op above takes:
+    *
+    *  1. The HEAVY keys (rows >= the threshold) come from
+    *     `precomputedHeavy` or one cached count ([[heavyKeys]]); by
+    *     pigeonhole there are at most total/threshold of them. When
+    *     the count sees no more keys than partitions, every key is
+    *     heavy and the whole input takes the two-pass leg.
+    *  2. Heavy keys take [[scanTwoPass]]: flat max-task, a
+    *     corpus-sized key spreads over all partitions; the driver run
+    *     table is bounded by (#heavy keys x #partitions).
+    *  3. The unbounded tail of light keys takes a hash-partitioned
+    *     SINGLE-pass fold ([[foldSorted]] with `init` lookup): each
+    *     key sits wholly inside one task — the window's distribution,
+    *     acceptable because every light key is below the threshold by
+    *     definition — with NO driver table at all.
+    *
+    * Costs one aggregate job, plus two broadcast splits when heavy
+    * keys exist. Both legs share `step`/`emit`, so semantics are
+    * identical; ops whose orderCols do not totally order rows must be
+    * tie-order invariant (see [[scanTwoPass]]).
+    *
+    * NOTE: the count and pass 1 run EAGERLY at operator-call time —
+    * building the result frame executes Spark jobs, unlike a
+    * declarative plan — and the input's lineage must be DETERMINISTIC
+    * between those jobs and the output's actions (no `rand()`
+    * upstream, no source overwritten mid-flight; `localCheckpoint()`
+    * the input first if in doubt). */
   private[graft] def scanHybrid[S, M](df0: DataFrame, keyCol: String,
       orderCols: Seq[Column], outField: StructField,
-      heavyRowThreshold: Option[Long],
       precomputedHeavy: Option[Seq[Any]] = None)(
       summary: (M, Row) => M, summary0: => M,
       init: S, carry: (S, M) => S,
-      step: (S, Row) => S, emit: S => Any): DataFrame =
-      heavyRowThreshold match {
-    case None =>
-      scanTwoPass(df0, keyCol, orderCols, outField)(
-        summary, summary0, init, carry, step, emit)
-    case Some(threshold) =>
-    require(threshold >= 1,
-      s"heavyRowThreshold must be >= 1, got $threshold")
+      step: (S, Row) => S, emit: S => Any): DataFrame = {
     val df = ensureDeterministicLineage(df0)
-    val spark = df.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val nPart = df.sparkSession.conf
+      .get("spark.sql.shuffle.partitions", "32").toInt
     validateKeyType(keyCol, df.schema(keyCol).dataType)
     val sortExprs = col(keyCol) +: orderCols
     def lightScan(light: DataFrame): DataFrame = {
@@ -565,30 +569,16 @@ object DistRank {
       foldSorted(clustered, keyIdx, outField)(init, step, emit,
         (_, _) => init)
     }
-    val heavyVals: Array[Any] = precomputedHeavy match {
-      case Some(ks) => ks.toArray
-      case None => heavyKeyValues(df, keyCol, threshold)
-    }
-    if (heavyVals.isEmpty) lightScan(df)
+    def twoPass(heavy: DataFrame): DataFrame =
+      scanTwoPass(heavy, keyCol, orderCols, outField, nPart)(
+        summary, summary0, init, carry, step, emit)
+    val hk = precomputedHeavy.fold(heavyKeys(df, keyCol))(ks =>
+      HeavyKeys(ks.toArray, all = false))
+    if (hk.all) twoPass(df)
+    else if (hk.values.isEmpty) lightScan(df)
     else {
-      val heavyDf = spark.createDataFrame(
-        java.util.Arrays.asList(heavyVals.map(v => Row(v)): _*),
-        StructType(Seq(df.schema(keyCol).copy(name = "__hk"))))
-      // NULL-SAFE split: a heavy NULL key (or a struct key with a null
-      // field) must route HEAVY — a plain equi-join condition never
-      // matches null, which would silently send the hottest key of all
-      // (the null bucket) through the light path's one-task fold
-      val cond = df(keyCol) <=> heavyDf("__hk")
-      // re-assert the caller's column order after the splits: the fold
-      // closures read fields BY INDEX of the pre-split frame
-      val cols = df.columns.map(col).toSeq
-      val light = df.join(broadcast(heavyDf), cond, "left_anti")
-        .select(cols: _*)
-      val heavy = df.join(broadcast(heavyDf), cond, "left_semi")
-        .select(cols: _*)
-      lightScan(light).unionByName(
-        scanTwoPass(heavy, keyCol, orderCols, outField)(
-          summary, summary0, init, carry, step, emit))
+      val (light, heavy) = splitHeavyLight(df, keyCol, hk.values.toSeq)
+      lightScan(light).unionByName(twoPass(heavy))
     }
   }
 }

@@ -17,6 +17,15 @@ object TestSpark {
     s
   }
 
+  /** Runs `body` with DistRank's heavy-key threshold
+    * (`spark.graft.skew.heavyKeyRows`) set to `rows`, then restores the
+    * default: 1 forces every key down the two-pass leg, a huge value
+    * every key down the light hash fold. */
+  def withHeavyKeyRows[T](rows: Long)(body: => T): T = {
+    spark.conf.set("spark.graft.skew.heavyKeyRows", rows.toString)
+    try body finally spark.conf.unset("spark.graft.skew.heavyKeyRows")
+  }
+
   /** Java-serialized size of `o`: what shipping it inside a task costs. */
   def serializedBytes(o: AnyRef): Int = {
     val out = new java.io.ByteArrayOutputStream()

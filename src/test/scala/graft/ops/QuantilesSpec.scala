@@ -88,9 +88,9 @@ class QuantilesSpec extends AnyFunSuite {
     val df = spark.range(n).selectExpr("'one' as k",
       "cast((id * 7919) % 999983 as double) as v",
       "1L + id % 7 as w", "id")
-    val got = Quantiles.weightedPercentiles(df, "k", "v", "w",
-      Seq(50, 99), tieBreak = Seq("id"),
-      heavyRowThreshold = Some(1000L)).collect().head
+    val got = TestSpark.withHeavyKeyRows(1000L)(
+      Quantiles.weightedPercentiles(df, "k", "v", "w",
+        Seq(50, 99), tieBreak = Seq("id")).collect().head)
     val rows = df.select("v", "w").collect()
       .map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
     val tw = rows.map(_._2).sum
@@ -147,9 +147,9 @@ class QuantilesSpec extends AnyFunSuite {
     val n = 50000
     val df = spark.range(n).selectExpr("'one' as k",
       "cast((id * 7919) % 1000003 as double) as v", "id")
-    val got = Quantiles.ntileBuckets(df, "k", "v", 10,
-        tieBreak = Seq("id"), heavyRowThreshold = Some(1000L))
-      .groupBy("bucket").count().as[(Long, Long)].collect().toMap
+    val got = TestSpark.withHeavyKeyRows(1000L)(
+      Quantiles.ntileBuckets(df, "k", "v", 10, tieBreak = Seq("id"))
+        .groupBy("bucket").count().as[(Long, Long)].collect().toMap)
     assert(got == (1L to 10L).map(_ -> 5000L).toMap)
   }
 }

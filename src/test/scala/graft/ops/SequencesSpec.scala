@@ -39,10 +39,10 @@ class SequencesSpec extends AnyFunSuite {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val want = ev.withColumn("prev", lag("event_type", 1).over(w))
       .collect().map(r => (r.getLong(0), r.get(4))).toMap
-    def got(thresh: Long) = DistRank.perKeyLag(ev, "user_id",
-        Seq(col("ts"), col("event_id")), "event_type", "prev",
-        heavyRowThreshold = Some(thresh))
-      .collect().map(r => (r.getLong(0), r.get(4))).toMap
+    def got(thresh: Long) = TestSpark.withHeavyKeyRows(thresh)(
+      DistRank.perKeyLag(ev, "user_id",
+          Seq(col("ts"), col("event_id")), "event_type", "prev")
+        .collect().map(r => (r.getLong(0), r.get(4))).toMap)
     assert(got(Long.MaxValue) == want, "light path must equal the window")
     assert(got(1L) == want, "forced-heavy two-pass must equal the window")
   }
@@ -95,14 +95,32 @@ class SequencesSpec extends AnyFunSuite {
     val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
     val want = ev.withColumn("prev", lag("event_type", 1).over(w))
       .collect().map(r => (r.getLong(0), r.get(4))).toMap
-    val lagged = DistRank.perKeyLag(ev, "user_id",
-      Seq(col("ts"), col("event_id")), "event_type", "prev",
-      heavyRowThreshold = Some(1L))
+    val lagged = TestSpark.withHeavyKeyRows(1L)(DistRank.perKeyLag(ev,
+      "user_id", Seq(col("ts"), col("event_id")), "event_type", "prev"))
     val got = lagged.collect().map(r => (r.getLong(0), r.get(4))).toMap
     assert(got == want)
     val partSizes = lagged.rdd
       .mapPartitions(it => Iterator.single(it.size)).collect()
     assert(partSizes.count(_ > 0) > 1,
       s"mega-key must spread over several partitions: ${partSizes.toSeq}")
+  }
+
+  test("high-cardinality keys take the default dispatch past the " +
+      "two-pass run-table guard (transitionCounts and perKeyLag)") {
+    // 2,500 users with two events each, a then b: far more distinct
+    // keys per partition than the lowered run cap allows, so a
+    // driver-collected run table over every key would throw
+    spark.conf.set("spark.graft.distrank.maxRunsPerPartition", "50")
+    try {
+      val ev = spark.range(5000).selectExpr("id div 2 as user_id",
+        "id as event_id", "if(id % 2 = 0, 'a', 'b') as state")
+      val m = Sequences.transitionCounts(ev, "user_id", Seq(col("event_id")),
+        "state").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      assert(m.toSeq == Seq(("a", "b", 2500L)))
+      val lagged = DistRank.perKeyLag(ev, "user_id", Seq(col("event_id")),
+        "state", "prev")
+      assert(lagged.count() == 5000)
+    } finally spark.conf.unset("spark.graft.distrank.maxRunsPerPartition")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.TestSpark.withHeavyKeyRows
 
 /** DistRank: the skew-proof per-key row number must agree with the
   * window it replaces, on both balanced and adversarially skewed
@@ -30,8 +31,8 @@ class DistRankSpec extends AnyFunSuite {
       "and spreads across partitions") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), lit(0L).as("k"), length(col("text")).as("len"))
-    val ranked = DistRank.perKeyRowNumber(docs, "k",
-      Seq(desc("len"), col("doc_id")), "rank")
+    val ranked = withHeavyKeyRows(1L)(DistRank.perKeyRowNumber(docs, "k",
+      Seq(desc("len"), col("doc_id")), "rank"))
     // exactness: ranks are a permutation of 1..n matching the total order
     val rows = ranked.collect()
       .map(r => (r.getLong(3), r.getInt(2), r.getLong(0)))
@@ -119,8 +120,8 @@ class DistRankSpec extends AnyFunSuite {
     val ev = spark.range(n).selectExpr("id as event_id", "0L as user_id",
       // a gap every 1000 events: ids advance 1s, each 1000th jumps 1h
       "id * 1000000L + (id div 1000) * 3600000000L as tus")
-    val out = DistRank.perKeySessionIds(ev, "user_id", "tus",
-      30L * 60 * 1000 * 1000, "sid")
+    val out = withHeavyKeyRows(1L)(DistRank.perKeySessionIds(ev,
+      "user_id", "tus", 30L * 60 * 1000 * 1000, "sid"))
     val partSizes = out.rdd.mapPartitions(it => Iterator.single(it.size)).collect()
     assert(partSizes.count(_ > 0) > 1,
       s"mega-user must spread over several partitions: ${partSizes.toSeq}")
@@ -129,6 +130,20 @@ class DistRankSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(sess.keySet == (1L to 50L).toSet)
     assert(sess.values.forall(_ == 1000L))
+  }
+
+  test("an input with no more keys than partitions takes the two-pass " +
+      "leg at the default threshold") {
+    // two keys far below the 2 M-row threshold: the hash fold would put
+    // each in one task, so the count routes the whole input two-pass
+    val df = spark.range(20000).selectExpr("id % 2 as k", "id as v")
+    val out = DistRank.perKeyRowNumber(df, "k", Seq(col("v")), "r")
+    val partSizes = out.rdd.mapPartitions(it => Iterator.single(it.size))
+      .collect()
+    assert(partSizes.count(_ > 0) > 2,
+      s"two keys must spread over more than two partitions: ${partSizes.toSeq}")
+    val got = out.collect().map(r => (r.getLong(1), r.getLong(2)))
+    assert(got.forall { case (v, r) => r == v / 2 + 1 })
   }
 
   test("float/double/binary keys are rejected (NaN / reference " +
@@ -167,18 +182,16 @@ class DistRankSpec extends AnyFunSuite {
     val gap = 30L * 60 * 1000 * 1000
     def m(df: org.apache.spark.sql.DataFrame) = df.select("k", "tus", "sid")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val pure = m(DistRank.perKeySessionIds(ev, "k", "tus", gap, "sid",
-      extraOrder = Seq(col("v"))))
-    val hybrid = m(DistRank.perKeySessionIds(ev, "k", "tus", gap, "sid",
-      extraOrder = Seq(col("v")), heavyRowThreshold = Some(1000L)))
+    val pure = withHeavyKeyRows(1L)(m(DistRank.perKeySessionIds(ev, "k",
+      "tus", gap, "sid", extraOrder = Seq(col("v")))))
+    val hybrid = withHeavyKeyRows(1000L)(m(DistRank.perKeySessionIds(ev,
+      "k", "tus", gap, "sid", extraOrder = Seq(col("v")))))
     assert(hybrid.size == pure.size && hybrid == pure)
-    val lastPure = DistRank.perKeyRunningLast(ev, "k",
-        Seq(col("tus"), col("v")), "v", "lv")
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.get(3)).toMap
-    val lastHyb = DistRank.perKeyRunningLast(ev, "k",
-        Seq(col("tus"), col("v")), "v", "lv",
-        heavyRowThreshold = Some(1000L))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.get(3)).toMap
+    def last(thr: Long) = withHeavyKeyRows(thr)(DistRank.perKeyRunningLast(
+        ev, "k", Seq(col("tus"), col("v")), "v", "lv")
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.get(3)).toMap)
+    val lastPure = last(1L)
+    val lastHyb = last(1000L)
     assert(lastHyb.size == lastPure.size && lastHyb == lastPure)
   }
 
@@ -194,10 +207,11 @@ class DistRankSpec extends AnyFunSuite {
     val want = ev.withColumn("pm", max("v").over(w))
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (if (r.isNullAt(3)) null else r.getLong(3))).toMap
-    def got(thr: Option[Long]) = DistRank.perKeyRunningMaxExclusive(
-        ev, "k", Seq(col("o")), "v", "pm", heavyRowThreshold = thr)
+    def scan() = DistRank.perKeyRunningMaxExclusive(
+        ev, "k", Seq(col("o")), "v", "pm")
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (if (r.isNullAt(3)) null else r.getLong(3))).toMap
+    def got(thr: Option[Long]) = thr.fold(scan())(t => withHeavyKeyRows(t)(scan()))
     val hybrid = got(Some(1000L))
     assert(hybrid.size == want.size && hybrid == want)
     assert(got(None) == want, "default dispatch agrees too")
@@ -211,8 +225,8 @@ class DistRankSpec extends AnyFunSuite {
       // test); the hybrid's light path has no driver table and works
       val ev = spark.range(100000).selectExpr("id as k",
         "id * 1000000L as tus")
-      val out = DistRank.perKeySessionIds(ev, "k", "tus", 1000L, "sid",
-        heavyRowThreshold = Some(1000L))
+      val out = withHeavyKeyRows(1000L)(
+        DistRank.perKeySessionIds(ev, "k", "tus", 1000L, "sid"))
       assert(out.count() == 100000)
       assert(out.filter(col("sid") =!= 1L).count() == 0,
         "each single-event key is exactly one session")
@@ -227,11 +241,11 @@ class DistRankSpec extends AnyFunSuite {
       "if(id % 10 = 0, id % 7 + 1, null) as k",
       "id * 1000000L as tus", "id as v")
       .selectExpr("cast(k as long) as k", "tus", "v")
-    val out = DistRank.perKeySessionIds(ev, "k", "tus", 500L * 1000000L,
-      "sid", extraOrder = Seq(col("v")), heavyRowThreshold = Some(100L))
+    def sessions() = DistRank.perKeySessionIds(ev, "k", "tus",
+      500L * 1000000L, "sid", extraOrder = Seq(col("v")))
+    val out = withHeavyKeyRows(100L)(sessions())
     // correctness: agrees with the pure two-pass on the same data
-    val pure = DistRank.perKeySessionIds(ev, "k", "tus", 500L * 1000000L,
-      "sid", extraOrder = Seq(col("v")))
+    val pure = withHeavyKeyRows(1L)(sessions())
     def m(df: org.apache.spark.sql.DataFrame) = df.select("tus", "sid")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(m(out) == m(pure),
@@ -251,8 +265,8 @@ class DistRankSpec extends AnyFunSuite {
       val ev = spark.range(1000).selectExpr("id % 20 as k",
         "id * 1000000L as tus")
       val e = intercept[IllegalStateException] {
-        DistRank.perKeySessionIds(ev, "k", "tus", 1000L, "sid",
-          heavyRowThreshold = Some(10L))
+        withHeavyKeyRows(10L)(
+          DistRank.perKeySessionIds(ev, "k", "tus", 1000L, "sid"))
       }
       assert(e.getMessage.contains("heavy-row threshold"))
     } finally spark.conf.unset("spark.graft.skew.maxHeavyKeys")
@@ -269,8 +283,8 @@ class DistRankSpec extends AnyFunSuite {
     assert(e.getMessage.contains("nondeterministic"))
     // hybrid path guards too (its count job re-executes the lineage)
     val e2 = intercept[IllegalArgumentException] {
-      DistRank.perKeyRowNumber(df, "k", Seq(col("v")), "r",
-        heavyRowThreshold = Some(10L))
+      withHeavyKeyRows(10L)(
+        DistRank.perKeyRowNumber(df, "k", Seq(col("v")), "r"))
     }
     assert(e2.getMessage.contains("nondeterministic"))
     val ranked = DistRank.perKeyRowNumber(df.localCheckpoint(), "k",
@@ -289,20 +303,22 @@ class DistRankSpec extends AnyFunSuite {
       "CASE WHEN id < 20 THEN 1L ELSE id END as k", "id as v")
     val df2 = spark.range(40).selectExpr(
       "CASE WHEN id < 20 THEN 2L ELSE id END as k", "id as v")
-    val h1 = DistRank.heavyKeyValues(df1, "k", 10L)
-    val h1b = DistRank.heavyKeyValues(df1, "k", 10L)
+    def heavy(df: org.apache.spark.sql.DataFrame, t: Long) =
+      withHeavyKeyRows(t)(DistRank.heavyKeyValues(df, "k"))
+    val h1 = heavy(df1, 10L)
+    val h1b = heavy(df1, 10L)
     assert(h1.toSeq == Seq(1L))
     assert(h1 eq h1b, "identical plan+threshold must hit the cache " +
       "(same array instance)")
     // a DIFFERENT threshold on the same plan is a different entry
-    val h1hi = DistRank.heavyKeyValues(df1, "k", 25L)
+    val h1hi = heavy(df1, 25L)
     assert(h1hi.isEmpty && !(h1hi eq h1))
     // a different input never sees df1's cached set
-    val h2 = DistRank.heavyKeyValues(df2, "k", 10L)
+    val h2 = heavy(df2, 10L)
     assert(h2.toSeq == Seq(2L))
     // clearing drops entries: a recount returns a fresh instance
     DistRank.clearKeyCountCache()
-    val h1d = DistRank.heavyKeyValues(df1, "k", 10L)
+    val h1d = heavy(df1, 10L)
     assert(h1d.toSeq == Seq(1L) && !(h1d eq h1))
   }
 
@@ -312,7 +328,8 @@ class DistRankSpec extends AnyFunSuite {
     val base = spark.range(40).selectExpr(
       "CASE WHEN id < 20 THEN 3L ELSE id END as k", "id as v")
     // 65 distinct (plan, threshold) entries: one plan, thresholds 1..65
-    val got = (1L to 65L).map(t => t -> DistRank.heavyKeyValues(base, "k", t))
+    def heavy(t: Long) = withHeavyKeyRows(t)(DistRank.heavyKeyValues(base, "k"))
+    val got = (1L to 65L).map(t => t -> heavy(t))
     assert(DistRank.keyCountCacheSize <= 64,
       s"cache grew to ${DistRank.keyCountCacheSize} entries")
     got.foreach { case (t, h) =>
@@ -321,7 +338,7 @@ class DistRankSpec extends AnyFunSuite {
       assert(h.map(_.asInstanceOf[Long]).toSet == want, s"threshold $t")
     }
     // a post-bound lookup recounts correctly too
-    assert(DistRank.heavyKeyValues(base, "k", 20L).toSeq == Seq(3L))
+    assert(heavy(20L).toSeq == Seq(3L))
     DistRank.clearKeyCountCache()
   }
 
@@ -333,13 +350,16 @@ class DistRankSpec extends AnyFunSuite {
     // count cache cleared and reuse ON, the build must leave it empty
     DistRank.clearKeyCountCache()
     val ranked = DistRank.perKeyRowNumber(df, "k", Seq(col("v")), "r",
-      heavyRowThreshold = Some(10L), precomputedHeavy = Some(Seq(7L)))
+      precomputedHeavy = Some(Seq(7L)))
     assert(DistRank.keyCountCacheSize == 0,
       "precomputed heavy keys must skip the count job (cache untouched)")
     val got = ranked.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(DistRank.keyCountCacheSize == 0)
-    val want = DistRank.perKeyRowNumber(df, "k", Seq(col("v")), "r")
+    // the two-pass reference: every key precomputed heavy
+    val allKeys = 7L +: (60L until 100L)
+    val want = DistRank.perKeyRowNumber(df, "k", Seq(col("v")), "r",
+        precomputedHeavy = Some(allKeys))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == want)
     assert(DistRank.keyCountCacheSize == 0,
@@ -351,8 +371,11 @@ class DistRankSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.distrank.maxRunsPerPartition", "50")
     try {
       val df = spark.range(100000).selectExpr("id as k", "id as v")
+      // threshold 1: every key is heavy, so all of them reach the
+      // two-pass leg's run table
       val e = intercept[org.apache.spark.SparkException] {
-        DistRank.perKeyRowNumber(df, "k", Seq(col("v")), "r").count()
+        withHeavyKeyRows(1L)(
+          DistRank.perKeyRowNumber(df, "k", Seq(col("v")), "r").count())
       }
       val msg = Option(e.getCause).fold(e.getMessage)(_.getMessage)
       assert(msg.contains("key cardinality is too high"),
